@@ -20,14 +20,17 @@ Clause rewrites:
 
 - PREWHERE → conjunct of WHERE (scan pushdown is Catalyst's job).
 - SAMPLE k [OFFSET m] → deterministic hash-range predicate over the
-  table's registered sampling key (mirrors operators.clauses.
-  deterministic_sample; MergeTreeDataSelectExecutor.cpp:253-270).
-- FINAL → ReplacingMergeTree latest-version dedup subquery.
+  table's registered sampling key: a Knuth multiplicative hash into
+  [0, 2^32), cut at k (MergeTreeDataSelectExecutor.cpp:253-270).
+- FINAL → ReplacingMergeTree latest-version row per primary key, and
+  ANY JOIN → one right row per join key: both through
+  ``sources.mergetree.winner_per_key_sql``, the row_number window that
+  OPTIMIZE and the Join engine share.
 - ARRAY JOIN / LEFT ARRAY JOIN / arrayJoin() → LATERAL VIEW
   posexplode[_outer]; extra lockstep arrays via element_at at the
   shared position (IColumn::replicate semantics).
-- ANY JOIN → right side deduped to one row per key; GLOBAL → BROADCAST
-  hint (ExpressionAnalyzer.cpp:433-574 external-table shipping).
+- GLOBAL JOIN → BROADCAST hint (ExpressionAnalyzer.cpp:433-574
+  external-table shipping).
 - GROUP BY ... WITH TOTALS → GROUPING SETS ((keys), ()).  With HAVING,
   the default totals_mode = AFTER_HAVING_EXCLUSIVE (Settings.h:92):
   input rows are first semi-filtered to the groups passing HAVING, so
@@ -52,6 +55,7 @@ from .functions_map import (
     foreach_combinator,
     if_combinator,
 )
+from ..sources.mergetree import winner_per_key_sql
 from .lexer import Token, tokenize
 
 _JOIN_KINDS = {"INNER", "LEFT", "RIGHT", "FULL", "CROSS", "OUTER"}
@@ -2679,10 +2683,11 @@ def _final_subquery(name: str, ctx: Ctx) -> str:
             f"sum({meta.sign_col}) OVER (PARTITION BY {pk}) AS {rn}_s FROM {name}) "
             f"WHERE {rn} = 1 AND {rn}_s > 0)"
         )
-    order = f"{meta.version_col} DESC" if meta.version_col else "1"
-    return (
-        f"(SELECT * EXCEPT ({rn}) FROM (SELECT *, row_number() OVER "
-        f"(PARTITION BY {pk} ORDER BY {order}) AS {rn} FROM {name}) WHERE {rn} = 1)"
+    return winner_per_key_sql(
+        name,
+        list(meta.primary_key),
+        ctx.schema_of_sql(name) if ctx.schema_of_sql is not None else None,
+        [meta.version_col] if meta.version_col else [],
     )
 
 
@@ -2928,6 +2933,55 @@ def _join_default_of(simple: str) -> str | None:
     return _JOIN_DEFAULTS.get(simple)
 
 
+def _any_on_keys(
+    on: list[Token], quals: set, rschema: list | None
+) -> list[str]:
+    """Right-side key columns of ``ANY JOIN ... ON``: the right operand
+    of each top-level ``l = r`` conjunct, in either order.  A right
+    column is qualified by the right table's name or alias, or is an
+    unqualified name of the right side's schema."""
+    rcols = {c for c, _t in rschema or []}
+
+    def unwrap(toks: list[Token]) -> list[Token]:
+        while toks and toks[0].text == "(" and _match_paren(toks, 0) == len(toks) - 1:
+            toks = toks[1:-1]
+        return toks
+
+    conjs: list[list[Token]] = [[]]
+    depth = 0
+    for t in unwrap(on):
+        depth += (t.text in ("(", "[")) - (t.text in (")", "]"))
+        if depth == 0 and t.is_kw("AND"):
+            conjs.append([])
+        else:
+            conjs[-1].append(t)
+    keys: list[str] = []
+    for conj in map(unwrap, conjs):
+        eq = [k for k, t in enumerate(conj) if t.text in ("=", "==")]
+        if len(eq) != 1:
+            continue
+        for side in (conj[: eq[0]], conj[eq[0] + 1 :]):
+            # a column reference: name [. name ...]
+            parts, dots = side[::2], side[1::2]
+            if (
+                len(side) % 2 == 0
+                or any(t.kind not in ("ident", "qident") for t in parts)
+                or any(t.text != "." for t in dots)
+            ):
+                continue
+            names = [t.text.strip("`") for t in parts]
+            col, qual = names[-1], ".".join(names[:-1])
+            if (qual in quals) if qual else (col in rcols):
+                keys.append(f"`{col}`")
+                break
+    if not keys:
+        raise ValueError(
+            "ANY JOIN ... ON needs an equality between a left and a right "
+            "column (e.g. ON l.k = r.k)"
+        )
+    return keys
+
+
 def _render_join(
     j: dict,
     ctx: Ctx,
@@ -2972,9 +3026,9 @@ def _render_join(
             ctx.passthrough_totals = True
             ctx.join_right_totals = True
         right_sql = f"(\n{inner}\n)"
-        right_name = None
+        right_name = written_right = None
     else:
-        right_name = "".join(t.text for t in right_toks)
+        right_name = written_right = "".join(t.text for t in right_toks)
         # created tables (incl. keyword-ish names like `join`) resolve
         # through the registered view map with USE'd-db fallback
         _rv = _resolve_view_name(right_name, ctx)
@@ -2987,19 +3041,19 @@ def _render_join(
         [t.text for t in j["using"] if t.text != ","] if j["using"] else None
     )
 
-    if any_strict and using_cols:
-        # ANY = at most one right match (Join.h:352-378 MapsAny); dedup the
-        # right side per key, deterministically via all-columns tiebreak.
-        cols = None
-        if right_name and ctx.columns_of is not None:
-            cols = ctx.columns_of(right_name)
-        order = ", ".join(cols) if cols else ", ".join(using_cols)
-        rn = ctx.gensym("rn")
-        right_sql = (
-            f"(SELECT * EXCEPT ({rn}) FROM (SELECT *, row_number() OVER "
-            f"(PARTITION BY {', '.join(using_cols)} ORDER BY {order}) AS {rn} "
-            f"FROM {right_sql} ) WHERE {rn} = 1)"
+    if any_strict and (using_cols or j["on"] is not None):
+        # ANY = at most one right match (Join.h:352-378 MapsAny): the
+        # right side keeps one row per join key, the smallest over all
+        # its columns (deterministic; the reference keeps the first
+        # inserted).  ON keys are the right operands of its equalities.
+        rschema = (
+            ctx.schema_of_sql(right_sql) if ctx.schema_of_sql is not None
+            else None
         )
+        rkeys = using_cols or _any_on_keys(
+            j["on"], {j["alias"], written_right, right_name}, rschema
+        )
+        right_sql = winner_per_key_sql(right_sql, rkeys, rschema, pick="min")
 
     right_totals_pair = False
     if right_totals and using_cols and ctx.schema_of_sql is not None:
@@ -3103,8 +3157,9 @@ def _sample_predicate(
     (``width`` = its type's value count) the reference cuts the RAW
     key range proportionally (MergeTreeDataSelectExecutor relative
     sampling: key in [floor(off*W), floor((off+frac)*W))); otherwise
-    the Knuth-hash emulation (operators.clauses.deterministic_sample)
-    applies."""
+    the Knuth-hash emulation applies: pmod(key * 2654435761, 2^32) in
+    [off * 2^32, (off + frac) * 2^32) — pure arithmetic, so it is
+    reproducible across engines and pushes down as a scan filter."""
     txt = [t.text for t in toks]
     off = 0.0
     if "OFFSET" in [t.text.upper() for t in toks]:

@@ -106,10 +106,6 @@ class RangeDictionary:
         return joined.withColumn(out, val).drop("__dk", "__dlo", "__dhi", "__dv")
 
 
-class RangeDictionaryError(ValueError):
-    pass
-
-
 class HierarchyDictionary:
     """hierarchical layout (id, parent_id): dictGetHierarchy, dictIsIn,
     and the regionTo* family (RegionsHierarchy in the reference's

@@ -1,26 +1,10 @@
 from .asof import asof_join
-from .clauses import (
-    any_join,
-    array_join,
-    deterministic_sample,
-    final_replacing,
-    global_in,
-    limit_by,
-    with_totals,
-)
 from .exact_sum import exact_sum_scaled
 from .skew import salted_collect_set, salted_join
 
 __all__ = [
-    "any_join",
-    "array_join",
     "asof_join",
-    "deterministic_sample",
     "exact_sum_scaled",
-    "final_replacing",
-    "global_in",
-    "limit_by",
     "salted_collect_set",
     "salted_join",
-    "with_totals",
 ]

@@ -50,11 +50,6 @@ def train_val_test(
 
 # ------------------------------------------------- contamination check
 
-def ngrams(text, n: int = 8) -> Column:
-    """Token n-grams (space-joined) of the whitespace tokenization."""
-    return _ngrams_of_tokens(TXT.tokens(text), n)
-
-
 def _ngrams_of_tokens(tk: Column, n: int) -> Column:
     # let-bind the token array through the single-element-array trick
     # so it is computed once, not once per n-gram

@@ -2,7 +2,9 @@
 
 Mirrors the reference's SELECT pipeline (Interpreters/InterpreterSelectQuery.cpp:413
 executeSingleQuery stitching: WHERE -> agg -> HAVING -> ORDER BY -> LIMIT BY
--> LIMIT) re-expressed as declarative DataFrame plans.
+-> LIMIT) re-expressed as declarative DataFrame plans.  The CH-only
+clauses (ANY JOIN, GLOBAL IN, WITH TOTALS, SAMPLE, ARRAY JOIN, FINAL)
+run as CH-SQL through the dialect translator, their one lowering.
 """
 
 from __future__ import annotations
@@ -10,18 +12,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators import (
-    any_join,
-    array_join,
-    deterministic_sample,
-    final_replacing,
-    global_in,
-    limit_by,
-    with_totals,
-)
+from ..dialect import TableMeta
 from ..functions import aggregates as AGG
 from ..operators.exact_sum import exact_sum_scaled, scaled_long
 from ..sources.catalog import load_tables
+from .dialect_q import _engine
 from .registry import plan_cache as _plan_cache
 from .registry import query
 
@@ -399,17 +394,17 @@ def join_star_broadcast(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 @_plan_cache
 def join_any_left(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust, orders = _t(spark, sf_dir, "customer", "orders")
-    right = orders.select("o_custkey", "o_orderkey", "o_totalprice")
-    joined = any_join(
-        cust.select("c_custkey", "c_name"),
-        right.withColumnRenamed("o_custkey", "c_custkey"),
-        on=["c_custkey"],
-        how="left",
-        tie_break=["o_orderkey"],
-    )
-    return joined.select("c_custkey", "c_name", "o_orderkey", "o_totalprice").orderBy(
-        "c_custkey"
+    return _engine(spark, sf_dir).sql(
+        """
+        SELECT c_custkey, c_name, o_orderkey, o_totalprice
+        FROM customer
+        ANY LEFT JOIN (
+            SELECT o_custkey AS c_custkey, o_orderkey, o_totalprice
+            FROM orders
+        ) USING (c_custkey)
+        ORDER BY c_custkey
+        SETTINGS join_use_nulls = 1
+        """
     )
 
 
@@ -425,10 +420,10 @@ def join_any_left(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 @_plan_cache
 def semi_join_in(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust, orders = _t(spark, sf_dir, "customer", "orders")
-    sub = cust.filter(F.col("c_mktsegment") == "BUILDING").select("c_custkey")
-    filtered = global_in(orders, F.col("o_custkey"), sub)
-    return filtered.agg(F.count(F.lit(1)).alias("cnt"))
+    return _engine(spark, sf_dir).sql(
+        "SELECT count() AS cnt FROM orders WHERE o_custkey GLOBAL IN "
+        "(SELECT c_custkey FROM customer WHERE c_mktsegment = 'BUILDING')"
+    )
 
 
 @query(
@@ -442,11 +437,13 @@ def semi_join_in(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 @_plan_cache
 def anti_join_not_in(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust, orders = _t(spark, sf_dir, "customer", "orders")
-    filtered = global_in(
-        cust, F.col("c_custkey"), orders.select("o_custkey"), negate=True
+    # countIf, not WHERE: a keyless aggregate over an empty filtered
+    # input returns no row in the reference, and at sf0.01 every
+    # customer has an order
+    return _engine(spark, sf_dir).sql(
+        "SELECT countIf(c_custkey GLOBAL NOT IN "
+        "(SELECT o_custkey FROM orders)) AS cnt FROM customer"
     )
-    return filtered.agg(F.count(F.lit(1)).alias("cnt"))
 
 
 @query(
@@ -566,8 +563,8 @@ def distinct_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 @_plan_cache
 def limit_by_key(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Same plan limit_by() builds, keeping the rank column so the
-    # oracle's rn matches (the operator itself drops it).
+    # The LIMIT 2 BY plan (a row_number window), keeping the rank
+    # column so the oracle's rn matches.
     from pyspark.sql import Window
 
     (orders,) = _t(spark, sf_dir, "orders")
@@ -599,12 +596,11 @@ def limit_by_key(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 @_plan_cache
 def with_totals_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (orders,) = _t(spark, sf_dir, "orders")
-    aggs = [
-        F.count(F.lit(1)).alias("cnt"),
-        exact_sum_scaled(F.col("o_totalprice")).cast("double").alias("sum_price"),
-    ]
-    return with_totals(orders, keys=["o_orderstatus"], aggs=aggs)
+    return _engine(spark, sf_dir).sql(
+        "SELECT o_orderstatus, count() AS cnt, "
+        "toFloat64(sum(CAST(o_totalprice AS DECIMAL(18, 2)))) AS sum_price "
+        "FROM orders GROUP BY o_orderstatus WITH TOTALS"
+    )
 
 
 @query(
@@ -630,16 +626,10 @@ def with_totals_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 @_plan_cache
 def totals_after_having(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (orders,) = _t(spark, sf_dir, "orders")
-    aggs = [
-        F.count(F.lit(1)).alias("cnt"),
-        exact_sum_scaled(F.col("o_totalprice")).cast("double").alias("sum_price"),
-    ]
-    return with_totals(
-        orders,
-        keys=["o_orderstatus"],
-        aggs=aggs,
-        having=F.col("cnt") > 1000,
+    return _engine(spark, sf_dir).sql(
+        "SELECT o_orderstatus, count() AS cnt, "
+        "toFloat64(sum(CAST(o_totalprice AS DECIMAL(18, 2)))) AS sum_price "
+        "FROM orders GROUP BY o_orderstatus WITH TOTALS HAVING cnt > 1000"
     )
 
 
@@ -660,17 +650,11 @@ def totals_after_having(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 @_plan_cache
 def totals_before_having(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (orders,) = _t(spark, sf_dir, "orders")
-    aggs = [
-        F.count(F.lit(1)).alias("cnt"),
-        exact_sum_scaled(F.col("o_totalprice")).cast("double").alias("sum_price"),
-    ]
-    return with_totals(
-        orders,
-        keys=["o_orderstatus"],
-        aggs=aggs,
-        having=F.col("cnt") > 1000,
-        totals_mode="before_having",
+    return _engine(spark, sf_dir).sql(
+        "SELECT o_orderstatus, count() AS cnt, "
+        "toFloat64(sum(CAST(o_totalprice AS DECIMAL(18, 2)))) AS sum_price "
+        "FROM orders GROUP BY o_orderstatus WITH TOTALS HAVING cnt > 1000 "
+        "SETTINGS totals_mode = 'before_having'"
     )
 
 
@@ -688,11 +672,12 @@ def totals_before_having(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 @_plan_cache
 def sample_deterministic(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (li,) = _t(spark, sf_dir, "lineitem")
-    sampled = deterministic_sample(li, F.col("l_orderkey"), 1, 10)
-    return sampled.agg(
-        F.count(F.lit(1)).alias("cnt"),
-        exact_sum_scaled(F.col("l_quantity")).cast("double").alias("sum_qty"),
+    eng = _engine(spark, sf_dir)
+    eng.set_meta("lineitem", TableMeta(sample_key="l_orderkey"))
+    return eng.sql(
+        "SELECT count() AS cnt, "
+        "toFloat64(sum(CAST(l_quantity AS DECIMAL(18, 2)))) AS sum_qty "
+        "FROM lineitem SAMPLE 1/10"
     )
 
 
@@ -714,14 +699,10 @@ def sample_deterministic(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 @_plan_cache
 def array_join_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (docs,) = _t(spark, sf_dir, "documents")
-    tokens = array_join(docs, {"token": F.split(F.col("text"), " ")})
-    return (
-        tokens.filter(F.col("token") != "")
-        .groupBy("token")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .orderBy(F.col("cnt").desc(), "token")
-        .limit(20)
+    return _engine(spark, sf_dir).sql(
+        "SELECT token, count() AS cnt FROM documents "
+        "ARRAY JOIN splitByChar(' ', text) AS token WHERE token != '' "
+        "GROUP BY token ORDER BY cnt DESC, token LIMIT 20"
     )
 
 
@@ -740,13 +721,17 @@ def array_join_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 @_plan_cache
 def final_replacing_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (ev,) = _t(spark, sf_dir, "events")
-    latest = final_replacing(
-        ev.select("user_id", "event_type", "value", "ts", "event_id"),
-        pk=["user_id"],
-        version=["ts", "event_id"],
+    # (ts, event_id) is a two-column version, which a
+    # ReplacingMergeTree cannot declare: LIMIT 1 BY spells the FINAL
+    return _engine(spark, sf_dir).sql(
+        """
+        SELECT user_id, event_type, value FROM (
+            SELECT user_id, event_type, value, ts, event_id FROM events
+            ORDER BY ts DESC, event_id DESC
+            LIMIT 1 BY user_id
+        ) ORDER BY user_id
+        """
     )
-    return latest.select("user_id", "event_type", "value").orderBy("user_id")
 
 
 @query(

@@ -11,7 +11,6 @@ from ..operators.running import running_accumulate, running_difference
 from ..operators.sequence_match import sequence_count, sequence_match
 from ..sources.mergetree import (
     compact_collapsing,
-    compact_replacing,
     compact_summing,
     graphite_rollup,
 )

@@ -1230,9 +1230,12 @@ def _stored_plan_cache(fn):
             if cached is not None:
                 return cached
         out = fn(spark, sf_dir)  # ensures/rebuilds the store
+        sig = _store_sig()
+        if sig is None:
+            return out  # no published store: nothing to key a hit on
         if len(wrap._plans) > 64:
             wrap._plans.clear()
-        wrap._plans[base + (_store_sig(),)] = out
+        wrap._plans[base + (sig,)] = out
         return out
 
     wrap._plans = {}

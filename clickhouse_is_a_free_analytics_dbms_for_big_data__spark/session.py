@@ -85,15 +85,6 @@ def get_session(
         # The reference treats missing values as type defaults, not NULL;
         # ANSI off keeps casts forgiving (toUInt32OrZero-style semantics).
         .config("spark.sql.ansi.enabled", "false")
-        # Scan-parallelism FLOOR sized to the core count (guide §6):
-        # without it the 128 MB split target packs a whole multi-file
-        # test table into 1-2 scan tasks and every query serializes on
-        # one core.  A floor (unlike a smaller maxPartitionBytes) is
-        # scale-adaptive by construction: at 100 TB the scan has
-        # thousands of splits and the floor is a no-op; parquet can
-        # still never split below row-group granularity, so extra
-        # byte-range slices of a single-row-group file cost nothing.
-        .config("spark.sql.files.minPartitionNum", str(cpus))
         # Test corpus writes events.ts as TIMESTAMP(NANOS); read as long
         # nanos and convert in the catalog (Spark has no nanos timestamps).
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")

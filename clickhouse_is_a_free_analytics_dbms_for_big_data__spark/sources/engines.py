@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .formats import read_format
+from .mergetree import winner_per_key
 
 __all__ = [
     "MemoryTable",
@@ -104,16 +105,7 @@ class JoinTable:
     def __init__(self, df: DataFrame, key_cols: Sequence[str], strictness: str = "all"):
         self.key_cols = list(key_cols)
         if strictness == "any":
-            from ..operators.clauses import any_join  # noqa: F401  (semantics ref)
-            from pyspark.sql import Window
-
-            tie = [F.col(c) for c in df.columns if c not in self.key_cols]
-            w = Window.partitionBy(*self.key_cols).orderBy(*(tie or [F.lit(1)]))
-            df = (
-                df.withColumn("__rn", F.row_number().over(w))
-                .filter(F.col("__rn") == 1)
-                .drop("__rn")
-            )
+            df = winner_per_key(df, self.key_cols, pick="min")
         self._df = df.cache()
 
     def join(self, left: DataFrame, how: str = "left") -> DataFrame:

@@ -1239,12 +1239,6 @@ def _render_xml(
     return "".join(out)
 
 
-def _jsonable(v):
-    if isinstance(v, (list, dict, int, float, str, bool)) or v is None:
-        return v
-    return str(v)
-
-
 def _sql_literal(v) -> str:
     if v is None:
         return "NULL"

@@ -378,18 +378,92 @@ def read_mergetree(
 # --- merge-time semantics as compaction transforms -------------------------
 
 
+def winner_per_key_sql(
+    src: str,
+    keys: Sequence[str],
+    columns: Sequence[tuple[str, str]] | None,
+    order: Sequence[str] = (),
+    pick: str = "max",
+) -> str:
+    """One row per key, as a FROM-able SQL subquery over ``src`` — the
+    single lowering of every "keep one row per key" clause: a
+    ReplacingMergeTree FINAL read and merge keep the max-version row
+    (DataStreams/ReplacingSortedBlockInputStream.h:15), ANY JOIN and
+    the Join engine keep one right row per key (Interpreters/Join.h:
+    352-378, MapsAny).
+
+    ``keys`` are SQL key expressions, ``order`` column names,
+    ``columns`` the (name, simple type) schema of ``src`` (None when it
+    could not be analyzed), and ``pick`` is ``"max"`` or ``"min"``.
+    The winner is the first row of a ``row_number()`` window over the
+    ``order`` columns, then every remaining orderable column — DESC
+    NULLS LAST for ``"max"``, ASC NULLS FIRST for ``"min"`` — so ties
+    break the same way on every path.  Map columns cannot be ordered
+    and ``_part`` (the MergeTree virtual part name) is renamed by every
+    merge, so both stay out of the tie order: FINAL and OPTIMIZE then
+    pick the same row when versions tie.
+
+    A window, not ``max_by(struct(all), struct(tie))`` grouped by key:
+    the struct buffer forces a sort-based aggregate on both sides of
+    the shuffle, and an interleaved A/B (Spark 4.1, local[4] on a
+    4-core host, sf0.1) measured the window faster — FINAL over events
+    302 vs 438 ms, the customer ANY LEFT JOIN 446 vs 584 ms.
+    """
+    d = " DESC" if pick == "max" else ""
+    tie = [_quote(c) for c in order]
+    if columns is not None:
+        tie += [
+            _quote(c)
+            for c, t in columns
+            if c not in order
+            and c not in keys
+            and _quote(c) not in keys
+            and c != "_part"
+            and "map<" not in t
+        ]
+    rn = "__wpk_rn"
+    return (
+        f"(SELECT * EXCEPT ({rn}) FROM (SELECT *, row_number() OVER "
+        f"(PARTITION BY {', '.join(keys)} ORDER BY "
+        f"{', '.join(t + d for t in tie) or '1'}) AS {rn} FROM {src}) "
+        f"WHERE {rn} = 1)"
+    )
+
+
+def _quote(name: str) -> str:
+    return "`" + name.replace("`", "``") + "`"
+
+
+def winner_per_key(
+    df: DataFrame, keys: Sequence[str], order: Sequence[str] = (),
+    pick: str = "max",
+) -> DataFrame:
+    """``winner_per_key_sql`` over a DataFrame (via a scoped temp view;
+    the plan is resolved before the view is dropped)."""
+    import uuid
+
+    spark = df.sparkSession
+    view = f"__wpk_{uuid.uuid4().hex}"
+    df.createOrReplaceTempView(view)
+    try:
+        return spark.sql(winner_per_key_sql(
+            view,
+            [_quote(k) for k in keys],
+            [(f.name, f.dataType.simpleString()) for f in df.schema.fields],
+            order,
+            pick,
+        ))
+    finally:
+        spark.catalog.dropTempView(view)
+
+
 def compact_replacing(
     df: DataFrame, pk: Sequence[str], version: str | None = None
 ) -> DataFrame:
     """ReplacingMergeTree: keep the max-version row per PK
-    (DataStreams/ReplacingSortedBlockInputStream.h:15)."""
-    order = [F.col(version).desc()] if version else [F.lit(1)]
-    w = Window.partitionBy(*pk).orderBy(*order)
-    return (
-        df.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
+    (DataStreams/ReplacingSortedBlockInputStream.h:15) — the same
+    winner a FINAL read picks."""
+    return winner_per_key(df, pk, [version] if version else [])
 
 
 def compact_summing(
@@ -532,17 +606,6 @@ def compact_collapsing(
         grouped.filter(F.col("__net") != 0)
         .select(survivor.alias("__row"))
         .select("__row.*")
-    )
-
-
-def compact_aggregating(
-    df: DataFrame, pk: Sequence[str], state_aggs: dict[str, Column]
-) -> DataFrame:
-    """AggregatingMergeTree: merge partial-aggregate state columns per
-    PK (DataStreams/AggregatingSortedBlockInputStream.h:21).  States are
-    the typed columns produced by functions.state.*State aggregates."""
-    return df.groupBy(*pk).agg(
-        *[c.alias(name) for name, c in state_aggs.items()]
     )
 
 

@@ -143,13 +143,29 @@ def test_final_requires_meta():
         "SELECT * FROM t FINAL",
         table_meta={"t": TableMeta(primary_key=("id",), version_col="v")},
     )
-    assert "PARTITION BY id ORDER BY v DESC" in out
+    # the shared winner-per-key window, version first, DESC
+    assert "PARTITION BY id ORDER BY `v` DESC" in out
 
 
 def test_any_join_dedups_right():
     out = translate_sql("SELECT a FROM t ANY LEFT JOIN u USING (k)")
     assert "row_number() OVER (PARTITION BY k" in out
     assert "LEFT JOIN" in out
+
+
+def test_any_join_on_dedups_right():
+    """ANY with ON keeps one right row per key too: the keys are the
+    right operands of the ON equalities (it used to run as ALL)."""
+    out = translate_sql("SELECT a FROM t ANY LEFT JOIN u ON t.k = u.k")
+    assert "row_number() OVER (PARTITION BY `k` ORDER BY" in out
+    out = translate_sql("SELECT a FROM t ANY INNER JOIN u AS r ON r.k = t.j")
+    assert "row_number() OVER (PARTITION BY `k` ORDER BY" in out
+    out = translate_sql(
+        "SELECT a FROM t ANY LEFT JOIN u ON ((t.k = u.k) AND t.j = u.j)"
+    )
+    assert "row_number() OVER (PARTITION BY `k`, `j` ORDER BY" in out
+    with pytest.raises(ValueError, match="equality"):
+        translate_sql("SELECT a FROM t ANY LEFT JOIN u ON t.k < u.k")
 
 
 def test_global_join_broadcast_hint():
@@ -233,6 +249,37 @@ def test_exec_any_join(eng):
         "USING (n_regionkey) ORDER BY n_name"
     ).collect()
     assert len(rows) == 25 and all(r["r_name"] is not None for r in rows)
+
+
+def test_exec_any_join_on_keeps_one_right_row(eng, spark):
+    """Executed ANY ... ON: one match per left row, whichever side of
+    the equality the right column is on (ALL would return 3 rows)."""
+    spark.createDataFrame([(1,), (2,)], "k INT").createOrReplaceTempView("aj_l")
+    spark.createDataFrame(
+        [(1, "b"), (1, "a"), (3, "c")], "rk INT, s STRING"
+    ).createOrReplaceTempView("aj_r")
+    for on in ("l.k = r.rk", "r.rk = l.k", "k = rk"):
+        rows = eng.sql(
+            f"SELECT k, s FROM aj_l AS l ANY LEFT JOIN aj_r AS r ON {on} "
+            "ORDER BY k SETTINGS join_use_nulls = 1"
+        ).collect()
+        assert [tuple(r) for r in rows] == [(1, "a"), (2, None)], on
+    with pytest.raises(ValueError, match="equality"):
+        eng.sql("SELECT k FROM aj_l AS l ANY LEFT JOIN aj_r AS r ON l.k < r.rk")
+
+
+def test_exec_any_join_subquery_winner_is_all_columns_min(eng, spark):
+    """ANY over a subquery right side picks its winner by all its
+    columns (it used to order by the join key alone: arbitrary)."""
+    spark.createDataFrame(
+        [(1, "z", 2), (1, "a", 9), (1, "a", 3)], "k INT, s STRING, n INT"
+    ).createOrReplaceTempView("aj_sub")
+    for _ in range(3):
+        rows = eng.sql(
+            "SELECT k, s, n FROM (SELECT 1 AS k) ANY LEFT JOIN "
+            "(SELECT k, s, n FROM aj_sub) USING (k)"
+        ).collect()
+        assert [tuple(r) for r in rows] == [(1, "a", 3)]
 
 
 def test_exec_sample_deterministic(eng):

@@ -147,3 +147,24 @@ def test_plan_cache_eviction_keeps_live_session_entries(spark):
     ] is live
     assert all(k[0] != "deadapp" for k in q._plans)
     assert calls == ["/live", "/live2"]
+
+
+def test_stored_memo_skips_insert_without_store(spark, tmp_path):
+    """A *_stored build that leaves no published store (no
+    _HITS_STORE_META) must not be memoized under a None signature: the
+    next call re-runs the builder instead of accumulating None keys."""
+    from clickhouse_is_a_free_analytics_dbms_for_big_data__spark.queries import (
+        hits_q,
+    )
+
+    calls = []
+
+    @hits_q._stored_plan_cache
+    def q(s, sf_dir):
+        calls.append(sf_dir)
+        return s.range(1)
+
+    q(spark, str(tmp_path))
+    q(spark, str(tmp_path))
+    assert q._plans == {}
+    assert calls == [str(tmp_path)] * 2

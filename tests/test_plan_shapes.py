@@ -66,16 +66,21 @@ def test_prewhere_reaches_parquet_scan(spark):
 
 
 def test_final_replacing_is_single_window(spark):
-    """FINAL on ReplacingMergeTree = ONE window pass (merge-on-read
-    dedup, ReplacingSortedBlockInputStream.h:15) — not a groupBy +
-    join-back (two shuffles of the full rows)."""
-    (ev,) = _t(spark, SF_ORACLE, "events")
-    from clickhouse_is_a_free_analytics_dbms_for_big_data__spark.operators.clauses import (
-        final_replacing,
+    """FINAL on ReplacingMergeTree = ONE window pass on the SQL path
+    (merge-on-read dedup, ReplacingSortedBlockInputStream.h:15) — not a
+    groupBy + join-back (two shuffles of the full rows)."""
+    from clickhouse_is_a_free_analytics_dbms_for_big_data__spark.dialect import (
+        TableMeta,
     )
 
-    df = final_replacing(ev, pk=["user_id"], version=F.col("ts"))
-    plan = _plan(df)
+    (ev,) = _t(spark, SF_ORACLE, "events")
+    ev.createOrReplaceTempView("ps_events")
+    eng = ChEngine(spark)
+    eng.set_meta("ps_events", TableMeta(
+        primary_key=("user_id",), version_col="ts",
+        engine="ReplacingMergeTree",
+    ))
+    plan = _plan(eng.sql("SELECT * FROM ps_events FINAL"))
     assert plan.count("Window") >= 1
     # one shuffle total: the window's hash partitioning
     assert _n_exchanges(plan) == 1
@@ -319,61 +324,60 @@ def test_quantized_topk_candidate_stage_is_take_ordered(spark):
     assert "TakeOrderedAndProject" in plan
 
 
-def test_any_join_string_tiebreak_is_partial_agg(spark):
-    """ANY JOIN's fast path dedups the right side with
-    groupBy+min(struct) — map-side partial aggregation, NO Window
-    (a window would shuffle and sort every right row through its
-    key's reducer)."""
-    from clickhouse_is_a_free_analytics_dbms_for_big_data__spark.operators.clauses import (
-        any_join,
-    )
-
-    left = spark.range(100).selectExpr("id AS k")
-    right = spark.range(1000).selectExpr(
+def test_any_join_dedup_is_single_window(spark):
+    """ANY JOIN dedups the right side with the shared winner-per-key
+    window: one hash shuffle of the right rows, no aggregate (the
+    struct min_by form needs a sort-based aggregate on both sides of
+    its shuffle and measured slower)."""
+    eng = ChEngine(spark)
+    spark.range(100).selectExpr("id AS k").createOrReplaceTempView("ps_l")
+    spark.range(1000).selectExpr(
         "id % 100 AS k", "id AS o", "CAST(id AS STRING) AS s"
-    )
-    df = any_join(left, right, ["k"], "left", tie_break=["o"])
-    plan = _plan(df)
-    assert "Window" not in plan
-    # struct-min compiles to Sort/ObjectHashAggregate (struct is not a
-    # codegen hash-buffer type) — still partial+final, still measured
-    # faster than the window; the key property is NO Window node
-    assert "Aggregate" in plan
-    # NULL tie values and secondary ordering match the window
-    # formulation (nulls first, remaining columns break ties)
-    from pyspark.sql import Window as W
-
-    right2 = spark.createDataFrame(
+    ).createOrReplaceTempView("ps_r")
+    plan = _plan(eng.sql("SELECT k, o, s FROM ps_l ANY LEFT JOIN ps_r USING (k)"))
+    assert plan.count("Window") >= 1
+    assert "Aggregate" not in plan
+    # the other Exchange is the range sort keeping left-row order
+    assert plan.count("Arguments: hashpartitioning(") == 1
+    # NULL tie values and secondary ordering match the row_number()
+    # reference (nulls first, remaining columns break ties)
+    spark.createDataFrame(
         [(1, None, "a"), (1, 5, "b"), (2, 3, "c"), (2, 3, "a")],
         "k long, o long, s string",
-    )
-    left2 = spark.createDataFrame([(1,), (2,)], "k long")
-    fast = any_join(left2, right2, ["k"], "left", tie_break=["o"]).orderBy("k").collect()
-    w = W.partitionBy("k").orderBy("o", "s")
-    slow = left2.join(
-        right2.withColumn("rn", F.row_number().over(w))
-        .filter("rn=1")
-        .drop("rn"),
-        "k",
-        "left",
-    ).orderBy("k").collect()
+    ).createOrReplaceTempView("ps_r2")
+    spark.createDataFrame([(1,), (2,)], "k long").createOrReplaceTempView("ps_l2")
+    fast = eng.sql(
+        "SELECT k, o, s FROM ps_l2 ANY LEFT JOIN ps_r2 USING (k) ORDER BY k "
+        "SETTINGS join_use_nulls = 1"
+    ).collect()
+    slow = spark.sql(
+        "SELECT l.k, r.o, r.s FROM ps_l2 l LEFT JOIN (SELECT * FROM (SELECT *, "
+        "row_number() OVER (PARTITION BY k ORDER BY o, s) AS rn FROM ps_r2) "
+        "WHERE rn = 1) r ON l.k = r.k ORDER BY k"
+    ).collect()
     assert fast == slow
 
 
-def test_final_replacing_name_version_is_partial_agg(spark):
-    """FINAL's fast path (version given by name) dedups with
-    groupBy+max(struct): partial aggregation, no Window."""
-    from clickhouse_is_a_free_analytics_dbms_for_big_data__spark.operators.clauses import (
-        final_replacing,
+def test_final_replacing_name_version_is_single_window(spark):
+    """FINAL with a version column: one window per primary key, no
+    aggregate, the max-version row wins."""
+    from clickhouse_is_a_free_analytics_dbms_for_big_data__spark.dialect import (
+        TableMeta,
     )
 
-    ev = spark.range(1000).selectExpr(
+    spark.range(1000).selectExpr(
         "id % 100 AS user_id", "id AS ts", "CAST(id AS STRING) AS v"
-    )
-    df = final_replacing(ev, pk=["user_id"], version=["ts"])
+    ).createOrReplaceTempView("ps_ev")
+    eng = ChEngine(spark)
+    eng.set_meta("ps_ev", TableMeta(
+        primary_key=("user_id",), version_col="ts",
+        engine="ReplacingMergeTree",
+    ))
+    df = eng.sql("SELECT * FROM ps_ev FINAL")
     plan = _plan(df)
-    assert "Window" not in plan
-    assert "Aggregate" in plan
+    assert plan.count("Window") >= 1
+    assert "Aggregate" not in plan
+    assert _n_exchanges(plan) == 1
     rows = {r.user_id: (r.ts, r.v) for r in df.collect()}
     assert rows[0] == (900, "900") and rows[99] == (999, "999")
 
