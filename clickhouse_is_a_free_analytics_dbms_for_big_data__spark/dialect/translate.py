@@ -1339,10 +1339,13 @@ def _translate_select_inner(tokens: list[Token], ctx: Ctx) -> str:
             qrefs.add(
                 f"{tokens[qi].text.strip('`')}.{tokens[qi + 2].text.strip('`')}"
             )
+    # the name the query qualifies left-side columns with: the scan-
+    # ordinal wrapper below takes it, and the right side must not
+    left_qual = _from_qualifier(from_toks) if joins else None
     for j in joins:
         js, jhint = _render_join(
             j, ctx, jdef_subs, left_sql=from_sql, settings=settings,
-            qualified_refs=qrefs,
+            qualified_refs=qrefs, left_qual=left_qual,
         )
         join_sql += js
         hint = hint or jhint
@@ -2024,7 +2027,9 @@ def _translate_select_inner(tokens: list[Token], ctx: Ctx) -> str:
         if scan_ordinal:
             sql += (
                 f"\nFROM (SELECT *, monotonically_increasing_id() AS __sid0 "
-                f"FROM {from_sql}) __sidsrc{lateral}{join_sql}"
+                f"FROM {from_sql}) "
+                f"{f'`{left_qual}`' if left_qual else '__sidsrc'}"
+                f"{lateral}{join_sql}"
             )
         else:
             sql += f"\nFROM {from_sql}{lateral}{join_sql}"
@@ -2989,6 +2994,7 @@ def _render_join(
     left_sql: str | None = None,
     settings: dict | None = None,
     qualified_refs: set[str] | None = None,
+    left_qual: str | None = None,
 ) -> tuple[str, str]:
     mods = j["mods"]
     kind = "INNER"
@@ -3036,7 +3042,15 @@ def _render_join(
             right_name = _rv
         right_sql = right_name
 
-    alias = j["alias"] or ctx.gensym("j")
+    alias = j["alias"]
+    if alias is None and written_right is not None:
+        # an unaliased table keeps its own name as the qualifier
+        # (`ON o_custkey = customer.c_custkey`), unless the left side
+        # already answers to it (a self-join)
+        alias = f"`{written_right.split('.')[-1].strip('`')}`"
+        if alias.strip("`") == left_qual:
+            alias = None
+    alias = alias or ctx.gensym("j")
     using_cols = (
         [t.text for t in j["using"] if t.text != ","] if j["using"] else None
     )
@@ -3086,7 +3100,7 @@ def _render_join(
             if c in lcols
             and c not in using_cols
             # qualified `alias.col` references keep the column reachable
-            and f"{alias}.{c}" not in (qualified_refs or ())
+            and f"{alias.strip('`')}.{c}" not in (qualified_refs or ())
         ]
         if dup:
             right_sql = (
@@ -3291,6 +3305,16 @@ def _take_clause(tokens: list[Token], i: int) -> tuple[list[Token], int]:
         out.append(t)
         i += 1
     return out, i
+
+
+def _from_qualifier(toks: list[Token]) -> str | None:
+    """The name a query qualifies FROM-side columns with: the alias,
+    else a plain table's own (last) name part; None for an unaliased
+    subquery or table function (the tokens end with ``)``)."""
+    toks = [t for t in toks if not (t.is_kw("FINAL") or t.is_kw("AS"))]
+    if not toks or toks[-1].kind not in ("ident", "qident"):
+        return None
+    return toks[-1].text.strip("`")
 
 
 def _take_from(tokens: list[Token], i: int) -> tuple[list[Token], int]:

@@ -237,58 +237,65 @@ def _timed_udf(pattern: str, count: bool):
     # pandas_udf's signature inference.
     @pandas_udf("long", PandasUDFType.GROUPED_AGG)
     def seq_agg(t, m):
-        # vectorized sort + extraction (guide §4.2): the previous
-        # sorted(key=lambda k: (t.iloc[k], m.iloc[k])) paid a pandas
-        # scalar .iloc per COMPARISON — ~10k interpreted accesses per
-        # 700-event group (r11: the timed dialect entry measured 3x
-        # faster end-to-end).  lexsort(last key primary) is the same
-        # (ts, mask) total order; .tolist() yields plain ints for the
-        # NFA exactly as before.
-        import numpy as np
-
-        tv = t.to_numpy()
-        mv = m.to_numpy()
-        order = np.lexsort((mv, tv))
-        if fast is not None:
-            a, kind, thr, b = fast
-            ts = tv[order].astype(np.int64, copy=False)
-            ms = mv[order]
-            isa = ((ms >> a) & 1).astype(bool)
-            isb = ((ms >> b) & 1).astype(bool)
-            if kind in ("tle", "tl"):
-                # latest A-time strictly before each position
-                lo = np.iinfo(np.int64).min
-                ref = np.maximum.accumulate(np.where(isa, ts, lo))
-                prev = np.empty_like(ref)
-                prev[0] = lo
-                prev[1:] = ref[:-1]
-                seen = prev != lo
-                gap = ts - prev
-                ok = isb & seen & (gap <= thr if kind == "tle" else gap < thr)
-            else:
-                # earliest A-time strictly before each position
-                hi = np.iinfo(np.int64).max
-                ref = np.minimum.accumulate(np.where(isa, ts, hi))
-                prev = np.empty_like(ref)
-                prev[0] = hi
-                prev[1:] = ref[:-1]
-                seen = prev != hi
-                gap = ts - prev
-                ok = isb & seen & (gap >= thr if kind == "tge" else gap > thr)
-            return int(bool(ok.any()))
-        times = tv[order].tolist()
-        masks = mv[order].tolist()
-        if count:
-            pos = total = 0
-            while pos < len(times):
-                matched, pos = match_events(actions, times, masks, pos)
-                if not matched:
-                    break
-                total += 1
-            return total
-        return int(match_events(actions, times, masks, 0)[0])
+        return timed_group_result(actions, fast, count, t.to_numpy(), m.to_numpy())
 
     return seq_agg
+
+
+def timed_group_result(actions, fast, count: bool, t, m) -> int:
+    """One group's timed sequenceMatch (0/1) or sequenceCount over
+    (timestamp seconds, condition mask) arrays: the UDF's body.  With
+    ``fast`` (``_single_tcons_shape``'s result) the closed form
+    replaces the NFA.  Rows with a NULL timestamp — NaN here, and NaN
+    to int64 is platform-dependent — are skipped by both paths, as the
+    reference's Null combinator skips rows with a NULL argument."""
+    import numpy as np
+    import pandas as pd
+
+    keep = ~pd.isna(t)
+    tv = t[keep].astype(np.int64, copy=False)
+    mv = m[keep].astype(np.int64, copy=False)
+    if not len(tv):
+        return 0
+    # lexsort (last key primary) is the (ts, mask) total order, without
+    # a pandas .iloc per comparison (r11: the timed entry ran 3x faster)
+    order = np.lexsort((mv, tv))
+    ts, ms = tv[order], mv[order]
+    if fast is not None:
+        a, kind, thr, b = fast
+        isa = ((ms >> a) & 1).astype(bool)
+        isb = ((ms >> b) & 1).astype(bool)
+        if kind in ("tle", "tl"):
+            # latest A-time strictly before each position
+            lo = np.iinfo(np.int64).min
+            ref = np.maximum.accumulate(np.where(isa, ts, lo))
+            prev = np.empty_like(ref)
+            prev[0] = lo
+            prev[1:] = ref[:-1]
+            seen = prev != lo
+            gap = ts - prev
+            ok = isb & seen & (gap <= thr if kind == "tle" else gap < thr)
+        else:
+            # earliest A-time strictly before each position
+            hi = np.iinfo(np.int64).max
+            ref = np.minimum.accumulate(np.where(isa, ts, hi))
+            prev = np.empty_like(ref)
+            prev[0] = hi
+            prev[1:] = ref[:-1]
+            seen = prev != hi
+            gap = ts - prev
+            ok = isb & seen & (gap >= thr if kind == "tge" else gap > thr)
+        return int(bool(ok.any()))
+    times, masks = ts.tolist(), ms.tolist()
+    if count:
+        pos = total = 0
+        while pos < len(times):
+            matched, pos = match_events(actions, times, masks, pos)
+            if not matched:
+                break
+            total += 1
+        return total
+    return int(match_events(actions, times, masks, 0)[0])
 
 
 def _timed_agg(pattern: str, ts: Column, conds: Sequence[Column], count: bool) -> Column:

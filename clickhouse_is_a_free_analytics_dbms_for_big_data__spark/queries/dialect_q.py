@@ -14,37 +14,10 @@ from ..sources.catalog import register_tables
 from .registry import query
 
 
-# view-registration memo (r11): every dialect entry re-ran 10
-# createOrReplaceTempView py4j calls per build over the same immutable
-# test tables.  Re-register only when the session's registered sf_dir
-# changes (the views are session-global, so a different sf_dir must
-# overwrite them) OR any table file under it changes on disk (r12:
-# the memo value carries the tables' stat signature — without it a
-# table rewritten in-session kept serving the pre-rewrite view even
-# though the catalog reader memo had already invalidated).
-_REGISTERED: dict[tuple, tuple] = {}
-
-
-def _tables_sig(sf_dir: str) -> tuple:
-    from ..sources import catalog as _cat
-    import os
-
-    parts = []
-    for name in _cat.TABLES:
-        p = os.path.join(sf_dir, f"{name}.parquet")
-        try:
-            parts.append((name, _cat._stat_sig(p)))
-        except OSError:
-            continue
-    return tuple(parts)
-
-
 def _engine(spark: SparkSession, sf_dir: str) -> ChEngine:
-    key = (spark.sparkContext.applicationId, id(spark))
-    val = (sf_dir, _tables_sig(sf_dir))
-    if _REGISTERED.get(key) != val:
-        register_tables(spark, sf_dir)
-        _REGISTERED[key] = val
+    # register_tables memoizes per session (re-registers only when
+    # the views point elsewhere or a table changed on disk)
+    register_tables(spark, sf_dir)
     eng = ChEngine(spark)
     eng.set_meta("events", TableMeta(sample_key="user_id"))
     return eng

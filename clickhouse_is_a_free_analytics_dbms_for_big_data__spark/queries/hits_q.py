@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..memo import Memo, source_sig
 from ..sources.catalog import load_tables
 from .registry import plan_cache as _plan_cache
 from .registry import query
@@ -1071,30 +1072,6 @@ def hits_q42(spark, sf_dir):
 # v4: overflow-safe ClientIP/WatchID derivation (mod 1e9 before the
 # Knuth multiply — identity at driver scales, required at sf1 ids)
 _HITS_STORE_VERSION = 7  # v7: even range parts, clamp(bytes/16M, 8, 32)
-_STORE_READY: set[str] = set()
-
-
-def _dir_max_mtime(path: str) -> int:
-    """Newest file mtime (NANOSECONDS) under ``path`` — part of the
-    store rebuild fingerprint so a regenerated source of identical
-    byte size still triggers a rebuild.  st_mtime_ns, not whole
-    seconds: a source rewritten within the same second at the same
-    size must not silently reuse the stale store."""
-    import os
-
-    def _ns(p: str) -> int:
-        return os.stat(p).st_mtime_ns
-
-    if os.path.isfile(path):
-        return _ns(path)
-    newest = 0
-    for root, _dirs, files in os.walk(path):
-        for f in files:
-            try:
-                newest = max(newest, _ns(os.path.join(root, f)))
-            except OSError:
-                pass
-    return newest
 
 
 def _hits_store_path(sf_dir: str) -> str:
@@ -1111,8 +1088,8 @@ def ensure_hits_stored(spark: SparkSession, sf_dir: str) -> str:
     """Build-once hits MergeTree store: month partitions, PK
     (CounterID, UserID), LowCardinality dictionaries on the three
     bounded string columns.  A meta marker (projection version +
-    source byte size) keys rebuilds; an in-process memo makes repeat
-    calls free so warm bench runs never pay a staleness check."""
+    source signature) keys rebuilds, so a deleted store or a
+    regenerated source (even at the same byte size) rebuilds."""
     import json
     import os
 
@@ -1120,26 +1097,12 @@ def ensure_hits_stored(spark: SparkSession, sf_dir: str) -> str:
 
     path = _hits_store_path(sf_dir)
     meta_p = os.path.join(path, "_HITS_STORE_META")
-    # the in-process memo is only valid while the store is still on
-    # disk: a deleted store dir (source unchanged) must rebuild, not
-    # serve a plan over missing files (r11 advice) — one stat per call
-    if path in _STORE_READY:
-        if os.path.exists(meta_p):
-            return path
-        _STORE_READY.discard(path)
-        _STORED_DF.pop(path, None)
     src = os.path.join(sf_dir, "events.parquet")
-    # size alone can collide when the source is REGENERATED at the same
-    # byte size; the newest mtime under the source dir catches that
-    sig = [
-        _HITS_STORE_VERSION,
-        dir_size_bytes(src),
-        _dir_max_mtime(src),
-    ]
+    # JSON round trip: the marker stores the signature's tuples as lists
+    sig = json.loads(json.dumps([_HITS_STORE_VERSION, source_sig(src)]))
     try:
         with open(meta_p) as fh:
             if json.load(fh) == sig:
-                _STORE_READY.add(path)
                 return path
     except (OSError, ValueError):
         pass
@@ -1173,86 +1136,24 @@ def ensure_hits_stored(spark: SparkSession, sf_dir: str) -> str:
     with open(os.path.join(staging, "_HITS_STORE_META"), "w") as fh:
         json.dump(sig, fh)
     _atomic_publish(staging, path)
-    # the table was rebuilt: drop the memoized base DataFrame (and any
-    # collected LC maps for the old table) so this session's readers
-    # pick up the new files, not a stale plan
-    _STORED_DF.pop(path, None)
-    from ..sources.mergetree import _evict_lc_cache
-
-    _evict_lc_cache(path)
-    _STORE_READY.add(path)
     return path
 
 
-_STORED_DF: dict[str, DataFrame] = {}
-
-
-def _stored_plan_cache(fn):
-    """Plan memo for the *_stored builders, keyed on the SAME staleness
-    signature ensure_hits_stored rebuilds on (projection version +
-    source bytes + newest source mtime): a memo hit proves
-    ensure_hits_stored would no-op, so skipping the builder body —
-    which otherwise re-pays the ~40 ms LC map-literal py4j churn per
-    build — can never serve a plan over a stale or rebuilt store.  A
-    changed source gets a new key and re-runs the full builder
-    (staleness check, rebuild, fresh LC maps)."""
-    import functools
-    import os
-
-    from ..session import dir_size_bytes
-
-    @functools.wraps(fn)
-    def wrap(spark: SparkSession, sf_dir: str) -> DataFrame:
-        src = os.path.join(sf_dir, "events.parquet")
-        meta_p = os.path.join(_hits_store_path(sf_dir), "_HITS_STORE_META")
-
-        def _store_sig() -> int | None:
-            # the memo must also track the STORE's identity, not just
-            # the source's: a deleted-and-rebuilt store has new part
-            # files under the same path (r11 advice) — the meta
-            # marker's mtime changes on every publish
-            try:
-                return os.stat(meta_p).st_mtime_ns
-            except OSError:
-                return None
-
-        base = (
-            spark.sparkContext.applicationId,
-            id(spark),
-            sf_dir,
-            _HITS_STORE_VERSION,
-            dir_size_bytes(src),
-            _dir_max_mtime(src),
-        )
-        sig = _store_sig()
-        if sig is not None:
-            cached = wrap._plans.get(base + (sig,))
-            if cached is not None:
-                return cached
-        out = fn(spark, sf_dir)  # ensures/rebuilds the store
-        sig = _store_sig()
-        if sig is None:
-            return out  # no published store: nothing to key a hit on
-        if len(wrap._plans) > 64:
-            wrap._plans.clear()
-        wrap._plans[base + (sig,)] = out
-        return out
-
-    wrap._plans = {}
-    return wrap
+# the base DataFrame per (session, store path): rebuilding it costs
+# ~0.15 s of driver analysis/listing per call (measured r10), which a
+# real deployment pays once at table registration, not per query
+_STORED_BASE = Memo()
 
 
 def _stored(spark: SparkSession, sf_dir: str):
-    """(path, coded DataFrame) of the stored hits table.  The base
-    DataFrame is memoized per path — rebuilding it costs ~0.15 s of
-    driver analysis/listing per call (measured r10), which a real
-    deployment pays once at table registration, not per query."""
+    """(path, coded DataFrame) of the stored hits table."""
     from ..sources.mergetree import read_mergetree
 
     path = ensure_hits_stored(spark, sf_dir)
-    if path not in _STORED_DF:
-        _STORED_DF[path] = read_mergetree(spark, path, decode_lc=False)
-    return path, _STORED_DF[path]
+    return path, _STORED_BASE.get_or_build(
+        spark, path, lambda: source_sig(path),
+        lambda: read_mergetree(spark, path, decode_lc=False),
+    )
 
 
 # LC codes are assigned in VALUE order on a one-shot overwrite (see
@@ -1272,7 +1173,7 @@ def _stored(spark: SparkSession, sf_dir: str):
     "LowCardinality int code (4-byte hash/shuffle keys instead of "
     "strings), decode on the <=200 group rows (late materialization).",
 )
-@_stored_plan_cache
+@_plan_cache(watch=_hits_store_path)
 def hits_q13_stored(spark, sf_dir):
     from ..sources.mergetree import lc_decode_expr
 
@@ -1301,7 +1202,7 @@ def hits_q13_stored(spark, sf_dir):
     "GROUP BY hashes (long, int-code) pairs; top-10 runs on codes "
     "(order-preserving dictionary) so only 10 rows decode.",
 )
-@_stored_plan_cache
+@_plan_cache(watch=_hits_store_path)
 def hits_q17_stored(spark, sf_dir):
     from ..sources.mergetree import lc_decode_expr
 
@@ -1328,7 +1229,7 @@ def hits_q17_stored(spark, sf_dir):
     "benchmark Q19 against the STORED hits table: three-key GROUP BY "
     "with the phrase as an int code; top-10 on codes, 10-row decode.",
 )
-@_stored_plan_cache
+@_plan_cache(watch=_hits_store_path)
 def hits_q19_stored(spark, sf_dir):
     from ..sources.mergetree import lc_decode_expr
 
@@ -1356,7 +1257,7 @@ def hits_q19_stored(spark, sf_dir):
     "broadcast into a semi join against the int code column — the "
     "classic LowCardinality substring-scan rewrite.",
 )
-@_stored_plan_cache
+@_plan_cache(watch=_hits_store_path)
 def hits_q21_stored(spark, sf_dir):
     from ..sources.mergetree import lc_dict_map
 
@@ -1385,7 +1286,7 @@ def hits_q21_stored(spark, sf_dir):
     "GROUP BY becomes an int-code GROUP BY; top-10 on codes "
     "(order-preserving dictionary), 10-row decode.",
 )
-@_stored_plan_cache
+@_plan_cache(watch=_hits_store_path)
 def hits_q34_stored(spark, sf_dir):
     from ..sources.mergetree import lc_decode_expr
 

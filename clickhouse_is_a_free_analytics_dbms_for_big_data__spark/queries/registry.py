@@ -22,8 +22,11 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..memo import Memo, source_sig
+from ..sources.catalog import sf_dir_sig
 
-def plan_cache(fn):
+
+def plan_cache(fn=None, *, watch: Callable[[str], str] | None = None):
     """Memoize the built DataFrame per (session, sf_dir).
 
     A DataFrame is a logical PLAN — memoizing it amortizes the
@@ -33,33 +36,36 @@ def plan_cache(fn):
     inputs.  The reference caches compiled expression code the same
     way (Interpreters/Compiler.h:66-92, min_count_to_compile) —
     repeated executions of one query must not re-pay plan
-    construction.  Introduced r4 for the LSH dedup plans (pipeline_q),
-    generalized r11.
+    construction.
 
-    ONLY for pure-plan builders: a builder with eager side effects
-    (writes a store, collects a dict) must not be decorated, and an
-    in-session rewrite of a table under ``sf_dir`` requires clearing
-    ``fn._plans`` (bench.py does, before its sf1 op timings).  Keyed
-    on applicationId + id so a dead session's entry can never be
-    revived by an id() reuse.
+    The memo (memo.py) is valid while the catalog tables under
+    ``sf_dir`` are unchanged on disk; ``watch(sf_dir)`` names one more
+    path the plan reads (the stored hits table), without which no
+    plan is kept.  ``fn._plans`` is the per-builder memo:
+    ``fn._plans.clear()`` forces the next call to rebuild (timing
+    loops do, for builders with eager work such as pl_dup_clusters'
+    connected-components loop).  ONLY for pure-plan builders apart
+    from such build-time work: the memo returns the same DataFrame.
     """
 
-    @functools.wraps(fn)
-    def wrap(spark: SparkSession, sf_dir: str) -> DataFrame:
-        key = (spark.sparkContext.applicationId, id(spark), sf_dir)
-        cached = wrap._plans.get(key)
-        if cached is None:
-            if len(wrap._plans) > 64:  # evict dead sessions only:
-                # a blanket clear() also wiped the LIVE session's
-                # entries, so a 65+-entry session thrashed (r11 audit)
-                live = key[:2]
-                for k in [k for k in wrap._plans if k[:2] != live]:
-                    del wrap._plans[k]
-            cached = wrap._plans[key] = fn(spark, sf_dir)
-        return cached
+    def decorate(fn):
+        @functools.wraps(fn)
+        def wrap(spark: SparkSession, sf_dir: str) -> DataFrame:
+            def sig() -> tuple | None:
+                tables = sf_dir_sig(sf_dir)
+                if watch is None:
+                    return tables
+                extra = source_sig(watch(sf_dir))
+                return None if extra is None else tables + (extra,)
 
-    wrap._plans = {}
-    return wrap
+            return wrap._plans.get_or_build(
+                spark, sf_dir, sig, lambda: fn(spark, sf_dir)
+            )
+
+        wrap._plans = Memo()
+        return wrap
+
+    return decorate if fn is None else decorate(fn)
 
 
 @dataclass
@@ -130,40 +136,17 @@ _PRIORITY: tuple[str, ...] = (
     "sample_deterministic",
     "dict_range_lookup",
     "fn_date_parts",
+    "join_any_left",
+    "semi_join_in",
+    "anti_join_not_in",
+    "array_join_tokens",
+    "final_replacing_latest",
+    "pl_fingerprint_rolling",
+    "pl_simhash_dedup",
+    "pl_embedding_neardup",
+    "pl_embedding_neardup_recall",
+    "pl_ngram_jaccard",
     # stalest driver evidence first (full-registry sweep)
-    "hits_q37_url_pageviews",
-    "hits_q38_title_pageviews",
-    "hits_q39_link_pageviews",
-    "hits_q39_ternary_src",
-    "hits_q41_urlhash_drill",
-    "hits_q42_window_size",
-    "hits_q43_minute_rollup",
-    "pl_hash_split",
-    "pl_pii_scrub",
-    "pl_repetition_score",
-    "pl_seq_packing",
-    "aggregating_state_merge",
-    "asof_join_latest_view",
-    "dialect_scalar_subquery",
-    "dialect_sequence_funnel",
-    "dialect_show_create",
-    "dialect_state_merge",
-    "dialect_tuple_array",
-    "dialect_union_branch_limit",
-    "dict_flat_lookup",
-    "fn_array_reduce",
-    "fn_quantile_weighted",
-    "fn_reinterpret_roundtrip",
-    "fn_url_format_stragglers",
-    "funnel_window_levels",
-    "graphite_rollup_downsample",
-    "hits_q01_count",
-    "hits_q02_filtered_count",
-    "hits_q03_triple_agg",
-    "hits_q04_sum_uid",
-    "hits_q05_uniq_users",
-    "hits_q07_minmax_date",
-    "hits_q08_adv_group",
     "hits_q09_region_uniq",
     "hits_q10_region_multi",
     "hits_q13_phrase_top",
@@ -173,12 +156,9 @@ _PRIORITY: tuple[str, ...] = (
     "hits_q33_watch_ip_all",
     "mt_low_cardinality_group",
     "pl_ann_quantized",
-    "pl_embedding_neardup",
-    "pl_embedding_neardup_recall",
     "pl_embedding_topk",
     "pl_ivf_ann",
     "pl_multimodal_features",
-    "pl_ngram_jaccard",
     "pl_quota_sample",
     "pl_rare_token_ratio",
     "pl_video_frame_sample",
@@ -186,14 +166,11 @@ _PRIORITY: tuple[str, ...] = (
     "sessionize_events",
     "system_parts_stats",
     "uniq_approx",
-    "anti_join_not_in",
-    "array_join_tokens",
     "collapsing_mergetree",
     "count_star",
     "cross_join_filtered",
     "dict_hierarchy",
     "distinct_pairs",
-    "final_replacing_latest",
     "fn_arithmetic",
     "fn_conditional_transform",
     "fn_day_of_week_monday",
@@ -213,12 +190,9 @@ _PRIORITY: tuple[str, ...] = (
     "having_filter",
     "hits_q24_star_prewhere",
     "in_literal_tuple",
-    "join_any_left",
     "limit_by_key",
     "mt_low_cardinality_append",
     "pl_exact_dedup",
-    "pl_fingerprint_rolling",
-    "pl_simhash_dedup",
     "pl_token_stats",
     "retention_cohort",
     "running_accumulate_shim",
@@ -264,7 +238,6 @@ _PRIORITY: tuple[str, ...] = (
     "hits_q35_const_url",
     "hits_q35_ip_keys",
     "pl_quality_scores",
-    "semi_join_in",
     "sequence_count_pairs",
     "sequence_match_funnel",
     "summing_mergetree",
@@ -272,6 +245,39 @@ _PRIORITY: tuple[str, ...] = (
     "union_all_chain",
     "uniq_exact",
     "uniq_state_merge_hll",
+    "aggregating_state_merge",
+    "asof_join_latest_view",
+    "dialect_scalar_subquery",
+    "dialect_sequence_funnel",
+    "dialect_show_create",
+    "dialect_state_merge",
+    "dialect_tuple_array",
+    "dialect_union_branch_limit",
+    "dict_flat_lookup",
+    "fn_array_reduce",
+    "fn_quantile_weighted",
+    "fn_reinterpret_roundtrip",
+    "fn_url_format_stragglers",
+    "funnel_window_levels",
+    "graphite_rollup_downsample",
+    "hits_q01_count",
+    "hits_q02_filtered_count",
+    "hits_q03_triple_agg",
+    "hits_q04_sum_uid",
+    "hits_q05_uniq_users",
+    "hits_q07_minmax_date",
+    "hits_q08_adv_group",
+    "hits_q37_url_pageviews",
+    "hits_q38_title_pageviews",
+    "hits_q39_link_pageviews",
+    "hits_q39_ternary_src",
+    "hits_q41_urlhash_drill",
+    "hits_q42_window_size",
+    "hits_q43_minute_rollup",
+    "pl_hash_split",
+    "pl_pii_scrub",
+    "pl_repetition_score",
+    "pl_seq_packing",
 )
 # _PRIORITY_END
 

@@ -15,6 +15,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..memo import Memo, session_key, source_sig
+
 TABLES = (
     "region",
     "nation",
@@ -30,33 +32,25 @@ TABLES = (
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-# Table-reader memo (r11): ``spark.read.parquet`` pays a driver-side
-# footer read + schema inference of ~80 ms PER CALL, re-paid by every
-# query build over the same immutable table (measured r11; guide §7.3
-# driver-side planning cost).  The memo caches the lazy DataFrame —
-# a PLAN, not data; every execution still scans parquet — keyed on the
-# session AND an on-disk staleness signature (mtime+size), so a
-# rewritten table is re-read, mirroring the reference's table-metadata
-# registry (Storages/StorageFactory.cpp: tables are constructed once,
-# not per query).
-_READER_CACHE: dict[tuple, DataFrame] = {}
+# Table readers and temp-view registrations are memoized (memo.py):
+# ``spark.read.parquet`` pays a driver-side footer read + schema
+# inference of ~80 ms PER CALL (measured r11), and re-registering ten
+# temp views costs ten py4j calls per query build.  Both memos hold
+# PLANS, never data — every execution still scans parquet — and a
+# rewritten table changes its signature, so it is re-read.
+_READERS = Memo()
+_VIEWS = Memo()
 _CONF_PINNED: set[tuple] = set()
 
 
-def _stat_sig(path: str) -> tuple:
-    """Staleness signature: file (mtime_ns, size); for Spark-written
-    directory tables, the dir mtime plus per-file (name, mtime, size)."""
-    st = os.stat(path)
-    if os.path.isfile(path):
-        return (st.st_mtime_ns, st.st_size)
-    entries = []
-    for f in sorted(os.listdir(path)):
-        try:
-            s = os.stat(os.path.join(path, f))
-            entries.append((f, s.st_mtime_ns, s.st_size))
-        except OSError:
-            pass
-    return (st.st_mtime_ns, tuple(entries))
+def table_paths(sf_dir: str, tables: tuple[str, ...] = TABLES) -> list[str]:
+    return [os.path.join(sf_dir, f"{name}.parquet") for name in tables]
+
+
+def sf_dir_sig(sf_dir: str, tables: tuple[str, ...] = TABLES) -> tuple:
+    """Signature of the catalog tables under ``sf_dir`` (``None``
+    entries for absent tables, so one appearing is a change too)."""
+    return tuple(source_sig(p) for p in table_paths(sf_dir, tables))
 
 
 def parquet_row_count(path: str) -> int | None:
@@ -95,8 +89,7 @@ def load_tables(
     # reference wraps on overflow; ANSI would throw on hash mixing).
     # Pinned once per session (two py4j round trips otherwise re-paid
     # on every query build).
-    app = spark.sparkContext.applicationId
-    sess = (app, id(spark))
+    sess = session_key(spark)
     # keyed on the (app, id) SESSION tuple, not the app alone:
     # spark.conf.set is per-SparkSession, and a driver may hand us a
     # spark.newSession() clone that shares the applicationId but not
@@ -106,35 +99,44 @@ def load_tables(
         spark.conf.set("spark.sql.ansi.enabled", "false")
         _CONF_PINNED.add(sess)
     out: dict[str, DataFrame] = {}
-    for name in tables:
-        path = os.path.join(sf_dir, f"{name}.parquet")
-        if not os.path.exists(path):
-            continue
-        key = (sess, path, _stat_sig(path))
-        df = _READER_CACHE.get(key)
-        if df is None:
-            if len(_READER_CACHE) > 256:  # dead sessions / rewritten paths
-                _READER_CACHE.clear()
-            df = spark.read.parquet(path)
-            # TIMESTAMP(NANOS) columns arrive as long nanos (see session
-            # conf); surface them as microsecond timestamps like every
-            # other engine (DuckDB/pyarrow truncate the same way).
-            if name == "events" and isinstance(
-                df.schema["ts"].dataType, T.LongType
-            ):
-                df = df.withColumn(
-                    "ts", F.timestamp_micros(F.expr("ts DIV 1000"))
-                )
-            _READER_CACHE[key] = df
-        out[name] = df
+    for name, path in zip(tables, table_paths(sf_dir, tables)):
+        if os.path.exists(path):
+            out[name] = _READERS.get_or_build(
+                spark, path, lambda p=path: source_sig(p),
+                lambda n=name, p=path: _read_table(spark, n, p),
+            )
     return out
+
+
+def _read_table(spark: SparkSession, name: str, path: str) -> DataFrame:
+    df = spark.read.parquet(path)
+    # TIMESTAMP(NANOS) columns arrive as long nanos (see session
+    # conf); surface them as microsecond timestamps like every other
+    # engine (DuckDB/pyarrow truncate the same way).
+    if name == "events" and isinstance(df.schema["ts"].dataType, T.LongType):
+        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
+    return df
 
 
 def register_tables(
     spark: SparkSession, sf_dir: str, tables: tuple[str, ...] = TABLES
 ) -> dict[str, DataFrame]:
-    """Load and register every table as a temp view (idempotent)."""
-    dfs = load_tables(spark, sf_dir, tables)
-    for name, df in dfs.items():
-        df.createOrReplaceTempView(name)
-    return dfs
+    """Load and register every table as a temp view (idempotent).
+
+    Views are session-global, so the memo has one entry per session,
+    recording which ``sf_dir`` (and table files) the views point at:
+    a call for another directory, another table set, or after a
+    rewrite registers again, whichever caller made the last one.  The
+    catalog's table names are registered only here; a view replaced
+    by other code is not noticed."""
+
+    def register() -> dict[str, DataFrame]:
+        dfs = load_tables(spark, sf_dir, tables)
+        for name, df in dfs.items():
+            df.createOrReplaceTempView(name)
+        return dfs
+
+    return dict(_VIEWS.get_or_build(
+        spark, "views",
+        lambda: (sf_dir, tables, sf_dir_sig(sf_dir, tables)), register,
+    ))

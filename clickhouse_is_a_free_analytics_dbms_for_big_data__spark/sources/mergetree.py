@@ -30,6 +30,8 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..memo import Memo, source_sig
+
 
 def _lc_dict_path(path: str, col: str) -> str:
     # the leading underscore makes Spark's file index skip the dict
@@ -241,10 +243,6 @@ def write_mergetree(
             except Exception:  # pragma: no cover - best-effort
                 pass
         raise
-    # a write changed (or may have changed) this table's dictionaries:
-    # drop any memoized collected maps so a same-session reader never
-    # decodes new codes through a stale map (to NULL, silently)
-    _evict_lc_cache(path)
 
 
 def _read_lc_dict(spark: SparkSession, path: str, col: str) -> DataFrame:
@@ -258,40 +256,34 @@ def _read_lc_dict(spark: SparkSession, path: str, col: str) -> DataFrame:
     return d.select("__lc_value", "__lc_code")
 
 
-_LC_MAP_CACHE: dict[tuple[str, str], dict[int, str]] = {}
-
-
-def _evict_lc_cache(path: str) -> None:
-    """Drop every memoized LC dictionary map for ``path`` — called by
-    writers (write_mergetree, optimize_table) so appends/overwrites in
-    one session never decode through a stale map."""
-    norm = path.rstrip("/")
-    for key in [k for k in _LC_MAP_CACHE if k[0].rstrip("/") == norm]:
-        del _LC_MAP_CACHE[key]
+_LC_MAPS = Memo()
 
 
 def lc_dict_map(
     spark: SparkSession, path: str, col: str, max_entries: int = 100_000
 ) -> dict[int, str]:
     """A LowCardinality dictionary as a collected ``{code: value}``
-    dict, memoized per (path, col).  The reference holds LC
-    dictionaries RAM-resident the same way; ``max_entries`` guards the
-    contract (raise rather than silently collect a high-cardinality
-    column — use the broadcast-join ``lc_decode`` for those)."""
-    key = (path, col)
-    if key not in _LC_MAP_CACHE:
-        d = _read_lc_dict(spark, path, col)
-        rows = d.limit(max_entries + 1).collect()
+    dict, memoized per (session, dictionary) until the dictionary's
+    files change — a writer that rewrites them needs no hook.  The
+    reference holds LC dictionaries RAM-resident the same way;
+    ``max_entries`` guards the contract (raise rather than silently
+    collect a high-cardinality column — use the broadcast-join
+    ``lc_decode`` for those)."""
+    dict_path = _lc_dict_path(path, col)
+
+    def collect() -> dict[int, str]:
+        rows = _read_lc_dict(spark, path, col).limit(max_entries + 1).collect()
         if len(rows) > max_entries:
             raise ValueError(
                 f"LC dictionary {col!r} at {path} exceeds "
                 f"max_entries={max_entries}; use lc_decode (broadcast "
                 "join) instead of a collected map"
             )
-        _LC_MAP_CACHE[key] = {
-            r["__lc_code"]: r["__lc_value"] for r in rows
-        }
-    return _LC_MAP_CACHE[key]
+        return {r["__lc_code"]: r["__lc_value"] for r in rows}
+
+    return _LC_MAPS.get_or_build(
+        spark, (dict_path, max_entries), lambda: source_sig(dict_path), collect
+    )
 
 
 def _sql_str(v: str) -> str:
@@ -751,4 +743,3 @@ def optimize_table(
     shutil.move(path, backup)
     shutil.move(staging, path)
     shutil.rmtree(backup)
-    _evict_lc_cache(path)

@@ -62,6 +62,21 @@ PIN: tuple[str, ...] = (
     "sample_deterministic",
     "dict_range_lookup",
     "fn_date_parts",
+    # entries whose lowering moved to CH-SQL through the translator
+    # (operators/clauses.py deleted), not externally sampled since
+    "join_any_left",
+    "semi_join_in",
+    "anti_join_not_in",
+    "array_join_tokens",
+    "final_replacing_latest",
+    # value-risk pipeline entries: pl_fingerprint_rolling's values
+    # changed in r12 and it has never been externally sampled; the
+    # other similarity entries share its token-hash and embedding paths
+    "pl_fingerprint_rolling",
+    "pl_simhash_dedup",
+    "pl_embedding_neardup",
+    "pl_embedding_neardup_recall",
+    "pl_ngram_jaccard",
 )
 
 WINDOW = 50  # how many names the driver snapshots

@@ -282,6 +282,36 @@ def test_exec_any_join_subquery_winner_is_all_columns_min(eng, spark):
         assert [tuple(r) for r in rows] == [(1, "a", 3)]
 
 
+def test_exec_join_on_qualified_by_table_name(eng):
+    """An ON (or select list) that qualifies columns by a table's own
+    name or alias resolves on both sides, also under the scan-ordinal
+    wrapper an unordered join gets; answers match DuckDB."""
+    import duckdb
+
+    con = duckdb.connect()
+    for t in ("orders", "customer"):
+        con.execute(
+            f"CREATE VIEW {t} AS SELECT * FROM '{SF_SMOKE}/{t}.parquet'"
+        )
+    want = sorted(
+        con.execute(
+            "SELECT o_orderkey, coalesce(c_name, '') FROM orders "
+            "LEFT JOIN customer ON o_custkey = c_custkey"
+        ).fetchall()
+    )
+    con.close()
+    for ch in (
+        "SELECT o_orderkey, c_name FROM orders ANY LEFT JOIN customer "
+        "ON o_custkey = customer.c_custkey",
+        "SELECT o_orderkey, c_name FROM orders ALL INNER JOIN customer "
+        "ON orders.o_custkey = customer.c_custkey",
+        "SELECT o.o_orderkey, c.c_name FROM orders AS o ALL INNER JOIN "
+        "customer AS c ON o.o_custkey = c.c_custkey",
+    ):
+        got = sorted(tuple(r) for r in eng.sql(ch).collect())
+        assert got == want, ch
+
+
 def test_exec_sample_deterministic(eng):
     a = eng.sql("SELECT count() FROM events SAMPLE 0.3").collect()[0][0]
     b = eng.sql("SELECT count() FROM events SAMPLE 0.3").collect()[0][0]

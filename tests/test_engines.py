@@ -199,15 +199,16 @@ def test_streaming_materialized_view(spark, tmp_path):
 def test_timed_fast_path_matches_nfa_on_random_sequences():
     """r12: the vectorized single-time-constraint fast path must equal
     the reference NFA on arbitrary (times, masks) sequences — all four
-    comparison kinds, overlapping conditions, ties, empty matches."""
+    comparison kinds, overlapping conditions, ties, empty matches.
+    Both sides run the shipped group kernel (the UDF's body)."""
     import random
 
     import numpy as np
 
     from clickhouse_is_a_free_analytics_dbms_for_big_data__spark.operators.sequence_match import (
         _single_tcons_shape,
-        match_events,
         parse_pattern,
+        timed_group_result,
     )
 
     rng = random.Random(1234)
@@ -221,45 +222,71 @@ def test_timed_fast_path_matches_nfa_on_random_sequences():
         fast = _single_tcons_shape(actions, count=False)
         assert fast == (0, kind, thr, 1)
         n = rng.randrange(0, 30)
-        times = sorted(rng.randrange(0, 60) for _ in range(n))
-        # masks allow overlap (event may satisfy both conditions) and
-        # neither; sort ties broken by mask like the UDF's lexsort
-        masks = [rng.randrange(0, 4) for _ in range(n)]
-        pairs = sorted(zip(times, masks))
-        times = [p[0] for p in pairs]
-        masks = [p[1] for p in pairs]
-        want = int(match_events(actions, times, masks, 0)[0]) if n else 0
-        # replicate the UDF's fast path exactly
-        a, k2, thr2, b = fast
-        ts = np.asarray(times, dtype=np.int64)
-        ms = np.asarray(masks, dtype=np.int64)
-        if n == 0:
-            got = 0
-        else:
-            isa = ((ms >> a) & 1).astype(bool)
-            isb = ((ms >> b) & 1).astype(bool)
-            if k2 in ("tle", "tl"):
-                lo = np.iinfo(np.int64).min
-                ref = np.maximum.accumulate(np.where(isa, ts, lo))
-                prev = np.empty_like(ref)
-                prev[0] = lo
-                prev[1:] = ref[:-1]
-                seen = prev != lo
-                gap = ts - prev
-                ok = isb & seen & (gap <= thr2 if k2 == "tle" else gap < thr2)
-            else:
-                hi = np.iinfo(np.int64).max
-                ref = np.minimum.accumulate(np.where(isa, ts, hi))
-                prev = np.empty_like(ref)
-                prev[0] = hi
-                prev[1:] = ref[:-1]
-                seen = prev != hi
-                gap = ts - prev
-                ok = isb & seen & (gap >= thr2 if k2 == "tge" else gap > thr2)
-            got = int(bool(ok.any()))
+        # unsorted input: the kernel sorts by (ts, mask); masks allow
+        # overlap (event may satisfy both conditions) and neither
+        times = np.array([rng.randrange(0, 60) for _ in range(n)], dtype=np.int64)
+        masks = np.array([rng.randrange(0, 4) for _ in range(n)], dtype=np.int64)
+        want = timed_group_result(actions, None, False, times, masks)
+        got = timed_group_result(actions, fast, False, times, masks)
         assert got == want, (pattern, times, masks, got, want)
         n_checked += 1
     assert n_checked == 4000
+
+
+def test_timed_null_timestamps_skipped_by_both_paths(spark):
+    """A NULL timestamp reaches the UDF as NaN; both the closed form
+    and the NFA skip that row (the reference's Null combinator), so
+    they agree — a NaN cast to int64 must never pair with an event."""
+    import numpy as np
+
+    from clickhouse_is_a_free_analytics_dbms_for_big_data__spark.operators.sequence_match import (
+        _single_tcons_shape,
+        parse_pattern,
+        sequence_count,
+        sequence_match,
+        timed_group_result,
+    )
+
+    nan = float("nan")
+    for pattern, t, m, want in [
+        ("(?1)(?t<=5)(?2)", [0.0, nan, 4.0], [1, 2, 2], 1),
+        ("(?1)(?t>=5)(?2)", [0.0, nan], [1, 2], 0),
+        ("(?1)(?t>5)(?2)", [nan, 0.0, 9.0], [1, 1, 2], 1),
+        ("(?1)(?t<5)(?2)", [nan, nan], [1, 2], 0),
+    ]:
+        actions = parse_pattern(pattern)
+        fast = _single_tcons_shape(actions, count=False)
+        assert fast is not None
+        args = (np.array(t), np.array(m, dtype=np.int64))
+        assert timed_group_result(actions, fast, False, *args) == want
+        assert timed_group_result(actions, None, False, *args) == want
+        assert timed_group_result(actions, None, True, *args) == want
+
+    # end to end: the match UDF takes the closed form, count the NFA
+    df = spark.createDataFrame(
+        [
+            (1, "2024-01-01 00:00:00", "a"),
+            (1, None, "b"),
+            (1, "2024-01-01 00:00:04", "b"),
+            (2, "2024-01-01 00:00:00", "a"),
+            (2, None, "b"),
+            (3, None, "a"),
+            (3, None, "b"),
+        ],
+        "uid int, ts string, ev string",
+    ).withColumn("ts", F.col("ts").cast("timestamp"))
+    conds = [F.col("ev") == "a", F.col("ev") == "b"]
+    for pattern, want in [
+        ("(?1)(?t<=5)(?2)", {1: 1, 2: 0, 3: 0}),
+        ("(?1)(?t>=5)(?2)", {1: 0, 2: 0, 3: 0}),
+    ]:
+        rows = df.groupBy("uid").agg(
+            sequence_match(pattern, F.col("ts"), conds).alias("m"),
+            sequence_count(pattern, F.col("ts"), conds).alias("c"),
+        ).collect()
+        assert {r.uid: (r.m, r.c) for r in rows} == {
+            u: (w, w) for u, w in want.items()
+        }, pattern
 
 
 def test_timed_fast_path_not_taken_for_other_shapes():

@@ -1,7 +1,8 @@
-"""r11 plan-construction amortization internals: the table-reader memo
-(sources/catalog) and the shared plan_cache (queries/registry).
+"""The plan memo (memo.py) and its callers: the table-reader and
+temp-view memos (sources/catalog), the shared plan_cache
+(queries/registry) and the stored hits table (queries/hits_q).
 
-Both cache PLANS, never data: the staleness contract is that a
+They cache PLANS, never data: the staleness contract is that a
 rewritten table yields a fresh reader, and a plan_cache'd builder
 returns one DataFrame per (session, sf_dir) without re-running the
 builder body."""
@@ -13,12 +14,17 @@ import shutil
 
 from pyspark.sql import functions as F
 
+from clickhouse_is_a_free_analytics_dbms_for_big_data__spark.memo import (
+    session_key,
+)
 from clickhouse_is_a_free_analytics_dbms_for_big_data__spark.queries.registry import (
     plan_cache,
 )
 from clickhouse_is_a_free_analytics_dbms_for_big_data__spark.sources.catalog import (
     load_tables,
 )
+
+from .conftest import SF_SMOKE
 
 SF_ORACLE = "/root/testdata/sf0.01"
 
@@ -138,14 +144,12 @@ def test_plan_cache_eviction_keeps_live_session_entries(spark):
     # fake 70 dead-session entries + 1 live entry
     live = q(spark, "/live")
     for i in range(70):
-        q._plans[("deadapp", i, f"/d{i}")] = live
+        q._plans[(("deadapp", i), f"/d{i}")] = ((), live)
     assert len(q._plans) > 64
     # next miss evicts ONLY the dead-session keys
     q(spark, "/live2")
-    assert q._plans[
-        (spark.sparkContext.applicationId, id(spark), "/live")
-    ] is live
-    assert all(k[0] != "deadapp" for k in q._plans)
+    assert q._plans[(session_key(spark), "/live")][1] is live
+    assert all(k[0][0] != "deadapp" for k in q._plans)
     assert calls == ["/live", "/live2"]
 
 
@@ -159,7 +163,7 @@ def test_stored_memo_skips_insert_without_store(spark, tmp_path):
 
     calls = []
 
-    @hits_q._stored_plan_cache
+    @plan_cache(watch=hits_q._hits_store_path)
     def q(s, sf_dir):
         calls.append(sf_dir)
         return s.range(1)
@@ -168,3 +172,58 @@ def test_stored_memo_skips_insert_without_store(spark, tmp_path):
     q(spark, str(tmp_path))
     assert q._plans == {}
     assert calls == [str(tmp_path)] * 2
+
+
+def test_engine_views_follow_direct_register_tables(spark):
+    """A register_tables call for another sf_dir (which bypasses the
+    dialect entries) must not leave their views pointing there: the
+    next dialect build re-registers its own sf_dir."""
+    from clickhouse_is_a_free_analytics_dbms_for_big_data__spark.queries.dialect_q import (
+        _engine,
+    )
+    from clickhouse_is_a_free_analytics_dbms_for_big_data__spark.sources.catalog import (
+        register_tables,
+    )
+
+    want = load_tables(spark, SF_ORACLE, ("orders",))["orders"].count()
+    small = load_tables(spark, SF_SMOKE, ("orders",))["orders"].count()
+    assert want != small
+    q = "SELECT count() AS n FROM orders"
+    assert _engine(spark, SF_ORACLE).sql(q).collect()[0].n == want
+    register_tables(spark, SF_SMOKE)
+    assert _engine(spark, SF_ORACLE).sql(q).collect()[0].n == want
+
+
+def test_stored_entry_runs_after_session_restart():
+    """A stored-hits entry built in a stopped session must not serve
+    that session's DataFrame to the next one.  Runs in a subprocess so
+    the suite's shared session survives."""
+    import subprocess
+    import sys
+    import textwrap
+
+    script = textwrap.dedent(
+        f"""
+        from clickhouse_is_a_free_analytics_dbms_for_big_data__spark import get_session
+        from clickhouse_is_a_free_analytics_dbms_for_big_data__spark.queries import hits_q
+
+        counts = []
+        for _ in range(2):
+            spark = get_session(app_name="restart", master="local[1]",
+                                shuffle_partitions=1)
+            counts.append(hits_q.hits_q13_stored(spark, {SF_SMOKE!r}).count())
+            spark.stop()
+        assert counts[0] == counts[1], counts
+        print("OK", counts)
+        """
+    )
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, SPARK_GRAFT_DRIVER_MEM="1g")
+    env["PYTHONPATH"] = os.pathsep.join(
+        p for p in (repo, env.get("PYTHONPATH")) if p
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", script], cwd=repo, env=env,
+        capture_output=True, text=True, timeout=600,
+    )
+    assert out.returncode == 0 and "OK" in out.stdout, out.stderr[-3000:]

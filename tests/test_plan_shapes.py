@@ -414,10 +414,9 @@ def test_stored_hits_q13_decodes_as_projection(spark):
 
 
 def test_stored_hits_rebuild_fingerprint_tracks_source_mtime(spark, tmp_path):
-    """The store's rebuild signature includes the source's newest
-    mtime, so a REGENERATED events.parquet of identical byte size
-    still triggers a rebuild in a fresh process (the in-process memo
-    is intentionally free; this guards the on-disk marker)."""
+    """The store's on-disk rebuild marker carries the source's
+    signature (mtime_ns, size), so a REGENERATED events.parquet of
+    identical byte size still triggers a rebuild."""
     import json
     import os
     import shutil
@@ -435,9 +434,8 @@ def test_stored_hits_rebuild_fingerprint_tracks_source_mtime(spark, tmp_path):
     # simulate source regeneration at the same byte size: bump mtime
     st = os.stat(ev)
     os.utime(ev, (st.st_atime + 5, st.st_mtime + 5))
-    # new process = empty memo
-    hits_q._STORE_READY.discard(path)
     path2 = hits_q.ensure_hits_stored(spark, src)
     meta2 = json.load(open(os.path.join(path2, "_HITS_STORE_META")))
-    assert meta1[:2] == meta2[:2]          # version + size unchanged
-    assert meta1[2] != meta2[2], "mtime change must force a rebuild"
+    assert meta1[0] == meta2[0]            # projection version unchanged
+    assert meta1[1][1] == meta2[1][1]      # source size unchanged
+    assert meta1[1][0] != meta2[1][0], "mtime change must force a rebuild"

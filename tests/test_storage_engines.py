@@ -250,11 +250,7 @@ def test_lc_dict_map_and_decode_expr(spark, tmp_path):
     )
     assert via_expr == via_join
     assert dict(via_expr)[1] == "it's" and dict(via_expr)[2] == "a\\b"
-    from clickhouse_is_a_free_analytics_dbms_for_big_data__spark.sources import (
-        mergetree as _mt,
-    )
-
-    _mt._LC_MAP_CACHE.pop((path, "s"))
+    # the guard holds for a dictionary already memoized under a larger cap
     with _pytest.raises(ValueError):
         lc_dict_map(spark, path, "s", max_entries=2)
 
