@@ -133,6 +133,15 @@ class TableDef:
     block_sizes: list = field(default_factory=list)
     row_count: int = 0
 
+    def merge_columns(self) -> list[tuple[str, str]]:
+        """Stored (name, type) columns for ``sources.mergetree.merge_rule``:
+        the Spark type, or a state column's ``AggregateFunction(…)`` type."""
+        agg = lambda c: c.ch_type.startswith("AggregateFunction(")  # noqa: E731
+        return [
+            (c.name, c.ch_type if agg(c) else c.spark_type)
+            for c in self.columns if not c.is_alias
+        ]
+
 
 def _render_type(toks: list[Token]) -> str:
     """Re-render a CH type token list canonically: ``Array(UInt8)``,
@@ -2058,32 +2067,17 @@ def _tag_part(
     )
 
 
-def _retag_parts(tdef: TableDef, keep: set[str] = frozenset()) -> None:
+def _retag_parts(tdef: TableDef) -> None:
     """After a merge renamed parts, recompute every row's ``__part``
-    from the current per-partition part list.  Rows belonging to parts
-    in ``keep`` (skipped by the merge selector) keep their tag."""
+    from the current per-partition part list."""
     if tdef.raw is None:
         return
-    from pyspark.sql import functions as F
-
     raw = tdef.raw
-    kept_raw = None
-    if keep and "__part" in raw.columns:
-        _in_keep = F.coalesce(F.col("__part").isin(*keep), F.lit(False))
-        kept_raw = raw.filter(_in_keep)
-        raw = raw.filter(~_in_keep)
     for hidden in ("__part", "_part"):
         if hidden in raw.columns:
             raw = raw.drop(hidden)
-    pmap = {
-        p["partition"]: p["name"]
-        for p in tdef.parts
-        if p["active"] and p["name"] not in keep
-    }
-    retagged = _tag_part(tdef, raw, pmap)
-    if kept_raw is not None:
-        retagged = kept_raw.unionByName(retagged)
-    tdef.raw = retagged
+    pmap = {p["partition"]: p["name"] for p in tdef.parts if p["active"]}
+    tdef.raw = _tag_part(tdef, raw, pmap)
 
 
 def _track_insert_parts(
@@ -2153,18 +2147,13 @@ def _track_insert_parts(
     return pmap
 
 
-def merge_parts(tdef: TableDef, keep: set[str] = frozenset()) -> None:
-    """OPTIMIZE's part bookkeeping: merge the selected active parts
-    within each partition into one (level = max+1); parts in ``keep``
-    stay untouched (MergeTreeDataMerger)."""
+def merge_parts(tdef: TableDef) -> None:
+    """OPTIMIZE's part bookkeeping: merge the active parts within each
+    partition into one (level = max+1; MergeTreeDataMerger)."""
     by_part: dict[str, list[dict]] = {}
-    kept_parts: list[dict] = []
     for p in tdef.parts:
-        if p["name"] in keep:
-            kept_parts.append(p)
-        else:
-            by_part.setdefault(p["partition"], []).append(p)
-    merged: list[dict] = kept_parts
+        by_part.setdefault(p["partition"], []).append(p)
+    merged: list[dict] = []
     for partition, ps in sorted(by_part.items()):
         if len(ps) == 1:
             merged.append(ps[0])
@@ -2756,14 +2745,12 @@ def _exists(engine, tokens: list[Token]) -> DataFrame:
 
 
 def _optimize(engine, tokens: list[Token]) -> None:
-    """OPTIMIZE TABLE t — run the engine's merge transform eagerly
-    (InterpreterOptimizeQuery; merge semantics per
-    DataStreams/*SortedBlockInputStream.h)."""
-    from ..sources.mergetree import (
-        compact_collapsing,
-        compact_replacing,
-        compact_summing,
-    )
+    """OPTIMIZE TABLE t — merge every active part of each partition
+    with the engine's merge rule, eagerly (InterpreterOptimizeQuery;
+    the rule a FINAL read runs, ``sources.mergetree.merge_rule``)."""
+    from pyspark.sql import functions as F
+
+    from ..sources.mergetree import key_columns, merge_rule
 
     i = 1
     assert tokens[i].is_kw("TABLE")
@@ -2771,71 +2758,26 @@ def _optimize(engine, tokens: list[Token]) -> None:
     tdef = engine.tables.get(name)
     if tdef is None:
         raise ValueError(f"OPTIMIZE on unknown table {name!r}")
-    view = engine.table_views.get(name, _view_of(name))
-    df = engine.spark.table(view)
-    # OPTIMIZE merges every active part of the partition (the
-    # aggressive selectPartsToMerge path); no parts are skipped
-    keep_names: set[str] = set()
-    keep_df = None
-    if "_part" in df.columns:
-        df = df.drop("_part")  # virtual column, not merge input
     meta = tdef.meta
-    pk = [c for c in meta.primary_key if c in df.columns]
-    if not pk:
+    columns = tdef.merge_columns()
+    if not key_columns(meta.primary_key, columns):
         return None
-    if tdef.engine == "ReplacingMergeTree":
-        df = compact_replacing(df, pk, meta.version_col)
-    elif tdef.engine == "SummingMergeTree":
-        from .translate import summing_parts
-
-        metrics, maps = summing_parts(tdef, meta)
-        df = compact_summing(
-            df, pk, metrics, maps=[(ks, vs) for ks, vs in maps]
-        )
-    elif tdef.engine == "CollapsingMergeTree" and meta.sign_col:
-        df = compact_collapsing(df, pk, meta.sign_col)
-    elif tdef.engine == "AggregatingMergeTree":
-        import re as _re
-
-        from .translate import agg_merge_sql
-
-        sel = []
-        for c in tdef.columns:
-            if c.name in pk:
-                sel.append(f"`{c.name}`")
-            else:
-                m = _re.match(r"AggregateFunction\((\w+)", c.ch_type or "")
-                sel.append(
-                    f"{agg_merge_sql(m.group(1) if m else '', c.name)} "
-                    f"AS `{c.name}`"
-                )
-        df.createOrReplaceTempView(f"__opt_{view}")
-        df = engine.spark.sql(
-            f"SELECT {', '.join(sel)} FROM __opt_{view} "
-            f"GROUP BY {', '.join(f'`{k}`' for k in pk)}"
-        ).select(*[f"`{c.name}`" for c in tdef.columns])
-    else:
+    compact = merge_rule(meta, columns).compact
+    if compact is None:
         # plain MergeTree: merge changes layout, not rows
-        merge_parts(tdef, keep_names)
-        _retag_parts(tdef, keep_names)
+        merge_parts(tdef)
+        _retag_parts(tdef)
         _publish(engine, tdef)
         return None
+    view = engine.table_views.get(name, _view_of(name))
     # a merge materializes current defaults into the merged part
-    if keep_df is not None:
-        tdef.raw = (
-            keep_df.withColumnRenamed("_part", "__part")
-            .unionByName(df, allowMissingColumns=True)
-            .localCheckpoint(eager=True)
-        )
-    else:
-        tdef.raw = df.localCheckpoint(eager=True)
-    merge_parts(tdef, keep_names)
+    df = compact(engine.spark.table(view).select(*[f"`{c}`" for c, _ in columns]))
+    tdef.raw = df.localCheckpoint(eager=True)
+    merge_parts(tdef)
     if tdef.parts:
-        # compaction may have dropped rows (Replacing dedup, Collapsing
+        # the merge may have dropped rows (Replacing dedup, Collapsing
         # cancellation, Summing/Aggregating group-merge): refresh each
         # merged part's row count from the actual merged data
-        from pyspark.sql import functions as F
-
         dcol = tdef.meta.date_col
         if dcol is not None and not any(
             c.name == dcol
@@ -2856,14 +2798,11 @@ def _optimize(engine, tokens: list[Token]) -> None:
             counts = {"all": df.count()}
         kept = []
         for p in tdef.parts:
-            if p["name"] in keep_names:
-                kept.append(p)  # untouched by this merge
-                continue
             rows = counts.get(p["partition"], 0)
             if rows:
                 p["rows"] = rows
                 p["marks"] = (rows + 8191) // 8192
                 kept.append(p)
         tdef.parts = kept
-    _retag_parts(tdef, keep_names)
+    _retag_parts(tdef)
     _publish(engine, tdef)

@@ -22,10 +22,11 @@ Clause rewrites:
 - SAMPLE k [OFFSET m] → deterministic hash-range predicate over the
   table's registered sampling key: a Knuth multiplicative hash into
   [0, 2^32), cut at k (MergeTreeDataSelectExecutor.cpp:253-270).
-- FINAL → ReplacingMergeTree latest-version row per primary key, and
-  ANY JOIN → one right row per join key: both through
+- FINAL → the engine's merge at read time, the rule OPTIMIZE runs
+  (``sources.mergetree.merge_rule``: Replacing, Summing, Collapsing,
+  Aggregating); ANY JOIN → one right row per join key through
   ``sources.mergetree.winner_per_key_sql``, the row_number window that
-  OPTIMIZE and the Join engine share.
+  Replacing's merge and the Join engine share.
 - ARRAY JOIN / LEFT ARRAY JOIN / arrayJoin() → LATERAL VIEW
   posexplode[_outer]; extra lockstep arrays via element_at at the
   shared position (IColumn::replicate semantics).
@@ -55,7 +56,7 @@ from .functions_map import (
     foreach_combinator,
     if_combinator,
 )
-from ..sources.mergetree import winner_per_key_sql
+from ..sources.mergetree import merge_rule, winner_per_key_sql
 from .lexer import Token, tokenize
 
 _JOIN_KINDS = {"INNER", "LEFT", "RIGHT", "FULL", "CROSS", "OUTER"}
@@ -1263,8 +1264,20 @@ def _translate_select_inner(tokens: list[Token], ctx: Ctx) -> str:
                 f"{ctx.gensym('ajh')}"
             )
             ctx.current_from_sql = from_sql
+    # the ARRAY JOIN clause applies to the left side before any JOIN
+    # (the reference's pipeline order), and Spark takes a LATERAL VIEW
+    # only after the whole join tree: fold it into the left relation,
+    # under the name the query qualifies left columns with
+    if joins and lateral:
+        from_sql = (
+            f"(SELECT * FROM {from_sql}{lateral}) "
+            f"`{_from_qualifier(from_toks) or ctx.gensym('ajl')}`"
+        )
+        ctx.current_from_sql = from_sql
+        lateral = ""
     # independent arrayJoin() calls: one lateral view each (cartesian
-    # replication, matching repeated FunctionArrayJoin execution)
+    # replication, matching repeated FunctionArrayJoin execution),
+    # evaluated after any JOIN like the rest of the select list
     for alias, arg_toks in array_join_indep:
         expr_sql = _rewrite(arg_toks, ctx)
         _ip = ctx.gensym('ajpos')
@@ -1884,7 +1897,7 @@ def _translate_select_inner(tokens: list[Token], ctx: Ctx) -> str:
         group_sub = _rewrite_list(g_toks, ctx)
         h_toks = aj_subst(_substitute(having_toks, sub_aliases))
         having_sub = _boolify(h_toks, _rewrite(h_toks, ctx))
-        sub = f"SELECT {group_sub}\nFROM {from_sql}{lateral}{join_sql}"
+        sub = f"SELECT {group_sub}\nFROM {from_sql}{join_sql}{lateral}"
         sub_where = list(where_parts)
         if gb_flagged and "__gb_ok" not in sub_where:
             sub_where.append("__gb_ok")  # passing groups among admitted keys
@@ -1993,7 +2006,7 @@ def _translate_select_inner(tokens: list[Token], ctx: Ctx) -> str:
         # (FilterBlockInputStream; golden 00167's WHERE number IN …
         # yields 61/62-row blocks from 123-row scans)
         _in = (
-            f"SELECT * FROM {from_sql}{lateral}{join_sql}\nWHERE "
+            f"SELECT * FROM {from_sql}{join_sql}{lateral}\nWHERE "
             + " AND ".join(where_parts)
         )
         from_sql = (
@@ -2029,10 +2042,10 @@ def _translate_select_inner(tokens: list[Token], ctx: Ctx) -> str:
                 f"\nFROM (SELECT *, monotonically_increasing_id() AS __sid0 "
                 f"FROM {from_sql}) "
                 f"{f'`{left_qual}`' if left_qual else '__sidsrc'}"
-                f"{lateral}{join_sql}"
+                f"{join_sql}{lateral}"
             )
         else:
-            sql += f"\nFROM {from_sql}{lateral}{join_sql}"
+            sql += f"\nFROM {from_sql}{join_sql}{lateral}"
     if where_parts:
         sql += "\nWHERE " + " AND ".join(where_parts)
     if group_sql:
@@ -2166,9 +2179,7 @@ def _translate_select_inner(tokens: list[Token], ctx: Ctx) -> str:
             # an ALL join emits several matches per probed left row in
             # build order — the golden corpus's right sides are
             # ascending streams, so the output ordinals break the tie
-            _sid_keys += [
-                str(k + 1) for k in range(len(select_sql_items))
-            ]
+            _sid_keys += _sortable_ordinals(sql, len(select_sql_items), ctx)
         sql += "\nORDER BY " + ", ".join(_sid_keys)
     elif (
         ctx.select_depth == 1
@@ -2184,9 +2195,9 @@ def _translate_select_inner(tokens: list[Token], ctx: Ctx) -> str:
         # deterministic where Spark's shuffle is not.  The corpus's
         # unordered cases read as all-columns-ascending (probe inputs
         # are ordered streams), so pin that order by ordinal.
-        sql += "\nORDER BY " + ", ".join(
-            str(k + 1) for k in range(len(select_sql_items))
-        )
+        ordinals = _sortable_ordinals(sql, len(select_sql_items), ctx)
+        if ordinals:
+            sql += "\nORDER BY " + ", ".join(ordinals)
     elif (
         ctx.select_depth == 1
         and group_toks
@@ -2631,200 +2642,20 @@ def _render_from(toks: list[Token], ctx: Ctx) -> tuple[str, str | None]:
     return sql, name
 
 
-def agg_merge_sql(fn: str, col: str) -> str:
-    """Merge expression for one AggregateFunction(fn, ...) state column
-    (AggregatingSortedBlockInputStream.h merges states per PK; state
-    schemas per functions/state.py)."""
-    f = fn.lower()
-    qc = f"`{col}`"
-    if f in ("uniq", "uniqhll12", "uniqcombined"):
-        return f"hll_union_agg({qc})"
-    if f in ("sum", "count"):
-        return f"sum({qc})"
-    if f == "max" or f == "argmax":
-        return f"max({qc})"
-    if f == "avg":
-        return f"named_struct('sum', sum({qc}.sum), 'cnt', sum({qc}.cnt))"
-    if f in ("grouparray", "groupuniqarray", "quantileexact"):
-        return f"flatten(collect_list({qc}))"
-    # min / any / anyLast / argMin and ordinary columns: deterministic
-    # single value (the reference keeps the first-seen row's value)
-    return f"min({qc})"
-
-
 def _final_subquery(name: str, ctx: Ctx) -> str:
-    """FINAL = merge-on-read dedup (CollapsingFinalBlockInputStream.h:14,
-    ReplacingSortedBlockInputStream.h:15); for AggregatingMergeTree it
-    merges AggregateFunction states per PK (AggregatingSortedBlockInputStream.h)
-    using the CREATE TABLE column types."""
+    """FINAL = the engine's merge applied at read time — the same rule
+    OPTIMIZE TABLE runs (``sources.mergetree.merge_rule``), over the
+    CREATE TABLE columns when there are some, else the view's schema."""
     meta = ctx.table_meta.get(name)
     if meta is None or not meta.primary_key:
         raise ValueError(f"FINAL needs registered primary_key for table {name!r}")
-    pk = ", ".join(meta.primary_key)
-    rn = ctx.gensym("rn")
     tdef = ctx.tabledef_of(name) if ctx.tabledef_of is not None else None
-    if meta.engine.startswith("Aggregating") and tdef is not None:
-        import re as _re
-
-        sel = []
-        for c in tdef.columns:
-            if c.name in meta.primary_key:
-                sel.append(f"`{c.name}`")
-                continue
-            m = _re.match(r"AggregateFunction\((\w+)", c.ch_type or "")
-            fn = m.group(1) if m else ""
-            sel.append(f"{agg_merge_sql(fn, c.name)} AS `{c.name}`")
-        return (
-            f"(SELECT {', '.join(sel)} FROM {name} GROUP BY {pk} "
-            f"ORDER BY {pk})"
-        )
-    if meta.engine == "SummingMergeTree" and tdef is not None:
-        return _summing_final_sql(name, meta, tdef, ctx)
-    if meta.engine.startswith("Collapsing") and meta.sign_col:
-        # keep latest row of keys whose sign-sum is positive
-        return (
-            f"(SELECT * EXCEPT ({rn}, {rn}_s) FROM (SELECT *, row_number() OVER "
-            f"(PARTITION BY {pk} ORDER BY {meta.sign_col} DESC) AS {rn}, "
-            f"sum({meta.sign_col}) OVER (PARTITION BY {pk}) AS {rn}_s FROM {name}) "
-            f"WHERE {rn} = 1 AND {rn}_s > 0)"
-        )
-    return winner_per_key_sql(
-        name,
-        list(meta.primary_key),
-        ctx.schema_of_sql(name) if ctx.schema_of_sql is not None else None,
-        [meta.version_col] if meta.version_col else [],
+    columns = (
+        tdef.merge_columns() if tdef is not None
+        else ctx.schema_of_sql(name) if ctx.schema_of_sql is not None
+        else None
     )
-
-
-_SUM_NUM = {"TINYINT", "SMALLINT", "INT", "BIGINT", "FLOAT", "DOUBLE"}
-_SUM_ARR_INT = {
-    "ARRAY<TINYINT>", "ARRAY<SMALLINT>", "ARRAY<INT>", "ARRAY<BIGINT>"
-}
-_SUM_ARR = _SUM_ARR_INT | {"ARRAY<FLOAT>", "ARRAY<DOUBLE>"}
-
-
-def summing_parts(tdef, meta) -> tuple[list[str], list[tuple[list[str], list[str]]]]:
-    """SummingMergeTree merge inputs: (metric columns, *Map nested
-    groups as (key cols, value cols)).  Map membership follows
-    SummingSortedBlockInputStream maps_to_sum: the first member and
-    any name ending ID/Key/Type are keys (non-float integers), the
-    rest are summed values; any violation rejects the whole group."""
-    pk = set(meta.primary_key)
-    groups: dict[str, list] = {}
-    for c in tdef.columns:
-        if "." in c.name:
-            groups.setdefault(c.name.split(".", 1)[0], []).append(c)
-    maps: list[tuple[list[str], list[str]]] = []
-    for prefix, g in groups.items():
-        if not prefix.endswith("Map") or len(g) < 2:
-            continue
-        if any(c.name in pk for c in g):
-            continue
-        keys: list[str] = []
-        vals: list[str] = []
-        ok = True
-        for idx, c in enumerate(g):
-            st = (c.spark_type or "").upper()
-            last = c.name.split(".")[-1]
-            if idx == 0 or last.endswith(("ID", "Key", "Type")):
-                if st not in _SUM_ARR_INT:
-                    ok = False
-                    break
-                keys.append(c.name)
-            else:
-                if st not in _SUM_ARR:
-                    ok = False
-                    break
-                vals.append(c.name)
-        if ok and vals:
-            maps.append((keys, vals))
-    map_cols = {c for ks, vs in maps for c in ks + vs}
-    if meta.sum_cols:
-        metrics = [
-            c.name for c in tdef.columns if c.name in meta.sum_cols
-        ]
-    else:
-        metrics = [
-            c.name
-            for c in tdef.columns
-            if c.name not in pk
-            and c.name not in map_cols
-            and (c.spark_type or "").upper() in _SUM_NUM
-        ]
-    return metrics, maps
-
-
-def _summing_final_sql(name: str, meta, tdef, ctx: Ctx) -> str:
-    """FINAL over a SummingMergeTree: the on-the-fly summing merge —
-    metric sums, first-row values, and *Map composite-key map merges
-    (key tuples sorted, all-zero value entries dropped) per PK."""
-    metrics, maps = summing_parts(tdef, meta)
-    pk = list(meta.primary_key)
-    map_cols = {c for ks, vs in maps for c in ks + vs}
-    elem_t = {}
-    for c in tdef.columns:
-        st = (c.spark_type or "").upper()
-        if st.startswith("ARRAY<"):
-            elem_t[c.name] = st[6:-1]
-    inner = [f"`{c}`" for c in pk]
-    inner += [f"sum(`{m}`) AS `{m}`" for m in metrics]
-    inner += [
-        f"first(`{c.name}`) AS `{c.name}`"
-        for c in tdef.columns
-        if c.name not in pk and c.name not in metrics
-        and c.name not in map_cols and not c.is_virtual
-    ]
-    merged_of: dict[int, str] = {}
-    for gi, (keys, vals) in enumerate(maps):
-        fields = ", ".join(
-            [f"element_at(`{c}`, __i) AS k{j}" for j, c in enumerate(keys)]
-            + [f"element_at(`{c}`, __i) AS v{j}" for j, c in enumerate(vals)]
-        )
-        inner.append(
-            f"flatten(collect_list(transform(sequence(1, size(`{keys[0]}`)), "
-            f"__i -> struct({fields})))) AS `__map{gi}`"
-        )
-        nk = len(keys)
-        match = " AND ".join(f"e.k{j} = __k.k{j}" for j in range(nk))
-        keysel = ", ".join(f"e.k{j} AS k{j}" for j in range(nk))
-        keyout = ", ".join(f"__k.k{j} AS k{j}" for j in range(nk))
-        zero = " AND ".join(f"s.v{j} = 0" for j in range(len(vals)))
-        sums = ", ".join(
-            f"aggregate(filter(`__map{gi}`, e -> {match}), "
-            f"CAST(0 AS {elem_t[c]}), (acc, e) -> acc + e.v{j}) AS v{j}"
-            for j, c in enumerate(vals)
-        )
-        merged_of[gi] = (
-            f"filter(transform(array_sort(array_distinct("
-            f"transform(`__map{gi}`, e -> struct({keysel})))), "
-            f"__k -> struct({keyout}, {sums})), s -> NOT ({zero}))"
-        )
-    outer = []
-    for c in tdef.columns:
-        if c.is_virtual:
-            continue
-        if c.name in map_cols:
-            for gi, (keys, vals) in enumerate(maps):
-                if c.name in keys:
-                    outer.append(
-                        f"transform({merged_of[gi]}, s -> s.k{keys.index(c.name)}) "
-                        f"AS `{c.name}`"
-                    )
-                    break
-                if c.name in vals:
-                    outer.append(
-                        f"transform({merged_of[gi]}, s -> s.v{vals.index(c.name)}) "
-                        f"AS `{c.name}`"
-                    )
-                    break
-        else:
-            outer.append(f"`{c.name}`")
-    pk_sql = ", ".join(f"`{c}`" for c in pk)
-    return (
-        f"(SELECT {', '.join(outer)} FROM (SELECT {', '.join(inner)} "
-        f"FROM {name} GROUP BY {pk_sql}) {ctx.gensym('sumf')} "
-        f"ORDER BY {pk_sql})"
-    )
+    return merge_rule(meta, columns).sql(name, True)
 
 
 def _finalize_state_sql(arg: str, ctx: Ctx) -> str:
@@ -3305,6 +3136,20 @@ def _take_clause(tokens: list[Token], i: int) -> tuple[list[Token], int]:
         out.append(t)
         i += 1
     return out, i
+
+
+def _sortable_ordinals(sql: str, n: int, ctx: Ctx) -> list[str]:
+    """Output ordinals 1..n of ``sql`` as ORDER BY keys, less those of
+    columns Spark cannot sort (a Map, alone or nested): such a column
+    never breaks a tie."""
+    schema = (
+        ctx.schema_of_sql(f"({sql})") if ctx.schema_of_sql is not None else None
+    )
+    return [
+        str(k + 1)
+        for k in range(n)
+        if not schema or k >= len(schema) or "map<" not in schema[k][1]
+    ]
 
 
 def _from_qualifier(toks: list[Token]) -> str | None:

@@ -312,6 +312,59 @@ def test_exec_join_on_qualified_by_table_name(eng):
         assert got == want, ch
 
 
+def test_exec_unordered_join_with_map_output(eng, spark):
+    """An unordered join pins its output order by the left scan ordinal
+    and then the output columns; a Map output column cannot be sorted,
+    so it stays out of the tie keys instead of failing analysis."""
+    spark.createDataFrame(
+        [(1, {"a": 1}), (2, {"b": 2})], "k INT, m MAP<STRING, INT>"
+    ).createOrReplaceTempView("jm_l")
+    spark.createDataFrame(
+        [(1, "y"), (1, "x"), (3, "z")], "k INT, s STRING"
+    ).createOrReplaceTempView("jm_r")
+    rows = eng.sql(
+        "SELECT k, m, s FROM jm_l ALL INNER JOIN jm_r USING k"
+    ).collect()
+    assert [tuple(r) for r in rows] == [(1, {"a": 1}, "x"), (1, {"a": 1}, "y")]
+    rows = eng.sql(
+        "SELECT k, m, s FROM jm_l ANY LEFT JOIN jm_r USING k"
+    ).collect()
+    # ANY keeps the min right row; a miss reads the type default
+    assert [tuple(r) for r in rows] == [(1, {"a": 1}, "x"), (2, {"b": 2}, "")]
+    # no output column is sortable: no ORDER BY at all
+    rows = eng.sql("SELECT m FROM jm_l ALL INNER JOIN jm_r USING k").collect()
+    assert [tuple(r) for r in rows] == [({"a": 1},), ({"a": 1},)]
+
+
+def test_exec_array_join_with_join(eng, spark):
+    """ARRAY JOIN (clause or arrayJoin()) in a SELECT that also JOINs:
+    the left rows explode, then join; an empty array drops its row."""
+    spark.createDataFrame(
+        [(1, 100, [1, 2]), (2, 200, [3]), (3, 300, [])],
+        "k INT, a INT, arr ARRAY<INT>",
+    ).createOrReplaceTempView("ajj_l")
+    spark.createDataFrame(
+        [(1, "p"), (2, "q"), (2, "r"), (3, "s")], "k INT, s STRING"
+    ).createOrReplaceTempView("ajj_r")
+    want = [(1, 1, "p"), (1, 2, "p"), (2, 3, "q"), (2, 3, "r")]
+    for ch in (
+        "SELECT l.k, e, s FROM ajj_l AS l ARRAY JOIN arr AS e "
+        "ALL INNER JOIN ajj_r USING k",
+        "SELECT l.k, arrayJoin(l.arr) AS e, s FROM ajj_l AS l "
+        "ALL INNER JOIN ajj_r USING k",
+        "SELECT ajj_l.k, arrayJoin(ajj_l.arr) AS e, s FROM ajj_l "
+        "ALL INNER JOIN ajj_r USING k",
+    ):
+        assert [tuple(r) for r in eng.sql(ch).collect()] == want, ch
+    rows = eng.sql(
+        "SELECT l.a, e, s FROM ajj_l AS l ARRAY JOIN arr AS e "
+        "ALL INNER JOIN ajj_r USING k ORDER BY e DESC, s"
+    ).collect()
+    assert [tuple(r) for r in rows] == [
+        (200, 3, "q"), (200, 3, "r"), (100, 2, "p"), (100, 1, "p"),
+    ]
+
+
 def test_exec_sample_deterministic(eng):
     a = eng.sql("SELECT count() FROM events SAMPLE 0.3").collect()[0][0]
     b = eng.sql("SELECT count() FROM events SAMPLE 0.3").collect()[0][0]
@@ -368,19 +421,6 @@ def test_exec_union_all(eng):
     assert sorted(r["x"] for r in rows) == [1, 2]
 
 
-def test_collapsing_final_excludes_helpers():
-    out = translate_sql(
-        "SELECT * FROM ct FINAL",
-        table_meta={
-            "ct": TableMeta(
-                primary_key=("id",), sign_col="sign", engine="CollapsingMergeTree"
-            )
-        },
-    )
-    # both the row_number and the sign-sum helper must be projected away
-    assert "EXCEPT (__rn1, __rn1_s)" in out
-
-
 def test_exec_collapsing_final_star(eng, spark):
     spark.createDataFrame(
         [(1, 1, "a"), (1, -1, "a"), (2, 1, "b"), (3, 1, "c"), (3, -1, "c"), (3, 1, "c2")],
@@ -391,9 +431,12 @@ def test_exec_collapsing_final_star(eng, spark):
         TableMeta(primary_key=("id",), sign_col="sign", engine="CollapsingMergeTree"),
     )
     df = eng.sql("SELECT * FROM ct_adv FINAL")
+    # the merge's helper columns are projected away
     assert df.columns == ["id", "sign", "payload"]
     rows = {r["id"]: r["payload"] for r in df.collect()}
     assert set(rows) == {2, 3}
+    # id 3 has two +1 rows: the max in the tie order (payload DESC) wins
+    assert rows[3] == "c2"
 
 
 def test_exec_to_start_of_five_minute(eng):
