@@ -195,8 +195,9 @@ def main() -> None:
             # non-hits headline ops at sf1 (r11): pipeline dedup/
             # curation at 50k docs + ASOF/funnel/sessionize at 1M
             # events.  The plan cache is cleared per run so entries
-            # that do eager work at build time (pl_dup_clusters' CC
-            # loop) pay their full cost in every timed run.
+            # that do eager work at build time (pl_dup_clusters'
+            # connected components) pay their full cost in every timed
+            # run.
             for name in _sf1.DOC_QUERIES + _sf1.EVENT_OPS:
                 fn = qmap[name]
 

@@ -1833,12 +1833,14 @@ def _ingest_df(
     # reference other inserted or defaulted columns (ColumnDefault.h:
     # missing = evaluated default, never NULL; ALIAS is never stored)
     view = engine.table_views.get(name, _view_of(name))
+    # source columns map to ``subset`` BY POSITION: renamed positionally,
+    # since Spark's generated names can repeat (two equal SELECT items)
+    new_df = new_df.toDF(*(f"_c{i}" for i in range(len(new_df.columns))))
     new_df.createOrReplaceTempView(f"__ins_{view}")
     sel = []
-    src_cols = new_df.columns
     for c in tdef.columns:
         if c.name in subset:
-            src = f"`{src_cols[subset.index(c.name)]}`"
+            src = f"`_c{subset.index(c.name)}`"
             v = c.wrapper.format(v=src) if c.wrapper else src
             base_ch = (c.ch_type or "").removeprefix("Nullable(").removesuffix(")") \
                 if (c.ch_type or "").startswith("Nullable(") else (c.ch_type or "")

@@ -666,12 +666,14 @@ from ..pipeline import curation as CU  # noqa: E402
     SELECT root AS cluster_root, COUNT(*) AS cluster_size
     FROM comp GROUP BY root ORDER BY cluster_root
     """,
-    doc="Duplicate-GROUP clustering: connected components (iterative "
-    "min-label propagation, one shuffle per round, localCheckpoint "
-    "lineage truncation) over an exact-recall shingle-inverted-index "
-    "candidate join; the planted pair graph is a path, so groups "
-    "exist only through transitive closure. Oracle: brute-force "
-    "Jaccard + recursive CTE.",
+    doc="Duplicate-GROUP clustering: connected components (min-label "
+    "propagation with pointer jumping; an edge list within the broadcast "
+    "threshold and a measured 3M-edge cap runs in one process, a larger "
+    "one as distributed rounds "
+    "with localCheckpoint lineage truncation) over an exact-recall "
+    "shingle-inverted-index candidate join; the planted pair graph is "
+    "a path, so groups exist only through transitive closure. Oracle: "
+    "brute-force Jaccard + recursive CTE.",
     tags=("pipeline", "dedup"),
 )
 @_plan_cache

@@ -36,6 +36,14 @@ def sized_shuffle_partitions(total_input_bytes: int, cpus: int) -> int:
     return int(max(max(cpus // 4, 1), min(by_size, 32768)))
 
 
+def fits_broadcast(spark: SparkSession, nbytes: int) -> bool:
+    """Whether ``nbytes`` is within ``spark.sql.autoBroadcastJoinThreshold``:
+    Spark's own bound under which one side of a join is shipped whole
+    (-1 disables it, so nothing fits)."""
+    conf = spark._jsparkSession.sessionState().conf()
+    return nbytes <= conf.autoBroadcastJoinThreshold()
+
+
 def dir_size_bytes(path: str) -> int:
     """Recursive on-disk size of a dataset directory (or file)."""
     if os.path.isfile(path):

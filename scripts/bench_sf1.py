@@ -61,7 +61,9 @@ QUERIES = [
 
 # pipeline operators at 10x documents (50k docs): the dedup/curation
 # scale story measured, not asserted.  pl_dup_clusters sizes itself
-# from count(documents) (4,000 windows / ~3.5k-edge graph here);
+# from count(documents) (4,000 windows / ~3.5k-edge graph here, well
+# within the broadcast threshold, so its connected components run in
+# one process);
 # contamination sweeps 515 eval docs against the full corpus.
 DOC_QUERIES = [
     "pl_exact_dedup",
@@ -193,8 +195,8 @@ def main() -> None:
         runs.sort()
         timings[name] = round(runs[2], 4)
     for name in DOC_QUERIES:
-        # _plan_cache memoizes the built DataFrame, and the CC loop in
-        # pl_dup_clusters runs its iterations at BUILD time (eager
+        # _plan_cache memoizes the built DataFrame, and pl_dup_clusters
+        # computes its connected components at BUILD time (eager
         # localCheckpoint) — clear the cache so every timed run pays
         # the full build + execute cost
         fn = qmap[name]

@@ -1051,6 +1051,25 @@ def test_replicated_dedup_no_block_collect(eng, monkeypatch):
     eng.execute("DROP TABLE rdedup")
 
 
+def test_insert_select_maps_columns_by_position(eng):
+    """INSERT … SELECT fills the target columns by position, also when
+    two SELECT items are the same expression and so share Spark's
+    generated column name."""
+    eng.execute("DROP TABLE IF EXISTS ins_pos")
+    eng.execute("CREATE TABLE ins_pos (a UInt32, b UInt32) ENGINE = Memory")
+    eng.execute(
+        "INSERT INTO ins_pos SELECT toUInt32(number), toUInt32(number) "
+        "FROM system.numbers LIMIT 3"
+    )
+    eng.execute(
+        "INSERT INTO ins_pos (b, a) SELECT toUInt32(number + 7), "
+        "toUInt32((number + 7) * 10) FROM system.numbers LIMIT 1"
+    )
+    got = eng.sql("SELECT a, b FROM ins_pos").collect()
+    assert sorted(tuple(r) for r in got) == [(0, 0), (1, 1), (2, 2), (70, 7)]
+    eng.execute("DROP TABLE ins_pos")
+
+
 def test_quantile_scale_guard_modes(eng):
     """SET approx_quantiles = 1 routes the bit-exact quantile family
     (collect_list -> reservoir Arrow UDF, unbounded per-group memory)

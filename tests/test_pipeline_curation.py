@@ -4,6 +4,10 @@ PII scrub, repetition scoring, sequence packing."""
 
 from __future__ import annotations
 
+import contextlib
+import random
+
+import pytest
 from pyspark.sql import functions as F
 
 from clickhouse_is_a_free_analytics_dbms_for_big_data__spark.pipeline import (
@@ -30,15 +34,134 @@ def test_connected_components_transitive(spark):
     assert got == {(1, 4), (10, 3), (20, 2)}
 
 
+@contextlib.contextmanager
+def _broadcast_off(spark):
+    """Force the distributed connected-components round loop."""
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        yield
+    finally:
+        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+
+
+def _is_local(df) -> bool:
+    """The in-process path returns a local relation, not a checkpoint."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return "LocalTableScan" in plan
+
+
 def test_connected_components_long_path(spark):
     # a 12-node path needs >= 11 propagation rounds worst case; the
-    # label-sum convergence check must not stop early
+    # label-sum convergence check must not stop early — on both paths
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(100, 112)], "id_a long, id_b long"
     )
-    rows = CL.connected_components(pairs).collect()
-    assert {r.label for r in rows} == {100}
-    assert len(rows) == 13
+    local = CL.connected_components(pairs)
+    with _broadcast_off(spark):
+        dist = CL.connected_components(pairs)
+    assert _is_local(local) and not _is_local(dist)
+    for out in (local, dist):
+        rows = out.collect()
+        assert {r.label for r in rows} == {100}
+        assert len(rows) == 13
+
+
+def test_connected_components_edge_cap(spark, monkeypatch):
+    # above the measured edge cap the rounds run, whatever the
+    # broadcast threshold allows
+    pairs = spark.createDataFrame(
+        [(1, 2), (2, 3), (7, 8)], "id_a long, id_b long"
+    )
+    monkeypatch.setattr(CL, "_LOCAL_MAX_EDGES", 3)
+    assert _is_local(CL.connected_components(pairs))
+    monkeypatch.setattr(CL, "_LOCAL_MAX_EDGES", 2)
+    dist = CL.connected_components(pairs)
+    assert not _is_local(dist)
+    assert {tuple(r) for r in dist.collect()} == {
+        (1, 1), (2, 1), (3, 1), (7, 7), (8, 7)
+    }
+
+
+def test_connected_components_max_iter_raises(spark):
+    # one round cannot settle the 12-node path: the distributed loop
+    # must refuse to return partial labels
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(100, 112)], "id_a long, id_b long"
+    )
+    with _broadcast_off(spark), pytest.raises(
+        RuntimeError, match="did not converge"
+    ):
+        CL.connected_components(pairs, max_iter=1)
+
+
+def _random_graph(rng: random.Random) -> list[tuple[int, int]]:
+    """Disjoint components of every shape on separate id ranges:
+    paths up to 20 nodes, stars, cycles, duplicate and reversed edges,
+    self-loops, and nodes whose only edge is a self-loop."""
+    edges: list[tuple[int, int]] = []
+    base = rng.randrange(0, 1000)
+
+    def nodes(n: int) -> list[int]:
+        nonlocal base
+        ids = rng.sample(range(base, base + 3 * n), n)
+        base += 3 * n + rng.randrange(1, 50)
+        return ids
+
+    for n in [20] + [rng.randint(2, 20) for _ in range(4)]:
+        p = nodes(n)
+        edges += list(zip(p, p[1:]))
+    for _ in range(2):
+        hub, *leaves = nodes(rng.randint(2, 9))
+        edges += [(hub, v) for v in leaves]
+    for _ in range(2):
+        c = nodes(rng.randint(3, 10))
+        edges += list(zip(c, c[1:] + c[:1]))
+    edges += [(v, v) for v in nodes(2) + [rng.choice(edges)[0]]]
+    edges += rng.sample(edges, 5)
+    edges += [(b, a) for a, b in rng.sample(edges, 5)]
+    rng.shuffle(edges)
+    return edges
+
+
+def _union_find_labels(edges: list[tuple[int, int]]) -> set[tuple[int, int]]:
+    parent: dict[int, int] = {}
+
+    def find(v: int) -> int:
+        parent.setdefault(v, v)
+        while parent[v] != v:
+            parent[v] = parent[parent[v]]
+            v = parent[v]
+        return v
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {(v, find(v)) for v in parent}
+
+
+@pytest.mark.parametrize(
+    "id_type,seed", [("long", 1), ("int", 2), ("long", None)]
+)
+def test_connected_components_paths_agree(spark, id_type, seed):
+    """The in-process path, the distributed round loop and a pure-Python
+    union-find give the same (node, label) set, and both paths the same
+    schema.  ``seed=None`` is the empty edge list."""
+    edges = [] if seed is None else _random_graph(random.Random(seed))
+    pairs = spark.createDataFrame(edges, f"id_a {id_type}, id_b {id_type}")
+    local = CL.connected_components(pairs)
+    # the in-process result is built from Arrow: no Python worker
+    lineage = local._jdf.queryExecution().toRdd().toDebugString()
+    assert "PythonRDD" not in lineage
+    with _broadcast_off(spark):
+        dist = CL.connected_components(pairs)
+        dist_rows = {tuple(r) for r in dist.collect()}
+    assert _is_local(local) and not _is_local(dist)
+    assert local.schema == dist.schema
+    assert dict(local.dtypes)["node"] == id_type.replace("long", "bigint")
+    want = _union_find_labels(edges)
+    assert {tuple(r) for r in local.collect()} == want
+    assert dist_rows == want
 
 
 def test_shingle_blocking_exact_recall(spark):
