@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from .sql_udfs import register_sql_udfs
-from .translate import DictSpec, TableMeta, translate_sql
+from .translate import _EXACT_HASH_FNS, DictSpec, TableMeta, translate_sql
 
 # AggregateFunctionFactory's registered base names (grep over
 # AggregateFunctions/*.cpp registerFunction calls) — system.functions
@@ -916,7 +916,7 @@ class ChEngine:
             # StorageSystemFunctions.cpp: (name, is_aggregate) — one
             # row per registered function; aggregates flagged 1.  The
             # dialect's registry is the SIMPLE/TEMPLATES/PARAMETRIC
-            # translator maps.
+            # translator maps plus the type-dispatched hash family.
             from .functions_map import PARAMETRIC, SIMPLE, TEMPLATES
 
             # identity-passthrough aggregates (sum/min/max/...) have no
@@ -926,6 +926,7 @@ class ChEngine:
             # dynamically too, they are not registry rows.
             names = sorted(
                 set(SIMPLE) | set(TEMPLATES) | set(PARAMETRIC) | _AGG_BASE
+                | _EXACT_HASH_FNS
             )
             rows = [(n, int(_is_aggregate_fn(n))) for n in names]
             return values(rows, "name, is_aggregate")

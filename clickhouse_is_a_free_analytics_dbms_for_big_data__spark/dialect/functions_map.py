@@ -67,15 +67,8 @@ SIMPLE: dict[str, str] = {
     "varPop": "var_pop",
     "stddevPop": "stddev_pop",
     "covarPop": "covar_pop",
-    # hashing (FunctionsHashing.cpp) — stand-ins: values differ from the
-    # reference (documented; never golden-test hash outputs)
-    "cityHash64": "xxhash64",
-    "sipHash64": "xxhash64",
-    "farmHash64": "xxhash64",
-    "metroHash64": "xxhash64",
-    "halfMD5": "xxhash64",
-    "intHash64": "xxhash64",
-    "intHash32": "hash",
+    # hashing (FunctionsHashing.cpp): the 64-bit family and intHash*
+    # lower bit-exactly by argument type (translate._hash_fn)
     "MD5": "md5",
     "SHA1": "sha1",
     # misc
@@ -722,18 +715,14 @@ def _timing_weighted_q(
 
 def _ch_type_name(typeof_sql: str) -> str:
     """Map Spark's typeof() text to the reference's type names
-    (toTypeName, DataTypeFactory registrations).  Longest-first
-    replacements so 'bigint' rewrites before 'int'; decimal(20,0) is
-    this engine's UInt64 carrier (§1.2 type table)."""
+    (toTypeName, DataTypeFactory registrations) at run time, through
+    the one Spark→CH map (``sources.formats.SPARK_TO_CH``).
+    Longest-first replacements so 'bigint' rewrites before 'int'."""
+    from ..sources.formats import SPARK_TO_CH
+
     t = typeof_sql
-    for frm, to in (
-        ("array<", "Array("), (">", ")"),
-        ("decimal(20,0)", "UInt64"),
-        ("bigint", "Int64"), ("smallint", "Int16"), ("tinyint", "Int8"),
-        ("int", "Int32"), ("double", "Float64"), ("float", "Float32"),
-        ("string", "String"), ("timestamp_ntz", "DateTime"),
-        ("timestamp", "DateTime"), ("date", "Date"), ("boolean", "UInt8"),
-    ):
+    pairs = sorted(SPARK_TO_CH.items(), key=lambda kv: -len(kv[0]))
+    for frm, to in [("array<", "Array("), (">", ")"), *pairs]:
         t = f"replace({t}, '{frm}', '{to}')"
     return t
 

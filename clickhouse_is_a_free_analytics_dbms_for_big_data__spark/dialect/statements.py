@@ -32,6 +32,7 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..sources.formats import ch_type_of_spark
 from .lexer import Token, tokenize
 from .translate import TableMeta, _match_paren, _split_top
 
@@ -637,17 +638,20 @@ def _infer_ch_type(
         # aggregate return types (AggregateFunctionFactory.cpp):
         # sum widens to the 64-bit type of the argument's sign,
         # count/uniq* are UInt64, avg is Float64, min/max/any keep the
-        # argument type; Nullable arguments wrap the result
+        # argument type, groupArray collects it (skipping NULLs);
+        # Nullable arguments wrap the result
         if fname in ("count", "uniq", "uniqexact", "uniqhll12",
                      "uniqcombined"):
             return "UInt64"
         if fname in ("sum", "sumwithoverflow", "avg", "min", "max",
-                     "any", "anylast"):
+                     "any", "anylast", "grouparray", "groupuniqarray"):
             args = _split_top(toks[2:-1], ",")
             at = _infer_ch_type(args[0], cols) if args else None
             if at is None:
                 return None
             base = _strip_nullable(at)
+            if fname.startswith("group"):
+                return f"Array({base})"
             if fname == "avg":
                 res = "Float64"
             elif fname in ("sum", "sumwithoverflow"):
@@ -895,20 +899,9 @@ def _parse_one_column(
             else default_expr_toks
         )
         # the fill rewrites with the PRIOR columns' declared CH types
-        # visible — type-dispatched forms (bit-exact cityHash64 over
-        # UInt64 refs, golden 00253) need them
-        from types import SimpleNamespace
-
-        _fill_td = SimpleNamespace(
-            columns=[
-                SimpleNamespace(name=n, ch_type=t, default_kind="")
-                for n, t in (prior or {}).items()
-            ]
-        )
-        cd.default = _rewrite(
-            toks_f,
-            Ctx(tabledef_of=lambda _n: _fill_td, current_table="__self"),
-        )
+        # as its type lookup — type-dispatched forms (bit-exact
+        # cityHash64 over UInt64 refs, golden 00253) need them
+        cd.default = _rewrite(toks_f, Ctx(from_types=dict(prior or {})))
         if type_toks:
             # explicit type + default expression of a DIFFERENT type:
             # the stored AST wraps the expression in a CAST
@@ -1200,7 +1193,7 @@ def _create(engine, tokens: list[Token]) -> None:
                 ch_type=(
                     _ch_out[k]
                     if k < len(_ch_out) and _ch_out[k]
-                    else _ch_of_spark(f.dataType.simpleString())
+                    else ch_type_of_spark(f.dataType.simpleString())
                 ),
             )
             for k, f in enumerate(df.schema.fields)
@@ -1401,7 +1394,7 @@ def _create(engine, tokens: list[Token]) -> None:
         if cols is None:
             cols = [
                 ColumnDef(f.name, f.dataType.simpleString(),
-                          ch_type=_ch_of_spark(f.dataType.simpleString()))
+                          ch_type=ch_type_of_spark(f.dataType.simpleString()))
                 for f in df.schema.fields
             ]
     elif cols is not None:
@@ -2185,25 +2178,6 @@ def merge_parts(tdef: TableDef) -> None:
 
 # ------------------------------------------------------------- ALTER etc.
 
-_SPARK_TO_CH = {
-    "TINYINT": "Int8", "SMALLINT": "Int16", "INT": "Int32",
-    "BIGINT": "Int64", "FLOAT": "Float32", "DOUBLE": "Float64",
-    "STRING": "String", "DATE": "Date", "TIMESTAMP": "DateTime",
-    "TIMESTAMP_NTZ": "DateTime",
-}
-
-
-def _ch_of_spark(simple: str) -> str:
-    """Best-effort Spark→CH type name (DESCRIBE on tables that were
-    registered directly from parquet, not via CREATE TABLE)."""
-    up = simple.upper()
-    if up.startswith("ARRAY<") and up.endswith(">"):
-        return f"Array({_ch_of_spark(simple[6:-1])})"
-    if up.startswith("DECIMAL"):
-        return "UInt64"  # the one Decimal use: full-range UInt64
-    return _SPARK_TO_CH.get(up, simple)
-
-
 def _tabledef_of(engine, name: str):
     """TableDef for a created table, or one synthesized from the Spark
     schema for directly-registered views."""
@@ -2216,7 +2190,7 @@ def _tabledef_of(engine, name: str):
         ColumnDef(
             f.name,
             f.dataType.simpleString(),
-            ch_type=_ch_of_spark(f.dataType.simpleString()),
+            ch_type=ch_type_of_spark(f.dataType.simpleString()),
         )
         for f in df.schema.fields
     ]

@@ -56,6 +56,7 @@ from .functions_map import (
     foreach_combinator,
     if_combinator,
 )
+from ..sources.formats import ch_type_of_spark
 from ..sources.mergetree import merge_rule, winner_per_key_sql
 from .lexer import Token, tokenize
 
@@ -120,19 +121,20 @@ class Ctx:
     # second arg is the resolved FROM view so the lookup is scoped to
     # the referenced table, not a global first-match scan
     agg_fn_of: object | None = None
-    # resolved FROM target of the SELECT currently being translated
-    # (set by _select after _render_from; save/restored per subquery
-    # by _translate_union)
-    current_table: str | None = None
-    # rendered FROM SQL of the current SELECT — lazy schema probes
-    # (array-typed bare columns for length/empty dispatch)
-    current_from_sql: str | None = None
     # engine session SET values (Settings.h) — seed every SELECT's
     # per-query SETTINGS (join_use_nulls changes join fill semantics)
     session_settings: dict[str, str] = field(default_factory=dict)
     # Callable[[str], list[(col, simple_type)] | None]: analyzed output
-    # schema of a FROM-able SQL fragment (join-defaults substitution)
+    # schema of a FROM-able SQL fragment — called through schema(),
+    # which asks Spark at most once per fragment and statement
     schema_of_sql: object | None = None
+    probes: dict = field(default_factory=dict)
+    # the current SELECT's FROM relations, left first, as (view name,
+    # FROM-subquery (name, CH type) pairs, SQL): the sources of its
+    # column-type lookup (_from_types, built on first use); set per
+    # SELECT and join, save/restored per subquery by _translate_union
+    from_rels: list = field(default_factory=list)
+    from_types: dict | None = None
     # alias name → ORIGINAL CH token list (pre-substitution), so
     # translate-time type inference (toTypeName) can see the CH
     # expression instead of the rendered Spark SQL
@@ -215,6 +217,20 @@ class Ctx:
         self.counter += 1
         return f"__{prefix}{self.counter}"
 
+    @property
+    def current_table(self) -> str | None:
+        """Resolved FROM target (view name) of the current SELECT."""
+        return self.from_rels[0][0] if self.from_rels else None
+
+    def schema(self, sql: str) -> list | None:
+        """Analyzed (name, Spark simple type) pairs of a FROM-able SQL
+        fragment, or None when there is no engine or Spark rejects it."""
+        if self.schema_of_sql is None:
+            return None
+        if sql not in self.probes:
+            self.probes[sql] = self.schema_of_sql(sql)
+        return self.probes[sql]
+
 
 @dataclass
 class DictSpec:
@@ -295,15 +311,13 @@ def translate_sql(
 
 
 def _translate_union(tokens: list[Token], ctx: Ctx) -> str:
-    # scope current_table to this (sub)query: an inner FROM-subquery or
+    # scope the FROM to this (sub)query: an inner FROM-subquery or
     # scalar subquery must not leak its table into the enclosing SELECT
-    prev_table = ctx.current_table
-    prev_from = ctx.current_from_sql
+    prev = (ctx.from_rels, ctx.from_types)
     try:
         return _translate_union_inner(tokens, ctx)
     finally:
-        ctx.current_table = prev_table
-        ctx.current_from_sql = prev_from
+        ctx.from_rels, ctx.from_types = prev
 
 
 def _translate_union_inner(tokens: list[Token], ctx: Ctx) -> str:
@@ -336,6 +350,9 @@ def _translate_union_inner(tokens: list[Token], ctx: Ctx) -> str:
     # complete selects); parenthesize so Spark scopes them per branch
     # instead of attaching a trailing LIMIT to the whole union.
     branch_sqls = [_translate_select(p, ctx) for p in parts]
+    if ctx.select_depth > 0:
+        # a nested union's columns have no one inferred type
+        ctx.out_ch_types = None
     if ctx.select_depth == 0:
         # each branch streams as its own block (Pretty* formats draw
         # one table per block — PrettySpaceBlockOutputStream)
@@ -833,6 +850,11 @@ def _translate_select_inner(tokens: list[Token], ctx: Ctx) -> str:
     _saved_dgb = ctx.dgb_no_merge_col
     ctx.dgb_no_merge_col = None
     from_sql, table_name = _render_from(from_toks, ctx)
+    if from_toks and from_toks[0].text == "(":
+        ctx.from_rels = [(None, _sub_out(ctx), from_sql)]
+    else:
+        ctx.from_rels = [(table_name, None, None)] if table_name else []
+    ctx.from_types = None
     _dgb_col = ctx.dgb_no_merge_col
     ctx.dgb_no_merge_col = _saved_dgb
     # did the LEFT side itself declare WITH TOTALS?  (read before the
@@ -964,7 +986,6 @@ def _translate_select_inner(tokens: list[Token], ctx: Ctx) -> str:
         and limit_by is None
         and not any(t.text == "*" for t in select_toks)
     ):
-        ctx.current_table = table_name
         _gk1 = _split_top(group_toks, ",")[0]
         _gt1 = (_infer_expr_ch_type(_gk1, ctx) or "").split("(")[0]
         if _gt1 in (
@@ -991,8 +1012,6 @@ def _translate_select_inner(tokens: list[Token], ctx: Ctx) -> str:
                     f"(SELECT *, monotonically_increasing_id() AS "
                     f"{_k64_ord} FROM {from_sql}) {ctx.gensym('k64')}"
                 )
-    ctx.current_table = table_name
-    ctx.current_from_sql = from_sql or None
 
     # Nested columns are literal dotted names (`nest.x` — DataTypeNested
     # parallel arrays): fold ident.ident chains matching an actual
@@ -1001,9 +1020,13 @@ def _translate_select_inner(tokens: list[Token], ctx: Ctx) -> str:
     dotted: set[str] = set()
     has_part = False
     if table_name and ctx.columns_of is not None:
-        cols_ = ctx.columns_of(table_name)
-        dotted = {c for c in (cols_ or []) if "." in c}
-        has_part = "_part" in (cols_ or [])
+        if ctx.tabledef_of is not None and ctx.tabledef_of(table_name):
+            cols_ = ctx.columns_of(table_name) or []
+        else:
+            # a view: the names of the probe its type lookup reads
+            cols_ = [c for c, _t in ctx.schema(table_name) or []]
+        dotted = {c for c in cols_ if "." in c}
+        has_part = "_part" in cols_
     # MATERIALIZED/ALIAS columns (ColumnDefault.h) and the _part
     # virtual column: hidden from *, ALIAS references rewritten to
     # their stored expression
@@ -1263,7 +1286,6 @@ def _translate_select_inner(tokens: list[Token], ctx: Ctx) -> str:
                 f"(SELECT *, {', '.join(_hoist_sql)} FROM {from_sql}) "
                 f"{ctx.gensym('ajh')}"
             )
-            ctx.current_from_sql = from_sql
     # the ARRAY JOIN clause applies to the left side before any JOIN
     # (the reference's pipeline order), and Spark takes a LATERAL VIEW
     # only after the whole join tree: fold it into the left relation,
@@ -1273,7 +1295,6 @@ def _translate_select_inner(tokens: list[Token], ctx: Ctx) -> str:
             f"(SELECT * FROM {from_sql}{lateral}) "
             f"`{_from_qualifier(from_toks) or ctx.gensym('ajl')}`"
         )
-        ctx.current_from_sql = from_sql
         lateral = ""
     # independent arrayJoin() calls: one lateral view each (cartesian
     # replication, matching repeated FunctionArrayJoin execution),
@@ -1309,7 +1330,7 @@ def _translate_select_inner(tokens: list[Token], ctx: Ctx) -> str:
                     sel_alias_bodies[al] = body
             cand = join_using & set(sel_alias_bodies)
             if cand:
-                left_schema = ctx.schema_of_sql(from_sql) or []
+                left_schema = ctx.schema(from_sql) or []
                 left_names = {c for c, _t in left_schema}
                 missing = sorted(cand - left_names)
                 if missing:
@@ -1356,23 +1377,22 @@ def _translate_select_inner(tokens: list[Token], ctx: Ctx) -> str:
     # ordinal wrapper below takes it, and the right side must not
     left_qual = _from_qualifier(from_toks) if joins else None
     for j in joins:
-        js, jhint = _render_join(
+        js, jhint, rel = _render_join(
             j, ctx, jdef_subs, left_sql=from_sql, settings=settings,
             qualified_refs=qrefs, left_qual=left_qual,
         )
         join_sql += js
         hint = hint or jhint
-    if (
-        ctx.join_right_totals
-        and not left_had_totals
-        and from_sql
-        and ctx.schema_of_sql is not None
-    ):
+        # joined columns type like the FROM's (the left side wins a
+        # shared name, as a bare reference resolves to it)
+        ctx.from_rels = [*ctx.from_rels, rel]
+        ctx.from_types = None
+    if ctx.join_right_totals and not left_had_totals and from_sql:
         # only the RIGHT side declared WITH TOTALS: the combined totals
         # block is (left type defaults) ⊕ (right totals) — add one
         # all-NULL left row for the null-safe pairing to latch onto;
         # the output default-fill renders its columns as type defaults
-        _lsch = ctx.schema_of_sql(from_sql) or []
+        _lsch = ctx.schema(from_sql) or []
         if _lsch:
             _nulls = ", ".join(
                 f"CAST(NULL AS {t}) AS `{c}`" for c, t in _lsch
@@ -1381,7 +1401,6 @@ def _translate_select_inner(tokens: list[Token], ctx: Ctx) -> str:
                 f"((SELECT * FROM {from_sql}) UNION ALL "
                 f"(SELECT {_nulls})) {ctx.gensym('lt')}"
             )
-            ctx.current_from_sql = from_sql
     ctx.join_right_totals = False
 
     def aj_subst(toks: list[Token]) -> list[Token]:
@@ -1398,10 +1417,10 @@ def _translate_select_inner(tokens: list[Token], ctx: Ctx) -> str:
     # `SELECT *` with a JOIN expands to the LEFT table's columns only
     # (ExpressionAnalyzer normalizeTree asterisk expansion predates the
     # join's right side in this version)
-    if joins and not array_join_items and ctx.schema_of_sql is not None:
+    if joins and not array_join_items:
         for idx, item in enumerate(select_items):
             if len(item) == 1 and item[0].text == "*":
-                schema = ctx.schema_of_sql(from_sql)
+                schema = ctx.schema(from_sql)
                 if schema:
                     select_items[idx] = [
                         Token("raw", ", ".join(f"`{c}`" for c, _t in schema))
@@ -1503,10 +1522,10 @@ def _translate_select_inner(tokens: list[Token], ctx: Ctx) -> str:
                 f"(SELECT *, monotonically_increasing_id() AS __sid0 "
                 f"FROM {from_sql}) __rsrc) __rwrap"
             )
-            # the hoisted aliases are visible columns now — let the
-            # array/string polymorphic dispatch (length/empty) probe
-            # their types from the wrapped subquery
-            ctx.current_from_sql = from_sql
+            # the hoisted aliases are visible columns now — type them
+            # (length/empty dispatch) from the wrapped subquery
+            ctx.from_rels = [*ctx.from_rels, (None, None, from_sql)]
+            ctx.from_types = None
     # a bare Nested-member reference of an aliased ARRAY JOIN
     # (`SELECT m.k1 ... ARRAY JOIN FirstMap AS m`) keeps its visible
     # dotted name as the OUTPUT alias so ORDER BY `m.k1` (output
@@ -1637,7 +1656,6 @@ def _translate_select_inner(tokens: list[Token], ctx: Ctx) -> str:
                 f"({_N} / __smpl_tot) * {float(width)}) "
                 f"{ctx.gensym('sm')}) {ctx.gensym('sm')}"
             )
-            ctx.current_from_sql = from_sql
         else:
             _prc = int(str(settings.get("parallel_replicas_count", 1) or 1))
             _pro = int(str(settings.get("parallel_replica_offset", 0) or 0))
@@ -1751,7 +1769,6 @@ def _translate_select_inner(tokens: list[Token], ctx: Ctx) -> str:
                 f"FROM {_s3} CROSS JOIN {_cut} {ctx.gensym('gb')}) "
                 f"{ctx.gensym('gb')}"
             )
-            ctx.current_from_sql = from_sql
             gb_flagged = True
     # ORDER BY scopes over the output projection — select aliases resolve
     # there, so array-join substitution must NOT apply (it would name a
@@ -2089,11 +2106,7 @@ def _translate_select_inner(tokens: list[Token], ctx: Ctx) -> str:
     # ---- post-aggregation arrayJoin wrap: explode the aggregated
     # result block (FunctionArrayJoin in the final ExpressionActions)
     if aj_post:
-        schema = (
-            ctx.schema_of_sql(f"(\n{sql}\n)")
-            if ctx.schema_of_sql is not None
-            else None
-        )
+        schema = ctx.schema(f"(\n{sql}\n)")
         if schema is not None:
             hole_of = {
                 f"__ajph{p[0]}": p for p in aj_post
@@ -2652,8 +2665,7 @@ def _final_subquery(name: str, ctx: Ctx) -> str:
     tdef = ctx.tabledef_of(name) if ctx.tabledef_of is not None else None
     columns = (
         tdef.merge_columns() if tdef is not None
-        else ctx.schema_of_sql(name) if ctx.schema_of_sql is not None
-        else None
+        else ctx.schema(name)
     )
     return merge_rule(meta, columns).sql(name, True)
 
@@ -2752,21 +2764,23 @@ def _take_join(tokens: list[Token], i: int) -> tuple[dict, int]:
     )
 
 
-_JOIN_DEFAULTS = {
-    "tinyint": "0", "smallint": "0", "int": "0", "bigint": "0",
-    "float": "CAST(0 AS FLOAT)", "double": "CAST(0 AS DOUBLE)",
-    "string": "''", "date": "DATE'1970-01-01'",
-    "timestamp": "TIMESTAMP'1970-01-01 00:00:00'",
-    "timestamp_ntz": "TIMESTAMP'1970-01-01 00:00:00'",
-}
-
-
-def _join_default_of(simple: str) -> str | None:
-    if simple.startswith("decimal"):
-        return f"CAST(0 AS {simple.upper()})"
-    if simple.startswith("array<"):
-        return f"CAST(array() AS {simple.upper()})"
-    return _JOIN_DEFAULTS.get(simple)
+def _join_default_of(ch_type: str, simple: str) -> str | None:
+    """Default value of CH type ``ch_type`` (IDataType::getDefault) as
+    SQL of the column's Spark type ``simple``; None = NULL (Nullable,
+    or no default this engine can spell)."""
+    if ch_type.startswith(("UInt", "Int", "Float", "decimal", "Decimal")):
+        lit = "0"
+    elif ch_type == "String" or ch_type.startswith(("FixedString", "Enum")):
+        lit = "''"
+    elif ch_type == "Date":
+        lit = "DATE'1970-01-01'"
+    elif ch_type == "DateTime":
+        lit = "TIMESTAMP'1970-01-01 00:00:00'"
+    elif ch_type.startswith("Array("):
+        lit = "array()"
+    else:
+        return None
+    return f"CAST({lit} AS {simple.upper()})"
 
 
 def _any_on_keys(
@@ -2864,6 +2878,7 @@ def _render_join(
             ctx.join_right_totals = True
         right_sql = f"(\n{inner}\n)"
         right_name = written_right = None
+        right_rel = (None, _sub_out(ctx), right_sql)
     else:
         right_name = written_right = "".join(t.text for t in right_toks)
         # created tables (incl. keyword-ish names like `join`) resolve
@@ -2872,6 +2887,9 @@ def _render_join(
         if _rv is not None:
             right_name = _rv
         right_sql = right_name
+        right_rel = (right_name, None, None)
+    # the right side's own columns, whatever wraps it below
+    right_src = right_sql
 
     alias = j["alias"]
     if alias is None and written_right is not None:
@@ -2891,21 +2909,18 @@ def _render_join(
         # right side keeps one row per join key, the smallest over all
         # its columns (deterministic; the reference keeps the first
         # inserted).  ON keys are the right operands of its equalities.
-        rschema = (
-            ctx.schema_of_sql(right_sql) if ctx.schema_of_sql is not None
-            else None
-        )
+        rschema = ctx.schema(right_src)
         rkeys = using_cols or _any_on_keys(
             j["on"], {j["alias"], written_right, right_name}, rschema
         )
         right_sql = winner_per_key_sql(right_sql, rkeys, rschema, pick="min")
 
     right_totals_pair = False
-    if right_totals and using_cols and ctx.schema_of_sql is not None:
+    if right_totals and using_cols:
         # rename the USING columns so the join can use a null-safe ON:
         # both sides' totals rows carry NULL keys, so l.k <=> r.k pairs
         # them while ordinary rows keep plain-equality semantics
-        _rschema = ctx.schema_of_sql(right_sql) or []
+        _rschema = ctx.schema(right_src) or []
         if _rschema:
             ren = ", ".join(
                 f"`{c}` AS `__rt_{c}`" if c in using_cols else f"`{c}`"
@@ -2918,16 +2933,12 @@ def _render_join(
     # reference resolves to the left column in the reference (the probe
     # block's columns precede the joined ones; 00098_l_union_all) —
     # drop the right-side duplicates so Spark never sees an ambiguity
-    if (
-        using_cols
-        and left_sql is not None
-        and ctx.schema_of_sql is not None
-    ):
-        lcols = {c for c, _t in ctx.schema_of_sql(left_sql) or []}
-        rcols = [c for c, _t in ctx.schema_of_sql(right_sql) or []]
+    dup: list[str] = []
+    if using_cols and left_sql is not None:
+        lcols = {c for c, _t in ctx.schema(left_sql) or []}
         dup = [
             c
-            for c in rcols
+            for c, _t in ctx.schema(right_src) or []
             if c in lcols
             and c not in using_cols
             # qualified `alias.col` references keep the column reachable
@@ -2942,10 +2953,11 @@ def _render_join(
 
     # non-matched outer-join rows read the other side's columns as TYPE
     # DEFAULTS, not NULL (Interpreters/Join.cpp inserts default values;
-    # join_use_nulls=0 is the reference default, Settings.h) — record
-    # coalesce substitutions for the outer clauses, driven by the
-    # analyzed schema of the side that can be missing: the right side
-    # under LEFT/FULL, the left side under RIGHT/FULL.  SET
+    # join_use_nulls=0 is the reference default, Settings.h), whether
+    # the join is written with USING or ON — record coalesce
+    # substitutions for the outer clauses over the columns of the side
+    # that can be missing (the right side under LEFT/FULL, the left
+    # side under RIGHT/FULL), typed by the SELECT's type lookup.  SET
     # join_use_nulls = 1 switches to NULL fill (Spark's native join
     # semantics), so no substitution then.
     # Nullable join keys never enter the hash table (Join.cpp null_map
@@ -2961,20 +2973,21 @@ def _render_join(
         jdef_subs is not None
         and not use_nulls
         and kind in ("LEFT", "RIGHT", "FULL")
-        and using_cols
-        and ctx.schema_of_sql is not None
     ):
         sides = []
         if kind in ("LEFT", "FULL"):
-            sides.append(right_sql)
+            sides.append(([c for c in ctx.schema(right_src) or []
+                           if c[0] not in dup],
+                          _relation_types(ctx, *right_rel)))
         if kind in ("RIGHT", "FULL") and left_sql is not None:
-            sides.append(left_sql)
-        for side_sql in sides:
-            schema = ctx.schema_of_sql(side_sql)
-            for col, simple in schema or []:
-                if col in using_cols:
+            sides.append((ctx.schema(left_sql) or [], _from_types(ctx)))
+        for schema, types in sides:
+            for col, simple in schema:
+                if col in (using_cols or ()):
                     continue
-                d = _join_default_of(simple)
+                d = _join_default_of(
+                    types.get(col) or ch_type_of_spark(simple), simple
+                )
                 if d is not None:
                     jdef_subs[col] = f"coalesce(`{col}`, {d})"
 
@@ -2988,7 +3001,7 @@ def _render_join(
         sql += f" USING ({', '.join(using_cols)})"
     elif j["on"] is not None:
         sql += f" ON {_rewrite(j['on'], ctx)}"
-    return sql, hint
+    return sql, hint, right_rel
 
 
 # ---------------------------------------------------------------- SAMPLE
@@ -3142,9 +3155,7 @@ def _sortable_ordinals(sql: str, n: int, ctx: Ctx) -> list[str]:
     """Output ordinals 1..n of ``sql`` as ORDER BY keys, less those of
     columns Spark cannot sort (a Map, alone or nested): such a column
     never breaks a tie."""
-    schema = (
-        ctx.schema_of_sql(f"({sql})") if ctx.schema_of_sql is not None else None
-    )
+    schema = ctx.schema(f"({sql})")
     return [
         str(k + 1)
         for k in range(n)
@@ -3407,8 +3418,14 @@ def _collect_inline_aliases(
             if expr_toks and name not in target and not has_array_join:
                 # arrayJoin aliases resolve to the exploded column via
                 # the ARRAY JOIN machinery below, not by substitution
-                rendered = _rewrite(_substitute(list(expr_toks), subs), ctx)
-                target[name] = f"({rendered})"
+                try:
+                    rendered = _rewrite(_substitute(list(expr_toks), subs), ctx)
+                    target[name] = f"({rendered})"
+                except ValueError:
+                    # a type-dispatched body over columns this SELECT's
+                    # FROM (not rendered yet) types: keep the name; a
+                    # use renders the body then (_rw_item raw branch)
+                    target[name] = f"`{name}`"
                 if name not in ctx.alias_ch_toks:
                     ctx.alias_ch_toks[name] = list(expr_toks)
             if is_output:
@@ -3733,22 +3750,64 @@ def _ch_expr_name(toks: list[Token]) -> str | None:
     return None
 
 
+# system.numbers / system.one columns, which Spark carries as bigint/int
+_IMPLICIT_TYPES = {"number": "UInt64", "dummy": "UInt8"}
+
+
+def _sub_out(ctx: Ctx) -> list | None:
+    """(name, CH type) pairs of the subquery just translated, or None
+    when its select list has a star or is a union."""
+    if ctx.out_ch_types is None or ctx.out_ch_names is None:
+        return None
+    return list(zip(ctx.out_ch_names, ctx.out_ch_types))
+
+
+def _relation_types(
+    ctx: Ctx, table: str | None, sub_out: list | None, sql: str | None
+) -> dict[str, str]:
+    """Column → CH type of one FROM or JOIN relation: a created table's
+    declared types; a subquery's inferred output types, which keep the
+    UInt64 that Spark's bigint loses; otherwise (a view, or subquery
+    columns inference left open) the analyzed schema through the one
+    Spark→CH map (``sources.formats.SPARK_TO_CH``)."""
+    td = ctx.tabledef_of(table) if table and ctx.tabledef_of else None
+    if td is not None:
+        return {c.name: c.ch_type for c in td.columns if c.ch_type}
+    known = {n: t for n, t in sub_out or () if n and t}
+    if sub_out is not None and len(known) == len(sub_out):
+        return known
+    probed = {}
+    if table or sql:
+        for c, t in ctx.schema(table or sql) or ():
+            implicit = c in _IMPLICIT_TYPES and t in ("bigint", "int")
+            probed[c] = _IMPLICIT_TYPES[c] if implicit else ch_type_of_spark(t)
+    return {**probed, **known}
+
+
+def _from_types(ctx: Ctx) -> dict[str, str]:
+    """The current SELECT's one column → CH type lookup, built once
+    from its FROM relations; an earlier relation's column wins a name
+    (a bare reference resolves to the left side)."""
+    if ctx.from_types is None:
+        types: dict[str, str] = {}
+        for rel in ctx.from_rels:
+            for n, t in _relation_types(ctx, *rel).items():
+                types.setdefault(n, t)
+        ctx.from_types = {**_IMPLICIT_TYPES, **types}
+    return ctx.from_types
+
+
 def _infer_expr_ch_type(toks: list[Token], ctx: Ctx) -> str | None:
     """CH type of an expression token list, resolving select aliases
-    back to their original CH tokens and column refs against the
-    current table's declared CH types.  None = not statically
+    back to their original CH tokens and column refs through the
+    SELECT's type lookup (_from_types).  None = not statically
     inferable (callers fall back to runtime behavior)."""
     from .statements import _infer_ch_type
 
-    cols: dict[str, str] = {"number": "UInt64", "dummy": "UInt8"}
-    if ctx.tabledef_of is not None and ctx.current_table:
-        td = ctx.tabledef_of(ctx.current_table)
-        if td is not None:
-            for c in td.columns:
-                if c.ch_type:
-                    cols[c.name] = c.ch_type
-    # lambda formals shadow columns inside higher-order bodies
-    cols.update(ctx.lambda_types)
+    cols = _from_types(ctx)
+    if ctx.lambda_types:
+        # lambda formals shadow columns inside higher-order bodies
+        cols = {**cols, **ctx.lambda_types}
     # an alias-substituted raw fragment that still NAMES a declared
     # column (e.g. a table ALIAS column) types as that column
     if (
@@ -3757,17 +3816,16 @@ def _infer_expr_ch_type(toks: list[Token], ctx: Ctx) -> str | None:
         and getattr(toks[0], "ch_name", None) in cols
     ):
         return cols[toks[0].ch_name]
-    toks = _expand_alias_toks(toks, ctx, skip=set(cols))
+    toks = _expand_alias_toks(toks, ctx, skip=cols)
     return _infer_ch_type(toks, cols)
 
 
 def _expand_alias_toks(
-    toks: list[Token], ctx: Ctx, skip: set | None = None
+    toks: list[Token], ctx: Ctx, skip=()
 ) -> list[Token]:
     """Expand select-alias references back to their ORIGINAL CH tokens
     (fixpoint, 8 rounds — normalizeTree substitution depth is shallow
-    in the corpus)."""
-    skip = skip or set()
+    in the corpus); names in ``skip`` stay."""
     toks = list(toks)
     for _ in range(8):
         expanded: list[Token] = []
@@ -4778,8 +4836,8 @@ def _rw_item(
             # so a no-match probe yields 0 — Spark's three-valued IN
             # would yield NULL when the set contains NULLs.  Filter
             # them out of the set side.
-            if in_list and ctx.schema_of_sql is not None:
-                schema = ctx.schema_of_sql(f"(\n{sub}\n)")
+            if in_list:
+                schema = ctx.schema(f"(\n{sub}\n)")
                 if schema:
                     conds = " AND ".join(
                         f"`{c}` IS NOT NULL" for c, _t in schema
@@ -4792,8 +4850,8 @@ def _rw_item(
             # (ExpressionAnalyzer executeScalarSubqueries wraps rows of
             # width > 1); Spark only allows single-column scalars —
             # wrap the projection into a positional struct
-            if not in_list and ctx.schema_of_sql is not None:
-                schema = ctx.schema_of_sql(f"(\n{sub}\n)")
+            if not in_list:
+                schema = ctx.schema(f"(\n{sub}\n)")
                 if schema and len(schema) > 1:
                     ns = ", ".join(
                         f"'col{k + 1}', `{c}`" for k, (c, _t) in enumerate(schema)
@@ -5069,7 +5127,12 @@ def _rw_item(
         # before FROM resolution, so type-dispatched forms (length on
         # arrays, float toString) would otherwise miss their types
         nm = getattr(t, "ch_name", None)
-        if nm and getattr(t, "reexpand", False) and nm in ctx.alias_ch_toks:
+        deferred = t.text == f"`{nm}`"
+        if (
+            nm
+            and (getattr(t, "reexpand", False) or deferred)
+            and nm in ctx.alias_ch_toks
+        ):
             expanded = _expand_alias_toks(ctx.alias_ch_toks[nm], ctx)
             try:
                 return _postfix(
@@ -5077,7 +5140,9 @@ def _rw_item(
                     base_toks=expanded,
                 )
             except Exception:
-                pass  # fall back to the pre-rendered form
+                if deferred:
+                    raise
+                # fall back to the pre-rendered form
         # the substituted alias's original tokens still type the base
         # for postfix indexing (arrayElement default fill)
         src = ctx.alias_ch_toks.get(nm) if nm else None
@@ -5112,25 +5177,6 @@ def _rw_item(
         return _postfix(f"CAST({txt} AS DOUBLE)", tokens, i + 1, ctx)
 
     return _postfix(t.text, tokens, i + 1, ctx, base_toks=[t])
-
-
-def _bare_col_is_array(item: list[Token], ctx: Ctx) -> bool:
-    """Bare column reference whose analyzed FROM-schema type is an
-    array — the CH-type inference can't see subquery output columns,
-    but Spark's analyzer can (lazy probe, analysis only)."""
-    if (
-        len(item) != 1
-        or item[0].kind not in ("ident", "qident")
-        or ctx.schema_of_sql is None
-        or ctx.current_from_sql is None
-    ):
-        return False
-    col = item[0].text.strip("`")
-    try:
-        schema = ctx.schema_of_sql(ctx.current_from_sql) or []
-    except Exception:
-        return False
-    return any(c == col and t.startswith("array") for c, t in schema)
 
 
 _EXACT_HASH_FNS = {
@@ -5181,9 +5227,12 @@ def _hash_fn(
     name: str, args: list[str], arg_items: list[list[Token]] | None, ctx: Ctx
 ) -> str | None:
     """Bit-exact dispatch of the fast-hash family (FunctionsHashing.h)
-    — see dialect/hash_sql.py.  None → caller falls back to the
-    documented xxhash64 stand-in."""
+    by argument type — see dialect/hash_sql.py.  An argument this
+    engine cannot type, or a type without an exact lowering, raises."""
     from . import hash_sql as H
+
+    def unsupported(what: str) -> ValueError:
+        return ValueError(f"{name}: no bit-exact lowering for {what}")
 
     if name == "halfMD5":
         # big-endian first 8 md5 bytes as UInt64 (HalfMD5Impl:54) —
@@ -5193,19 +5242,19 @@ def _hash_fn(
                 f"CAST(conv(substr(md5(CAST({args[0]} AS BINARY)), 1, 16), 16, 10) "
                 f"AS DECIMAL(20, 0))"
             )
-        return None
+        raise unsupported(f"{len(args)} arguments")
     if name == "sipHash64":
         # String-only in the reference (FunctionStringHash64:879)
         if len(args) == 1:
             return H.signed_to_u64(f"ch_sip64({args[0]})")
-        return None
+        raise unsupported(f"{len(args)} arguments")
     if name in ("intHash64", "intHash32"):
         if len(args) != 1 or arg_items is None:
-            return None
-        t = _infer_expr_ch_type(arg_items[0], ctx) or "Int64"
+            raise unsupported(f"{len(args)} arguments")
+        t = _infer_expr_ch_type(arg_items[0], ctx) or ""
         x = H.element_to_int_sql(args[0], t)
         if x is None:
-            return None
+            raise unsupported(f"argument type {t or 'unknown'}")
         if name == "intHash32":
             return H.sql_int_hash32(x)
         return H.signed_to_u64(H.sql_int_hash64(x))
@@ -5249,63 +5298,45 @@ def _hash_fn(
                 f"CAST(ch_urlhash_u64({args[0]}, CAST({args[1]} AS INT)) "
                 f"AS DECIMAL(20, 0))"
             )
-        return None
+        raise unsupported(f"{len(args)} arguments")
     # cityHash64/farmHash64/metroHash64: multi-arg NeighbourhoodHash
     # combine (FunctionNeighbourhoodHash64:378)
-    if arg_items is None or name not in _NEIGHBOURHOOD_STR_UDF:
-        return None
     str_udf = _NEIGHBOURHOOD_STR_UDF[name]
     expanded: list[list[Token]] = []
-    for item in arg_items:
-        if len(item) == 1 and item[0].text == "*":
+    for item in arg_items or []:
+        if len(item) == 1 and item[0].text == "*" and ctx.from_rels:
             # f(*) expands to the visible FROM columns in order
             # (ExpressionAnalyzer asterisk normalization)
-            names: list[str] | None = None
-            if ctx.tabledef_of is not None and ctx.current_table:
-                td = ctx.tabledef_of(ctx.current_table)
-                if td is not None:
-                    names = [
-                        c.name
-                        for c in td.columns
-                        if c.default_kind not in ("MATERIALIZED", "ALIAS")
-                    ]
-            if (
-                names is None
-                and ctx.schema_of_sql is not None
-                and ctx.current_from_sql is not None
-            ):
-                try:
-                    sch = ctx.schema_of_sql(ctx.current_from_sql) or []
-                    names = [c for c, _ in sch]
-                except Exception:
-                    names = None
-            if not names:
-                return None
-            expanded.extend([Token("ident", n)] for n in names)
+            rel = ctx.from_rels[0]
+            td = ctx.tabledef_of(rel[0]) if rel[0] and ctx.tabledef_of else None
+            hidden = {c.name for c in td.columns if c.is_virtual} if td else ()
+            expanded.extend(
+                [Token("ident", n)]
+                for n in _relation_types(ctx, *rel)
+                if n not in hidden
+            )
         else:
             expanded.append(item)
     elems: list[list[Token]] = []
     for item in expanded:
         elems.extend(_hash_flatten(item, ctx))
+    if not elems:
+        raise unsupported("no arguments")
     acc: str | None = None
     for toks in elems:
         sql = _rewrite(toks, ctx)
-        t = _infer_expr_ch_type(toks, ctx)
-        if t is None and _syntactic_kind(toks) == "array":
-            t = "Array(Int64)"
-        if t is None:
-            return None
+        t = _infer_expr_ch_type(toks, ctx) or ""
         base = t[9:-1] if t.startswith("Nullable(") else t
         if base.startswith("Array("):
-            acc2 = H.array_fold_sql(sql, base[6:-1], acc, str_udf + "_arr")
+            acc = H.array_fold_sql(sql, base[6:-1], acc, str_udf + "_arr")
         else:
             h = H.scalar_hash_sql(sql, base, str_udf)
-            acc2 = h if acc is None else (H.sql_h128(acc, h) if h else None)
-        if acc2 is None:
-            return None
-        acc = acc2
-    if acc is None:
-        return None
+            acc = h if acc is None else (H.sql_h128(acc, h) if h else None)
+        if acc is None:
+            raise unsupported(
+                f"argument {' '.join(tk.text for tk in toks)!r} "
+                f"of type {t or 'unknown'}"
+            )
     return H.signed_to_u64(acc)
 
 
@@ -5459,9 +5490,7 @@ def _apply_fn(
     arg_items: list[list[Token]] | None = None,
 ) -> str:
     if name in _EXACT_HASH_FNS:
-        out = _hash_fn(name, args, arg_items, ctx)
-        if out is not None:
-            return out
+        return _hash_fn(name, args, arg_items, ctx)
     # scan-ordered accumulator: collect (ordinal, value) and sort, so
     # the array follows the reference's single-threaded append order
     # (AggregateFunctionGroupArray.h insert per block — golden 00089).
@@ -5495,7 +5524,6 @@ def _apply_fn(
         and (
             _syntactic_kind(arg_items[0]) == "array"
             or (_infer_expr_ch_type(arg_items[0], ctx) or "").startswith("Array")
-            or _bare_col_is_array(arg_items[0], ctx)
         )
     ):
         if name == "length":

@@ -164,9 +164,11 @@ _FMT_SYNONYMS = {
     "TSVWithNamesAndTypes": "TabSeparatedWithNamesAndTypes",
 }
 
-#: Spark simpleString → CH type name (fallback when the translator
-#: could not infer the CH type of an output column; §1.2 type table)
-_SPARK_TO_CH = {
+#: Spark simpleString → CH type name: the one map every consumer of a
+#: column without a declared CH type reads (translator type lookup,
+#: DESCRIBE, toTypeName, output-format headers; §1.2 type table).
+#: Unmapped types keep their Spark names.
+SPARK_TO_CH = {
     "tinyint": "Int8", "smallint": "Int16", "int": "Int32",
     "bigint": "Int64", "float": "Float32", "double": "Float64",
     "string": "String", "date": "Date", "timestamp": "DateTime",
@@ -175,10 +177,11 @@ _SPARK_TO_CH = {
 }
 
 
-def _ch_type_text(simple: str) -> str:
+def ch_type_of_spark(simple: str) -> str:
+    """CH type name of a Spark simpleString type (see SPARK_TO_CH)."""
     if simple.startswith("array<") and simple.endswith(">"):
-        return f"Array({_ch_type_text(simple[6:-1])})"
-    return _SPARK_TO_CH.get(simple, simple)
+        return f"Array({ch_type_of_spark(simple[6:-1])})"
+    return SPARK_TO_CH.get(simple, simple)
 
 
 def format_result(
@@ -216,7 +219,7 @@ def format_result(
     if ch_types is None or len(ch_types) != len(names):
         ch_types = [None] * len(names)
     ch_type_texts = [
-        c if c is not None else _ch_type_text(t)
+        c if c is not None else ch_type_of_spark(t)
         for c, t in zip(ch_types, types)
     ]
     # UInt64 bit patterns -> unsigned values ONCE, before dispatch, so
@@ -1354,7 +1357,7 @@ def _render_rowbinary(rows, types: list[str], ch_types: list) -> str:
     out = bytearray()
     for r in rows:
         for i, (st, ct) in enumerate(zip(types, ch_types)):
-            _rb_value(out, r[i], ct or _ch_type_text(st))
+            _rb_value(out, r[i], ct or ch_type_of_spark(st))
     return bytes(out).decode("utf-8", "surrogateescape")
 
 
@@ -1537,7 +1540,7 @@ def _render_native(
         _rb_varint(out, len(chunk))
         for i, (name, st, ct) in enumerate(zip(names, types, ch_types)):
             _native_string(out, name)
-            cht = ct or _ch_type_text(st)
+            cht = ct or ch_type_of_spark(st)
             _native_string(out, cht)
             if chunk:  # zero rows => zero bytes of data
                 _native_bulk(out, [r[i] for r in chunk], cht)
