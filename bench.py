@@ -47,7 +47,7 @@ HEADLINE = [
     "pl_minhash_lsh_dedup",     # MinHash LSH banded dedup
     "pl_embedding_topk",        # brute-force cosine top-k
     "pl_token_stats",           # text analysis sweep
-    # the reference's own benchmark shapes (queries.sql via hits_q)
+    # the reference's own benchmark: queries.sql text through ChEngine (hits_q)
     "hits_q03_triple_agg",      # one-pass multi-agg scan
     "hits_q13_phrase_top",      # hot-key string GROUP BY top-10
     "hits_q17_user_phrase",     # heavy two-key GROUP BY

@@ -1901,6 +1901,9 @@ def _p_sequence(count: bool) -> Callable[[Args, Args], str]:
     return tpl
 
 
+SEQ_UDF_PREFIX = "__seq_"
+
+
 def _seq_timed_sql(pattern: str, args: Args, count: bool) -> str:
     """Time-constrained sequenceMatch/Count in SQL: register the exact
     NFA (operators/sequence_match.py:match_events — the port of
@@ -1917,7 +1920,7 @@ def _seq_timed_sql(pattern: str, args: Args, count: bool) -> str:
     if spark is None:
         raise RuntimeError("time-constrained sequenceMatch needs an active SparkSession")
     tag = hashlib.md5(f"{pattern}|{count}".encode()).hexdigest()[:10]
-    name = f"__seq_{'count' if count else 'match'}_{tag}"
+    name = f"{SEQ_UDF_PREFIX}{'count' if count else 'match'}_{tag}"
     registered = spark.conf.get(f"spark.__seq_udf.{name}", None)
     if registered is None:
         spark.udf.register(name, _timed_udf(pattern, count))

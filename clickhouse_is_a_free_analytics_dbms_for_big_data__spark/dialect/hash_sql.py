@@ -130,23 +130,29 @@ def register_hash_udfs(spark) -> None:
     def _sign(v: int) -> int:
         return v - (1 << 64) if v >= (1 << 63) else v
 
-    @pandas_udf(LongType())
-    def ch_city64(s: pd.Series) -> pd.Series:
-        return s.map(
-            lambda v: None if v is None else _sign(
-                xh.city_hash_64(v if isinstance(v, bytes) else str(v).encode())
-            ),
-            na_action="ignore",
-        )
+    def scalar_udf(fn):
+        @pandas_udf(LongType())
+        def udf(s: pd.Series) -> pd.Series:
+            return s.map(
+                lambda v: None if v is None else _sign(
+                    fn(v if isinstance(v, bytes) else str(v).encode())
+                ),
+                na_action="ignore",
+            )
 
-    @pandas_udf(LongType())
-    def ch_sip64(s: pd.Series) -> pd.Series:
-        return s.map(
-            lambda v: None if v is None else _sign(
-                xh.sip_hash_64(v if isinstance(v, bytes) else str(v).encode())
-            ),
-            na_action="ignore",
-        )
+        return udf
+
+    def array_udf(fn):
+        @pandas_udf(ArrayType(LongType()))
+        def udf(s: pd.Series) -> pd.Series:
+            return s.map(
+                lambda arr: None if arr is None else [
+                    _sign(fn(str(v).encode())) for v in arr
+                ],
+                na_action="ignore",
+            )
+
+        return udf
 
     @pandas_udf(BinaryType())
     def ch_sip128(s: pd.Series) -> pd.Series:
@@ -154,51 +160,6 @@ def register_hash_udfs(spark) -> None:
         return s.map(
             lambda v: None if v is None else
             xh.sip_hash_128(v if isinstance(v, bytes) else str(v).encode()),
-            na_action="ignore",
-        )
-
-    @pandas_udf(ArrayType(LongType()))
-    def ch_city64_arr(s: pd.Series) -> pd.Series:
-        return s.map(
-            lambda arr: None if arr is None else [
-                _sign(xh.city_hash_64(str(v).encode())) for v in arr
-            ],
-            na_action="ignore",
-        )
-
-    @pandas_udf(LongType())
-    def ch_farm64(s: pd.Series) -> pd.Series:
-        return s.map(
-            lambda v: None if v is None else _sign(
-                xh.farm_hash_64(v if isinstance(v, bytes) else str(v).encode())
-            ),
-            na_action="ignore",
-        )
-
-    @pandas_udf(LongType())
-    def ch_metro64(s: pd.Series) -> pd.Series:
-        return s.map(
-            lambda v: None if v is None else _sign(
-                xh.metro_hash_64_1(v if isinstance(v, bytes) else str(v).encode())
-            ),
-            na_action="ignore",
-        )
-
-    @pandas_udf(ArrayType(LongType()))
-    def ch_farm64_arr(s: pd.Series) -> pd.Series:
-        return s.map(
-            lambda arr: None if arr is None else [
-                _sign(xh.farm_hash_64(str(v).encode())) for v in arr
-            ],
-            na_action="ignore",
-        )
-
-    @pandas_udf(ArrayType(LongType()))
-    def ch_metro64_arr(s: pd.Series) -> pd.Series:
-        return s.map(
-            lambda arr: None if arr is None else [
-                _sign(xh.metro_hash_64_1(str(v).encode())) for v in arr
-            ],
             na_action="ignore",
         )
 
@@ -314,14 +275,17 @@ def register_hash_udfs(spark) -> None:
         out = pd.Series(bits)
         return out.mask(s.isna(), None)
 
-    spark.udf.register("ch_city64", ch_city64)
-    spark.udf.register("ch_sip64", ch_sip64)
+    # the string Hash64 of each NeighbourhoodHash impl, per value and
+    # per array element (dialect array folds), and String-only SipHash
+    for name, fn in (
+        ("city64", xh.city_hash_64),
+        ("farm64", xh.farm_hash_64),
+        ("metro64", xh.metro_hash_64_1),
+    ):
+        spark.udf.register(f"ch_{name}", scalar_udf(fn))
+        spark.udf.register(f"ch_{name}_arr", array_udf(fn))
+    spark.udf.register("ch_sip64", scalar_udf(xh.sip_hash_64))
     spark.udf.register("ch_sip128", ch_sip128)
-    spark.udf.register("ch_city64_arr", ch_city64_arr)
-    spark.udf.register("ch_farm64", ch_farm64)
-    spark.udf.register("ch_metro64", ch_metro64)
-    spark.udf.register("ch_farm64_arr", ch_farm64_arr)
-    spark.udf.register("ch_metro64_arr", ch_metro64_arr)
     spark.udf.register("ch_uniq_key", ch_uniq_key)
     spark.udf.register("ch_hash32", ch_hash32)
     spark.udf.register("ch_urlhash", ch_urlhash)

@@ -50,6 +50,7 @@ from dataclasses import dataclass, field
 
 from .functions_map import (
     PARAMETRIC,
+    SEQ_UDF_PREFIX,
     SIMPLE,
     TEMPLATES,
     array_combinator,
@@ -1484,16 +1485,17 @@ def _translate_select_inner(tokens: list[Token], ctx: Ctx) -> str:
     if jdef_subs:
         for idx, item in enumerate(select_items):
             body, al = _strip_alias(item)
+            name = "".join(t.text.strip("`") for t in body)
             if (
                 al is None
-                and len(body) == 1
-                and body[0].kind == "ident"
-                and body[0].text in jdef_subs
+                and len(body) in (1, 3)
+                and body[-1].kind in ("ident", "qident")
+                and name in jdef_subs
             ):
                 select_items[idx] = [
-                    body[0],
+                    *body,
                     Token("ident", "AS"),
-                    Token("ident", body[0].text),
+                    Token("ident", body[-1].text.strip("`")),
                 ]
 
     # runningAccumulate nested INSIDE an aggregate (e.g.
@@ -2086,22 +2088,27 @@ def _translate_select_inner(tokens: list[Token], ctx: Ctx) -> str:
         sql += "\nGROUP BY GROUPING SETS ((), ())"
         if having_sql:
             sql += f"\nHAVING grouping_id() <> 0 OR ({having_sql})"
-    elif (
-        ctx.select_depth == 1
-        and any(_item_has_agg(s) for s in select_items)
-    ):
-        # keyless aggregation over an EMPTY input yields NO rows in
-        # the reference (the aggregating stream emits nothing without
-        # input blocks) — Spark's global aggregate would emit one;
-        # a constant grouping key reproduces the empty-in/empty-out
-        # while keeping map-side partial aggregation.  Under
-        # distributed_group_by_no_merge the hidden shard ordinal is
-        # the key: one result row PER SHARD (00184)
-        sql += f"\nGROUP BY {_dgb_col}" if _dgb_col else "\nGROUP BY CAST(1 AS BOOLEAN)"
+    else:
+        if ctx.select_depth == 1 and any(_item_has_agg(s) for s in select_items):
+            # keyless aggregation over an EMPTY input yields NO rows in
+            # the reference (the aggregating stream emits nothing
+            # without input blocks) — Spark's global aggregate emits
+            # one; a hidden row-count HAVING drops it and keeps the
+            # aggregate keyless.  Under distributed_group_by_no_merge
+            # the hidden shard ordinal is the key: one result row PER
+            # SHARD (00184)
+            if _dgb_col:
+                sql += f"\nGROUP BY {_dgb_col}"
+            elif any(SEQ_UDF_PREFIX in it for it in select_sql_items):
+                # a grouped-agg pandas UDF (timed sequenceMatch) admits no
+                # other aggregate beside it: a constant key drops the row
+                sql += "\nGROUP BY CAST(1 AS BOOLEAN)"
+            else:
+                having_sql = " AND ".join(
+                    f"({h})" for h in ("count(1) > 0", having_sql) if h
+                )
         if having_sql:
             sql += f"\nHAVING {having_sql}"
-    elif having_sql:
-        sql += f"\nHAVING {having_sql}"
 
     # ---- post-aggregation arrayJoin wrap: explode the aggregated
     # result block (FunctionArrayJoin in the final ExpressionActions)
@@ -2974,14 +2981,16 @@ def _render_join(
         and not use_nulls
         and kind in ("LEFT", "RIGHT", "FULL")
     ):
+        # a qualified reference (`r.b`) fills like the bare name
         sides = []
         if kind in ("LEFT", "FULL"):
             sides.append(([c for c in ctx.schema(right_src) or []
                            if c[0] not in dup],
-                          _relation_types(ctx, *right_rel)))
+                          _relation_types(ctx, *right_rel),
+                          alias.strip("`")))
         if kind in ("RIGHT", "FULL") and left_sql is not None:
-            sides.append((ctx.schema(left_sql) or [], _from_types(ctx)))
-        for schema, types in sides:
+            sides.append((ctx.schema(left_sql) or [], _from_types(ctx), left_qual))
+        for schema, types, qual in sides:
             for col, simple in schema:
                 if col in (using_cols or ()):
                     continue
@@ -2990,6 +2999,8 @@ def _render_join(
                 )
                 if d is not None:
                     jdef_subs[col] = f"coalesce(`{col}`, {d})"
+                    if qual:
+                        jdef_subs[f"{qual}.{col}"] = f"coalesce(`{qual}`.`{col}`, {d})"
 
     hint = f"BROADCAST({alias})" if global_ else ""
     sql = f"\n{kind} JOIN {right_sql} AS {alias}"
@@ -3539,6 +3550,17 @@ def _substitute(
             out.append(tokens[close])
             k = close + 1
             continue
+        # a qualified `rel.col` substitutes only by its dotted key
+        if (
+            k + 2 < n
+            and tokens[k + 1].text == "."
+            and (k == 0 or tokens[k - 1].text != ".")
+        ):
+            qkey = f"{t.text.strip('`')}.{tokens[k + 2].text.strip('`')}"
+            if qkey in subs:
+                out.append(Token("raw", subs[qkey]))
+                k += 3
+                continue
         key = None
         if t.kind == "ident" and t.text in subs:
             key = t.text

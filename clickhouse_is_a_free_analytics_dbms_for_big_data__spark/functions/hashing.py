@@ -4,20 +4,22 @@ Reference: dbms/src/Functions/FunctionsHashing.cpp: halfMD5, MD5,
 SHA1/224/256, sipHash64/128, cityHash64, farmHash64, metroHash64,
 intHash32/64, URLHash.
 
-Cryptographic hashes (MD5/SHA*) are bit-exact matches.  The fast
-non-crypto family (sipHash64/cityHash64/...) is mapped to Spark's
-xxhash64 as a stand-in: same role (fast 64-bit avalanche hash for
-sampling/sharding/grouping), different bit values — goldens must test
-distribution properties, not values (SURVEY.md §7).  intHash32/64 are
-implemented exactly (public Murmur-style finalizers the reference uses).
+Every helper returns the reference's value: the cryptographic hashes
+are Spark built-ins, intHash32/64 are the reference's salted integer
+finalizers in JVM arithmetic, and the fast 64-bit family
+(sipHash64/cityHash64/farmHash64/metroHash64/URLHash) runs the scalar
+ports in exact_hash.py.  64-bit results are the signed-BIGINT bit
+pattern of the reference's UInt64 (wraparound documented).  Only
+``hashMod``, the engine's own sharding primitive, is xxhash64.
 """
 
-from __future__ import annotations
+# NOTE: no `from __future__ import annotations` — the pandas-UDF type
+# hints below must be live objects for PySpark's signature inference.
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from ._util import col_of
+from ._util import col_of, let_
 
 __all__ = [
     "MD5", "halfMD5", "SHA1", "SHA224", "SHA256", "sipHash64",
@@ -50,21 +52,17 @@ def SHA256(s) -> Column:
     return F.sha2(col_of(s).cast("binary"), 256)
 
 
-def sipHash64(*cols) -> Column:
-    """Stand-in: xxhash64 (64-bit fast hash; values differ from reference)."""
-    return F.xxhash64(*[col_of(c) for c in cols])
+_INT_TYPES = ("tinyint", "smallint", "int", "bigint", "decimal(20,0)")
 
 
-cityHash64 = sipHash64
-
-
-def _exact_str_hash64(scalar_fn_name: str, doc_ref: str):
-    """Bit-exact single-string-arg hash as an Arrow-batched pandas UDF
-    over the scalar port in exact_hash.py.  Result is the signed-BIGINT
-    bit pattern of the reference's UInt64 (wraparound documented —
-    same convention as intHash64).  Multi-arg / integer-arg combines
-    run on the dialect path (dialect/hash_sql.py), which keeps
-    integers JVM-side."""
+def _exact_hash64(name: str, scalar_fn_name: str, ints_as_text: bool):
+    """One-argument hash: an Arrow-batched pandas UDF over the scalar
+    port in exact_hash.py, dispatched on the argument's Spark type as
+    the CH-SQL path (dialect/hash_sql.py) dispatches on its CH type.
+    A String hashes its UTF-8 bytes; an integer hashes as intHash64 of
+    its value (FunctionNeighbourhoodHash64), or as its decimal text for
+    the String-only functions.  The value travels as text, so a 64-bit
+    integer keeps every bit even with NULLs in the column."""
     from pyspark.sql.functions import pandas_udf
     from pyspark.sql.types import LongType
 
@@ -75,59 +73,84 @@ def _exact_str_hash64(scalar_fn_name: str, doc_ref: str):
 
         fn = getattr(xh, scalar_fn_name)
 
-        def _sign(v: int) -> int:
-            return v - (1 << 64) if v >= (1 << 63) else v
+        def one(v: str, t: str) -> int:
+            if t == "string" or (ints_as_text and t in _INT_TYPES):
+                h = fn(v.encode())
+            elif t in _INT_TYPES:
+                h = xh.int_hash_64(int(v))
+            else:
+                raise TypeError(
+                    f"{name}: no bit-exact DataFrame path for type {t}; "
+                    "run it through ChEngine"
+                )
+            return h - (1 << 64) if h >= (1 << 63) else h
 
         @pandas_udf(LongType())
-        def _hash(s: pd.Series) -> pd.Series:
-            return s.map(
-                lambda v: None if v is None else _sign(
-                    fn(v if isinstance(v, bytes) else str(v).encode())
-                ),
-                na_action="ignore",
+        def _hash(s: pd.Series, t: pd.Series) -> pd.Series:
+            return pd.Series(
+                [None if v is None else one(v, tt) for v, tt in zip(s, t)],
+                dtype="object",
             )
 
         return _hash
 
-    def wrapper(s) -> Column:
-        return _make()(col_of(s))
+    def wrapper(*cols) -> Column:
+        if len(cols) != 1:
+            raise ValueError(
+                f"{name}: the DataFrame helper hashes one argument; "
+                "multi-argument combines run through ChEngine"
+            )
+        c = col_of(cols[0])
+        return _make()(c.cast("string"), F.typeof(c))
 
-    wrapper.__doc__ = f"Bit-exact port ({doc_ref}); see functions/exact_hash.py."
+    wrapper.__name__ = name
+    wrapper.__doc__ = f"Bit-exact {name} (functions/exact_hash.{scalar_fn_name})."
     return wrapper
 
 
-farmHash64 = _exact_str_hash64(
-    "farm_hash_64", "farmhash::Hash64, contrib/libfarmhash/farmhash.cc"
-)
-metroHash64 = _exact_str_hash64(
-    "metro_hash_64_1", "metrohash64_1, contrib/libmetrohash/src/metrohash64.cpp"
-)
+sipHash64 = _exact_hash64("sipHash64", "sip_hash_64", ints_as_text=True)
+cityHash64 = _exact_hash64("cityHash64", "city_hash_64", ints_as_text=False)
+farmHash64 = _exact_hash64("farmHash64", "farm_hash_64", ints_as_text=False)
+metroHash64 = _exact_hash64("metroHash64", "metro_hash_64_1", ints_as_text=False)
+URLHash = _exact_hash64("URLHash", "url_hash", ints_as_text=True)
+
+
+def _chain(x: Column, *steps) -> Column:
+    """``steps`` applied in turn, each one's input evaluated once."""
+    return x if not steps else let_(x, lambda v: _chain(steps[0](v), *steps[1:]))
+
+
+def _rotr(x: Column, n: int) -> Column:
+    return F.shiftrightunsigned(x, n).bitwiseOR(F.shiftleft(x, 64 - n))
+
+
+def _xorshift(x: Column, n: int) -> Column:
+    return x.bitwiseXOR(F.shiftrightunsigned(x, n))
 
 
 def intHash64(x) -> Column:
-    """Exact port of the reference's intHash64 finalizer
-    (Functions/FunctionsHashing.h, public splitmix-style avalanche):
-    x ^= x>>33; x*=0xff51afd7ed558ccd; x^=x>>33; x*=0xc4ceb9fe1a85ec53; x^=x>>33.
-    Signed-long wraparound is identical to C++ unsigned mul mod 2^64.
-    """
-    x_ = col_of(x).cast("long")
-    x_ = x_.bitwiseXOR(F.shiftrightunsigned(x_, 33))
-    x_ = x_ * F.lit(-49064778989728563)  # 0xff51afd7ed558ccd as signed
-    x_ = x_.bitwiseXOR(F.shiftrightunsigned(x_, 33))
-    x_ = x_ * F.lit(-4265267296055464877)  # 0xc4ceb9fe1a85ec53 as signed
-    return x_.bitwiseXOR(F.shiftrightunsigned(x_, 33))
+    """IntHash64Impl (FunctionsHashing.h:159): the MurmurHash3
+    finalizer over ``x ^ 0x4CF2D2BAAE6DA887``.  Signed-long wraparound
+    is identical to C++ unsigned mul mod 2^64."""
+    return _chain(
+        col_of(x).cast("long").bitwiseXOR(F.lit(0x4CF2D2BAAE6DA887)),
+        lambda h: _xorshift(h, 33) * F.lit(-49064778989728563),  # 0xff51afd7ed558ccd
+        lambda h: _xorshift(h, 33) * F.lit(-4265267296055464877),  # 0xc4ceb9fe1a85ec53
+        lambda h: _xorshift(h, 33),
+    )
 
 
 def intHash32(x) -> Column:
-    """64->32 bit integer hash (reference intHash32): multiply-shift."""
-    return F.pmod(intHash64(x), F.lit(4294967296))
-
-
-def URLHash(url) -> Column:
-    """Hash of URL normalized by dropping a trailing slash/#fragment."""
-    u = F.regexp_replace(col_of(url), "#.*$", "")
-    u = F.regexp_replace(u, "/$", "")
-    return F.xxhash64(u)
+    """intHash32<0x75D9543DE018BF45> (Hash.h:144), UInt32 result —
+    the steps of hash_sql.sql_int_hash32."""
+    return _chain(
+        col_of(x).cast("long").bitwiseXOR(F.lit(0x75D9543DE018BF45)),
+        lambda k: F.bitwise_not(k) + F.shiftleft(k, 18),
+        lambda k: k.bitwiseXOR(_rotr(k, 31)) * 21,
+        lambda k: k.bitwiseXOR(_rotr(k, 11)),
+        lambda k: k + F.shiftleft(k, 6),
+        lambda k: k.bitwiseXOR(_rotr(k, 22)).bitwiseAND(F.lit(0xFFFFFFFF)),
+    )
 
 
 def hashMod(x, mod: int) -> Column:

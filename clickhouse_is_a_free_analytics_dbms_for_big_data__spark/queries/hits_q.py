@@ -2,26 +2,35 @@
 (dbms/benchmark/clickhouse/queries.sql, the BASELINE.md yardstick),
 re-expressed over the synthetic ``events`` table.
 
-The hits schema is derived deterministically from (event_id, user_id,
-ts) with IDENTICAL arithmetic on both engines, so every query is
-oracle-checkable; ``uniq`` runs as uniqExact (count distinct) in the
-checked entries — the approx variant is covered by ``uniq_approx``.
+Each entry is its queries.sql text in CH-SQL, run through ``ChEngine``
+over ``hits`` registered as the derived view below: the benchmark
+times the SQL a ClickHouse user sends.  The hits schema is derived
+deterministically from (event_id, user_id, ts) with IDENTICAL
+arithmetic on both engines (``hits_view`` / ``_HITS_CTE``), so every
+query is oracle-checkable against DuckDB.
 
-All 43 queries.sql lines are covered.  Determinism pins (documented per
-query): ``any()`` runs as ``min()``; LIMIT without ORDER BY gets a key
-order; ORDER BY ties are broken with the unique ``WatchID``; thresholds
-(HAVING counts, date windows) are scaled to the synthetic row count.
-Q20 exercises the UInt64-full-range path (Decimal(20,0) UserID64 vs a
-literal above Int64 max, SURVEY §7 hard part).
+All 43 queries.sql lines are covered.  Determinism pins (documented
+per query): ``uniq`` runs as ``uniqExact`` (the approx variant is
+covered by ``uniq_approx``); ``any()`` runs as ``min()``; LIMIT
+without ORDER BY gets a key order; ORDER BY ties are broken with the
+unique ``WatchID``; thresholds (HAVING counts, date windows) are
+scaled to the synthetic row count.  Q20 exercises the UInt64
+full-range path (Decimal(20,0) UserID64 vs a literal above Int64 max,
+SURVEY §7 hard part).
+
+The ``*_stored`` entries run five of the shapes as hand-built plans
+over the stored MergeTree copy of the view, grouping on LowCardinality
+codes and decoding late (see below).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..memo import Memo, source_sig
 from ..sources.catalog import load_tables
+from .dialect_q import _engine
 from .registry import plan_cache as _plan_cache
 from .registry import query
 
@@ -117,202 +126,145 @@ _HITS_CTE = """
 """
 
 
-def _hq(name: str, oracle_body: str, doc: str):
+def _hits_query(name: str, oracle_body: str, doc: str):
+    """Registry decorator for a hits entry; the DuckDB oracle runs
+    ``oracle_body`` over the same derived columns (_HITS_CTE)."""
     return query(name, _HITS_CTE + oracle_body, doc=doc, tags=("hits_bench",))
 
 
-@_hq(
+def _hq(name: str, oracle_body: str, doc: str, ch_sql: str) -> None:
+    """Register one queries.sql entry: ``ch_sql`` run through ChEngine
+    over the derived ``hits`` view."""
+
+    @_hits_query(name, oracle_body, doc)
+    @_plan_cache
+    def build(spark: SparkSession, sf_dir: str) -> DataFrame:
+        eng = _engine(spark, sf_dir)
+        eng.register_table("hits", hits_view(spark, sf_dir))
+        return eng.sql(ch_sql)
+
+
+_hq(
     "hits_q01_count",
     "SELECT COUNT(*) AS cnt FROM hits",
     "benchmark Q1: SELECT count() (queries.sql:1)",
+    "SELECT count() AS cnt FROM hits",
 )
-@_plan_cache
-def hits_q01(spark, sf_dir):
-    return hits_view(spark, sf_dir).agg(F.count(F.lit(1)).alias("cnt"))
 
-
-@_hq(
+_hq(
     "hits_q02_filtered_count",
     "SELECT COUNT(*) AS cnt FROM hits WHERE AdvEngineID <> 0",
     "benchmark Q2: filtered count (queries.sql:2)",
+    "SELECT count() AS cnt FROM hits WHERE AdvEngineID != 0",
 )
-@_plan_cache
-def hits_q02(spark, sf_dir):
-    return (
-        hits_view(spark, sf_dir)
-        .filter(F.col("AdvEngineID") != 0)
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
 
-
-@_hq(
+_hq(
     "hits_q03_triple_agg",
     "SELECT CAST(SUM(AdvEngineID) AS BIGINT) AS s, COUNT(*) AS c, AVG(ResolutionWidth) AS a FROM hits",
     "benchmark Q3: sum + count + avg in one pass (queries.sql:3)",
+    "SELECT sum(AdvEngineID) AS s, count() AS c, avg(ResolutionWidth) AS a FROM hits",
 )
-@_plan_cache
-def hits_q03(spark, sf_dir):
-    return hits_view(spark, sf_dir).agg(
-        F.sum("AdvEngineID").alias("s"),
-        F.count(F.lit(1)).alias("c"),
-        F.avg("ResolutionWidth").alias("a"),
-    )
 
-
-@_hq(
+_hq(
     "hits_q05_uniq_users",
     "SELECT COUNT(DISTINCT UserID) AS u FROM hits",
     "benchmark Q5: uniq(UserID), exact form (queries.sql:5)",
+    "SELECT uniqExact(UserID) AS u FROM hits",
 )
-@_plan_cache
-def hits_q05(spark, sf_dir):
-    return hits_view(spark, sf_dir).agg(F.countDistinct("UserID").alias("u"))
 
-
-@_hq(
+_hq(
     "hits_q07_minmax_date",
     "SELECT MIN(EventDate) AS lo, MAX(EventDate) AS hi FROM hits",
     "benchmark Q7: min/max EventDate (queries.sql:7)",
+    "SELECT min(EventDate) AS lo, max(EventDate) AS hi FROM hits",
 )
-@_plan_cache
-def hits_q07(spark, sf_dir):
-    return hits_view(spark, sf_dir).agg(
-        F.min("EventDate").alias("lo"), F.max("EventDate").alias("hi")
-    )
 
-
-@_hq(
+_hq(
     "hits_q08_adv_group",
     """
     SELECT AdvEngineID, COUNT(*) AS c FROM hits WHERE AdvEngineID <> 0
     GROUP BY AdvEngineID ORDER BY c DESC, AdvEngineID
     """,
     "benchmark Q8: small-cardinality GROUP BY ordered by count (queries.sql:8)",
+    """
+    SELECT AdvEngineID, count() AS c FROM hits WHERE AdvEngineID != 0
+    GROUP BY AdvEngineID ORDER BY c DESC, AdvEngineID
+    """,
 )
-@_plan_cache
-def hits_q08(spark, sf_dir):
-    return (
-        hits_view(spark, sf_dir)
-        .filter(F.col("AdvEngineID") != 0)
-        .groupBy("AdvEngineID")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .orderBy(F.desc("c"), "AdvEngineID")
-    )
 
-
-@_hq(
+_hq(
     "hits_q09_region_uniq",
     """
     SELECT RegionID, COUNT(DISTINCT UserID) AS u FROM hits
     GROUP BY RegionID ORDER BY u DESC, RegionID LIMIT 10
     """,
     "benchmark Q9: GROUP BY + uniq top-10 (queries.sql:9)",
+    """
+    SELECT RegionID, uniqExact(UserID) AS u FROM hits
+    GROUP BY RegionID ORDER BY u DESC, RegionID LIMIT 10
+    """,
 )
-@_plan_cache
-def hits_q09(spark, sf_dir):
-    return (
-        hits_view(spark, sf_dir)
-        .groupBy("RegionID")
-        .agg(F.countDistinct("UserID").alias("u"))
-        .orderBy(F.desc("u"), "RegionID")
-        .limit(10)
-    )
 
-
-@_hq(
+_hq(
     "hits_q13_phrase_top",
     """
     SELECT SearchPhrase, COUNT(*) AS c FROM hits WHERE SearchPhrase <> ''
     GROUP BY SearchPhrase ORDER BY c DESC, SearchPhrase LIMIT 10
     """,
     "benchmark Q13: hot-key string GROUP BY top-10 (queries.sql:13)",
+    """
+    SELECT SearchPhrase, count() AS c FROM hits WHERE SearchPhrase != ''
+    GROUP BY SearchPhrase ORDER BY c DESC, SearchPhrase LIMIT 10
+    """,
 )
-@_plan_cache
-def hits_q13(spark, sf_dir):
-    return (
-        hits_view(spark, sf_dir)
-        .filter(F.col("SearchPhrase") != "")
-        .groupBy("SearchPhrase")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .orderBy(F.desc("c"), "SearchPhrase")
-        .limit(10)
-    )
 
-
-@_hq(
+_hq(
     "hits_q17_user_phrase",
     """
     SELECT UserID, SearchPhrase, COUNT(*) AS c FROM hits
     GROUP BY UserID, SearchPhrase ORDER BY c DESC, UserID, SearchPhrase LIMIT 10
     """,
     "benchmark Q17: wide two-key GROUP BY (the heavy shape, queries.sql:17)",
+    """
+    SELECT UserID, SearchPhrase, count() AS c FROM hits
+    GROUP BY UserID, SearchPhrase ORDER BY c DESC, UserID, SearchPhrase LIMIT 10
+    """,
 )
-@_plan_cache
-def hits_q17(spark, sf_dir):
-    return (
-        hits_view(spark, sf_dir)
-        .groupBy("UserID", "SearchPhrase")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .orderBy(F.desc("c"), "UserID", "SearchPhrase")
-        .limit(10)
-    )
 
-
-@_hq(
+_hq(
     "hits_q19_minute_group",
     """
     SELECT UserID, minute(EventTime) AS m, SearchPhrase, COUNT(*) AS c FROM hits
     GROUP BY UserID, m, SearchPhrase ORDER BY c DESC, UserID, m, SearchPhrase LIMIT 10
     """,
     "benchmark Q19: three-key GROUP BY with time extraction (queries.sql:19)",
+    """
+    SELECT UserID, toMinute(EventTime) AS m, SearchPhrase, count() AS c FROM hits
+    GROUP BY UserID, m, SearchPhrase ORDER BY c DESC, UserID, m, SearchPhrase LIMIT 10
+    """,
 )
-@_plan_cache
-def hits_q19(spark, sf_dir):
-    return (
-        hits_view(spark, sf_dir)
-        .groupBy(
-            "UserID", F.minute("EventTime").alias("m"), "SearchPhrase"
-        )
-        .agg(F.count(F.lit(1)).alias("c"))
-        .orderBy(F.desc("c"), "UserID", "m", "SearchPhrase")
-        .limit(10)
-    )
 
-
-@_hq(
+_hq(
     "hits_q21_url_like",
     "SELECT COUNT(*) AS cnt FROM hits WHERE URL LIKE '%page/42%'",
     "benchmark Q21: substring scan (queries.sql:21)",
+    "SELECT count() AS cnt FROM hits WHERE URL LIKE '%page/42%'",
 )
-@_plan_cache
-def hits_q21(spark, sf_dir):
-    return (
-        hits_view(spark, sf_dir)
-        .filter(F.col("URL").like("%page/42%"))
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
 
-
-@_hq(
+_hq(
     "hits_q27_order_scan",
     """
     SELECT SearchPhrase FROM hits WHERE SearchPhrase <> ''
     ORDER BY EventTime, SearchPhrase LIMIT 10
     """,
     "benchmark Q27: filter + ORDER BY scan, top-N pushdown (queries.sql:27)",
+    """
+    SELECT SearchPhrase FROM hits WHERE SearchPhrase != ''
+    ORDER BY EventTime, SearchPhrase LIMIT 10
+    """,
 )
-@_plan_cache
-def hits_q27(spark, sf_dir):
-    return (
-        hits_view(spark, sf_dir)
-        .filter(F.col("SearchPhrase") != "")
-        .orderBy("EventTime", "SearchPhrase")
-        .select("SearchPhrase")
-        .limit(10)
-    )
 
-
-@_hq(
+_hq(
     "hits_q28_having",
     """
     SELECT CounterID, AVG(length(URL)) AS l, COUNT(*) AS c FROM hits
@@ -320,38 +272,24 @@ def hits_q27(spark, sf_dir):
     """,
     "benchmark Q28: HAVING on group count (queries.sql:28; threshold scaled "
     "to the synthetic row count)",
+    """
+    SELECT CounterID, avg(length(URL)) AS l, count() AS c FROM hits
+    GROUP BY CounterID HAVING c > 50 ORDER BY l DESC, CounterID LIMIT 25
+    """,
 )
-@_plan_cache
-def hits_q28(spark, sf_dir):
-    return (
-        hits_view(spark, sf_dir)
-        .groupBy("CounterID")
-        .agg(
-            F.avg(F.length("URL")).alias("l"), F.count(F.lit(1)).alias("c")
-        )
-        .filter(F.col("c") > 50)
-        .orderBy(F.desc("l"), "CounterID")
-        .limit(25)
-    )
 
-
-@_hq(
+_hq(
     "hits_q30_ninety_sums",
     "SELECT "
     + ", ".join(f"CAST(SUM(ResolutionWidth + {i}) AS BIGINT) AS s{i}" for i in range(90))
     + " FROM hits",
     "benchmark Q30: 90 simultaneous sums — codegen-width stress (queries.sql:30)",
+    "SELECT "
+    + ", ".join(f"sum(ResolutionWidth + {i}) AS s{i}" for i in range(90))
+    + " FROM hits",
 )
-@_plan_cache
-def hits_q30(spark, sf_dir):
-    # F.expr strings: 90 py4j calls instead of 450 (sum+add+lit+alias
-    # chains) — ~0.5 s of build time per bench run at r7, measured
-    return hits_view(spark, sf_dir).agg(
-        *[F.expr(f"sum(ResolutionWidth + {i}) AS s{i}") for i in range(90)]
-    )
 
-
-@_hq(
+_hq(
     "hits_q35_ip_keys",
     """
     SELECT ClientIP AS x, ClientIP - 1 AS x1, ClientIP - 2 AS x2,
@@ -360,25 +298,14 @@ def hits_q30(spark, sf_dir):
     """,
     "benchmark Q36: arithmetic-derived group keys (queries.sql:36; "
     "name kept from round 1 for bench continuity)",
+    """
+    SELECT ClientIP AS x, ClientIP - 1 AS x1, ClientIP - 2 AS x2,
+           ClientIP - 3 AS x3, count() AS c
+    FROM hits GROUP BY x, x1, x2, x3 ORDER BY c DESC, x LIMIT 10
+    """,
 )
-@_plan_cache
-def hits_q35(spark, sf_dir):
-    x = F.col("ClientIP")
-    return (
-        hits_view(spark, sf_dir)
-        .groupBy(
-            x.alias("x"),
-            (x - 1).alias("x1"),
-            (x - 2).alias("x2"),
-            (x - 3).alias("x3"),
-        )
-        .agg(F.count(F.lit(1)).alias("c"))
-        .orderBy(F.desc("c"), "x")
-        .limit(10)
-    )
 
-
-@_hq(
+_hq(
     "hits_q39_ternary_src",
     """
     SELECT TraficSourceID, SearchEngineID, AdvEngineID,
@@ -391,37 +318,18 @@ def hits_q35(spark, sf_dir):
     """,
     "benchmark Q40: ternary source attribution over five keys (queries.sql:40 "
     "— the '?:' operator form; name kept from round 1 for bench continuity)",
+    """
+    SELECT TraficSourceID, SearchEngineID, AdvEngineID,
+           ((SearchEngineID = 0 AND AdvEngineID = 0) ? Referer : '') AS Src,
+           URL AS Dst, count() AS PageViews
+    FROM hits WHERE CounterID = 34 AND Refresh = 0
+    GROUP BY TraficSourceID, SearchEngineID, AdvEngineID, Src, Dst
+    ORDER BY PageViews DESC, TraficSourceID, SearchEngineID, AdvEngineID, Src, Dst
+    LIMIT 100
+    """,
 )
-@_plan_cache
-def hits_q39(spark, sf_dir):
-    src = F.when(
-        (F.col("SearchEngineID") == 0) & (F.col("AdvEngineID") == 0),
-        F.col("Referer"),
-    ).otherwise(F.lit(""))
-    return (
-        hits_view(spark, sf_dir)
-        .filter((F.col("CounterID") == 34) & (F.col("Refresh") == 0))
-        .groupBy(
-            "TraficSourceID",
-            "SearchEngineID",
-            "AdvEngineID",
-            src.alias("Src"),
-            F.col("URL").alias("Dst"),
-        )
-        .agg(F.count(F.lit(1)).alias("PageViews"))
-        .orderBy(
-            F.desc("PageViews"),
-            "TraficSourceID",
-            "SearchEngineID",
-            "AdvEngineID",
-            "Src",
-            "Dst",
-        )
-        .limit(100)
-    )
 
-
-@_hq(
+_hq(
     "hits_q43_minute_rollup",
     """
     SELECT date_trunc('minute', EventTime) AS Minute, COUNT(*) AS PageViews
@@ -429,57 +337,28 @@ def hits_q39(spark, sf_dir):
     GROUP BY Minute ORDER BY Minute
     """,
     "benchmark Q43: per-minute drill-down rollup (queries.sql:43)",
-)
-@_plan_cache
-def hits_q43(spark, sf_dir):
-    return (
-        hits_view(spark, sf_dir)
-        .filter((F.col("CounterID") == 34) & (F.col("Refresh") == 0))
-        .groupBy(F.date_trunc("minute", F.col("EventTime")).alias("Minute"))
-        .agg(F.count(F.lit(1)).alias("PageViews"))
-        .orderBy("Minute")
-    )
-
-
-# ---- round-2 additions: the remaining queries.sql lines --------------------
-
-_DRILL = (
-    "CounterID = 34 AND EventDate >= DATE '2024-01-05' "
-    "AND EventDate <= DATE '2024-01-12'"
+    """
+    SELECT toStartOfMinute(EventTime) AS Minute, count() AS PageViews
+    FROM hits WHERE CounterID = 34 AND Refresh = 0
+    GROUP BY Minute ORDER BY Minute
+    """,
 )
 
-
-def _drill(df: DataFrame) -> DataFrame:
-    """Shared Q37-Q43 drill-down filter (CounterID + date window, scaled
-    to the synthetic January 2024 range)."""
-    return df.filter(
-        (F.col("CounterID") == 34)
-        & (F.col("EventDate") >= F.lit("2024-01-05").cast("date"))
-        & (F.col("EventDate") <= F.lit("2024-01-12").cast("date"))
-    )
-
-
-@_hq(
+_hq(
     "hits_q04_sum_uid",
     "SELECT CAST(SUM(UserID) AS BIGINT) AS s FROM hits",
     "benchmark Q4: sum over a key column (queries.sql:4)",
+    "SELECT sum(UserID) AS s FROM hits",
 )
-@_plan_cache
-def hits_q04(spark, sf_dir):
-    return hits_view(spark, sf_dir).agg(F.sum("UserID").alias("s"))
 
-
-@_hq(
+_hq(
     "hits_q06_uniq_phrase",
     "SELECT COUNT(DISTINCT SearchPhrase) AS u FROM hits",
     "benchmark Q6: uniq(SearchPhrase), exact form (queries.sql:6)",
+    "SELECT uniqExact(SearchPhrase) AS u FROM hits",
 )
-@_plan_cache
-def hits_q06(spark, sf_dir):
-    return hits_view(spark, sf_dir).agg(F.countDistinct("SearchPhrase").alias("u"))
 
-
-@_hq(
+_hq(
     "hits_q10_region_multi",
     """
     SELECT RegionID, CAST(SUM(AdvEngineID) AS BIGINT) AS s, COUNT(*) AS c,
@@ -487,24 +366,14 @@ def hits_q06(spark, sf_dir):
     FROM hits GROUP BY RegionID ORDER BY c DESC, RegionID LIMIT 10
     """,
     "benchmark Q10: four aggregates incl. distinct per region (queries.sql:10)",
+    """
+    SELECT RegionID, sum(AdvEngineID) AS s, count() AS c,
+           avg(ResolutionWidth) AS a, uniqExact(UserID) AS u
+    FROM hits GROUP BY RegionID ORDER BY c DESC, RegionID LIMIT 10
+    """,
 )
-@_plan_cache
-def hits_q10(spark, sf_dir):
-    return (
-        hits_view(spark, sf_dir)
-        .groupBy("RegionID")
-        .agg(
-            F.sum("AdvEngineID").alias("s"),
-            F.count(F.lit(1)).alias("c"),
-            F.avg("ResolutionWidth").alias("a"),
-            F.countDistinct("UserID").alias("u"),
-        )
-        .orderBy(F.desc("c"), "RegionID")
-        .limit(10)
-    )
 
-
-@_hq(
+_hq(
     "hits_q11_phone_model",
     """
     SELECT MobilePhoneModel, COUNT(DISTINCT UserID) AS u FROM hits
@@ -512,20 +381,14 @@ def hits_q10(spark, sf_dir):
     ORDER BY u DESC, MobilePhoneModel LIMIT 10
     """,
     "benchmark Q11: filtered string-key GROUP BY + uniq (queries.sql:11)",
+    """
+    SELECT MobilePhoneModel, uniqExact(UserID) AS u FROM hits
+    WHERE MobilePhoneModel != '' GROUP BY MobilePhoneModel
+    ORDER BY u DESC, MobilePhoneModel LIMIT 10
+    """,
 )
-@_plan_cache
-def hits_q11(spark, sf_dir):
-    return (
-        hits_view(spark, sf_dir)
-        .filter(F.col("MobilePhoneModel") != "")
-        .groupBy("MobilePhoneModel")
-        .agg(F.countDistinct("UserID").alias("u"))
-        .orderBy(F.desc("u"), "MobilePhoneModel")
-        .limit(10)
-    )
 
-
-@_hq(
+_hq(
     "hits_q12_phone_pair",
     """
     SELECT MobilePhone, MobilePhoneModel, COUNT(DISTINCT UserID) AS u FROM hits
@@ -533,20 +396,14 @@ def hits_q11(spark, sf_dir):
     ORDER BY u DESC, MobilePhone, MobilePhoneModel LIMIT 10
     """,
     "benchmark Q12: two-key GROUP BY + uniq (queries.sql:12)",
+    """
+    SELECT MobilePhone, MobilePhoneModel, uniqExact(UserID) AS u FROM hits
+    WHERE MobilePhoneModel != '' GROUP BY MobilePhone, MobilePhoneModel
+    ORDER BY u DESC, MobilePhone, MobilePhoneModel LIMIT 10
+    """,
 )
-@_plan_cache
-def hits_q12(spark, sf_dir):
-    return (
-        hits_view(spark, sf_dir)
-        .filter(F.col("MobilePhoneModel") != "")
-        .groupBy("MobilePhone", "MobilePhoneModel")
-        .agg(F.countDistinct("UserID").alias("u"))
-        .orderBy(F.desc("u"), "MobilePhone", "MobilePhoneModel")
-        .limit(10)
-    )
 
-
-@_hq(
+_hq(
     "hits_q14_phrase_uniq",
     """
     SELECT SearchPhrase, COUNT(DISTINCT UserID) AS u FROM hits
@@ -554,20 +411,14 @@ def hits_q12(spark, sf_dir):
     ORDER BY u DESC, SearchPhrase LIMIT 10
     """,
     "benchmark Q14: phrase top-10 by distinct users (queries.sql:14)",
+    """
+    SELECT SearchPhrase, uniqExact(UserID) AS u FROM hits
+    WHERE SearchPhrase != '' GROUP BY SearchPhrase
+    ORDER BY u DESC, SearchPhrase LIMIT 10
+    """,
 )
-@_plan_cache
-def hits_q14(spark, sf_dir):
-    return (
-        hits_view(spark, sf_dir)
-        .filter(F.col("SearchPhrase") != "")
-        .groupBy("SearchPhrase")
-        .agg(F.countDistinct("UserID").alias("u"))
-        .orderBy(F.desc("u"), "SearchPhrase")
-        .limit(10)
-    )
 
-
-@_hq(
+_hq(
     "hits_q15_engine_phrase",
     """
     SELECT SearchEngineID, SearchPhrase, COUNT(*) AS c FROM hits
@@ -575,39 +426,27 @@ def hits_q14(spark, sf_dir):
     ORDER BY c DESC, SearchEngineID, SearchPhrase LIMIT 10
     """,
     "benchmark Q15: engine+phrase GROUP BY top-10 (queries.sql:15)",
+    """
+    SELECT SearchEngineID, SearchPhrase, count() AS c FROM hits
+    WHERE SearchPhrase != '' GROUP BY SearchEngineID, SearchPhrase
+    ORDER BY c DESC, SearchEngineID, SearchPhrase LIMIT 10
+    """,
 )
-@_plan_cache
-def hits_q15(spark, sf_dir):
-    return (
-        hits_view(spark, sf_dir)
-        .filter(F.col("SearchPhrase") != "")
-        .groupBy("SearchEngineID", "SearchPhrase")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .orderBy(F.desc("c"), "SearchEngineID", "SearchPhrase")
-        .limit(10)
-    )
 
-
-@_hq(
+_hq(
     "hits_q16_user_top",
     """
     SELECT UserID, COUNT(*) AS c FROM hits
     GROUP BY UserID ORDER BY c DESC, UserID LIMIT 10
     """,
     "benchmark Q16: per-user counts top-10 (queries.sql:16)",
+    """
+    SELECT UserID, count() AS c FROM hits
+    GROUP BY UserID ORDER BY c DESC, UserID LIMIT 10
+    """,
 )
-@_plan_cache
-def hits_q16(spark, sf_dir):
-    return (
-        hits_view(spark, sf_dir)
-        .groupBy("UserID")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .orderBy(F.desc("c"), "UserID")
-        .limit(10)
-    )
 
-
-@_hq(
+_hq(
     "hits_q18_group_limit",
     """
     SELECT UserID, SearchPhrase, COUNT(*) AS c FROM hits
@@ -615,41 +454,27 @@ def hits_q16(spark, sf_dir):
     """,
     "benchmark Q18: GROUP BY ... LIMIT without ORDER (queries.sql:18; "
     "pinned to key order — a bare LIMIT is nondeterministic on both engines)",
+    """
+    SELECT UserID, SearchPhrase, count() AS c FROM hits
+    GROUP BY UserID, SearchPhrase ORDER BY UserID, SearchPhrase LIMIT 10
+    """,
 )
-@_plan_cache
-def hits_q18(spark, sf_dir):
-    return (
-        hits_view(spark, sf_dir)
-        .groupBy("UserID", "SearchPhrase")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .orderBy("UserID", "SearchPhrase")
-        .limit(10)
-    )
 
-
-@_hq(
+_hq(
     "hits_q20_uint64_full",
     """
     SELECT CAST(UserID64 AS VARCHAR) AS uid64 FROM hits
     WHERE UserID64 = 12345678901234567890 ORDER BY uid64 LIMIT 100
     """,
     "benchmark Q20: UInt64 literal above Int64 max — full-range path via "
-    "Decimal(20,0) (queries.sql:20, SURVEY §7 hard part; "
-    "functions/conversion.py toUInt64Full)",
+    "Decimal(20,0) (queries.sql:20, SURVEY §7 hard part)",
+    """
+    SELECT toString(UserID64) AS uid64 FROM hits
+    WHERE UserID64 = 12345678901234567890 ORDER BY uid64 LIMIT 100
+    """,
 )
-@_plan_cache
-def hits_q20(spark, sf_dir):
-    lit = F.lit("12345678901234567890").cast("decimal(20,0)")
-    return (
-        hits_view(spark, sf_dir)
-        .filter(F.col("UserID64") == lit)
-        .select(F.col("UserID64").cast("string").alias("uid64"))
-        .orderBy("uid64")
-        .limit(100)
-    )
 
-
-@_hq(
+_hq(
     "hits_q22_phrase_url",
     """
     SELECT SearchPhrase, MIN(URL) AS u, COUNT(*) AS c FROM hits
@@ -658,20 +483,14 @@ def hits_q20(spark, sf_dir):
     """,
     "benchmark Q22: LIKE scan + any(URL) (queries.sql:22; any pinned to min "
     "for determinism)",
+    """
+    SELECT SearchPhrase, min(URL) AS u, count() AS c FROM hits
+    WHERE URL LIKE '%page/42%' AND SearchPhrase != ''
+    GROUP BY SearchPhrase ORDER BY c DESC, SearchPhrase LIMIT 10
+    """,
 )
-@_plan_cache
-def hits_q22(spark, sf_dir):
-    return (
-        hits_view(spark, sf_dir)
-        .filter(F.col("URL").like("%page/42%") & (F.col("SearchPhrase") != ""))
-        .groupBy("SearchPhrase")
-        .agg(F.min("URL").alias("u"), F.count(F.lit(1)).alias("c"))
-        .orderBy(F.desc("c"), "SearchPhrase")
-        .limit(10)
-    )
 
-
-@_hq(
+_hq(
     "hits_q23_title_scan",
     """
     SELECT SearchPhrase, MIN(URL) AS u, MIN(Title) AS t, COUNT(*) AS c,
@@ -682,29 +501,16 @@ def hits_q22(spark, sf_dir):
     """,
     "benchmark Q23: multi-LIKE (incl. cyrillic Title) + NOT LIKE + uniq "
     "(queries.sql:23; any pinned to min)",
+    """
+    SELECT SearchPhrase, min(URL) AS u, min(Title) AS t, count() AS c,
+           uniqExact(UserID) AS uu
+    FROM hits
+    WHERE Title LIKE '%Яндекс%' AND URL NOT LIKE '%page/9%' AND SearchPhrase != ''
+    GROUP BY SearchPhrase ORDER BY c DESC, SearchPhrase LIMIT 10
+    """,
 )
-@_plan_cache
-def hits_q23(spark, sf_dir):
-    return (
-        hits_view(spark, sf_dir)
-        .filter(
-            F.col("Title").like("%Яндекс%")
-            & ~F.col("URL").like("%page/9%")
-            & (F.col("SearchPhrase") != "")
-        )
-        .groupBy("SearchPhrase")
-        .agg(
-            F.min("URL").alias("u"),
-            F.min("Title").alias("t"),
-            F.count(F.lit(1)).alias("c"),
-            F.countDistinct("UserID").alias("uu"),
-        )
-        .orderBy(F.desc("c"), "SearchPhrase")
-        .limit(10)
-    )
 
-
-@_hq(
+_hq(
     "hits_q24_star_prewhere",
     """
     SELECT * REPLACE (CAST(UserID64 AS VARCHAR) AS UserID64)
@@ -716,60 +522,45 @@ def hits_q23(spark, sf_dir):
     "UserID64 is emitted as VARCHAR on both sides: DuckDB's fetch path "
     "renders DECIMAL(20,0) as float64 while Spark keeps the exact Decimal "
     "— equal values, unequal serializations (the hits_q20 pattern).",
+    """
+    SELECT EventTime, EventDate, UserID, CounterID, RegionID, AdvEngineID,
+           SearchEngineID, SearchPhrase, URL, Referer, ResolutionWidth,
+           ClientIP, Refresh, TraficSourceID, MobilePhone, MobilePhoneModel,
+           Title, WatchID, DontCountHits, IsLink, IsDownload, URLHash,
+           RefererHash, WindowClientWidth, WindowClientHeight,
+           toString(UserID64) AS UserID64
+    FROM hits PREWHERE URL LIKE '%page/123%'
+    ORDER BY EventTime, WatchID, UserID LIMIT 10
+    """,
 )
-@_plan_cache
-def hits_q24(spark, sf_dir):
-    return (
-        hits_view(spark, sf_dir)
-        .filter(F.col("URL").like("%page/123%"))
-        # UserID joins the tiebreak: WatchID is unique at driver
-        # scales but collapses across sf1 replicas (mod-1e9 image),
-        # and SELECT * carries replica-varying columns
-        .orderBy("EventTime", "WatchID", "UserID")
-        .limit(10)
-        .withColumn("UserID64", F.col("UserID64").cast("string"))
-    )
 
-
-@_hq(
+_hq(
     "hits_q25_time_scan",
     """
     SELECT SearchPhrase FROM hits WHERE SearchPhrase <> ''
     ORDER BY EventTime, WatchID LIMIT 10
     """,
     "benchmark Q25: ORDER BY EventTime scan (queries.sql:25; WatchID tiebreak)",
+    """
+    SELECT SearchPhrase FROM hits WHERE SearchPhrase != ''
+    ORDER BY EventTime, WatchID LIMIT 10
+    """,
 )
-@_plan_cache
-def hits_q25(spark, sf_dir):
-    return (
-        hits_view(spark, sf_dir)
-        .filter(F.col("SearchPhrase") != "")
-        .orderBy("EventTime", "WatchID")
-        .select("SearchPhrase")
-        .limit(10)
-    )
 
-
-@_hq(
+_hq(
     "hits_q26_phrase_scan",
     """
     SELECT SearchPhrase FROM hits WHERE SearchPhrase <> ''
     ORDER BY SearchPhrase, WatchID LIMIT 10
     """,
     "benchmark Q26: ORDER BY string scan (queries.sql:26; WatchID tiebreak)",
+    """
+    SELECT SearchPhrase FROM hits WHERE SearchPhrase != ''
+    ORDER BY SearchPhrase, WatchID LIMIT 10
+    """,
 )
-@_plan_cache
-def hits_q26(spark, sf_dir):
-    return (
-        hits_view(spark, sf_dir)
-        .filter(F.col("SearchPhrase") != "")
-        .orderBy("SearchPhrase", "WatchID")
-        .select("SearchPhrase")
-        .limit(10)
-    )
 
-
-@_hq(
+_hq(
     "hits_q29_referer_domain",
     """
     SELECT regexp_extract(Referer, 'https?://(?:www\\.)?([^/]+)', 1) AS key,
@@ -777,28 +568,18 @@ def hits_q26(spark, sf_dir):
     FROM hits WHERE Referer <> ''
     GROUP BY key HAVING COUNT(*) > 100 ORDER BY l DESC, key LIMIT 25
     """,
-    "benchmark Q29: domainWithoutWWW rollup with HAVING (queries.sql:29; "
-    "threshold scaled, any pinned to min; functions/url.py domainWithoutWWW)",
+    "benchmark Q29: domain rollup with HAVING (queries.sql:29; the domain "
+    "is the regex group domainWithoutWWW keeps; threshold scaled, any "
+    "pinned to min)",
+    r"""
+    SELECT extract(Referer, 'https?://(?:www\\.)?([^/]+)') AS key,
+           avg(length(Referer)) AS l, count() AS c, min(Referer) AS r
+    FROM hits WHERE Referer != ''
+    GROUP BY key HAVING c > 100 ORDER BY l DESC, key LIMIT 25
+    """,
 )
-@_plan_cache
-def hits_q29(spark, sf_dir):
-    key = F.regexp_extract(F.col("Referer"), r"https?://(?:www\.)?([^/]+)", 1)
-    return (
-        hits_view(spark, sf_dir)
-        .filter(F.col("Referer") != "")
-        .groupBy(key.alias("key"))
-        .agg(
-            F.avg(F.length("Referer")).alias("l"),
-            F.count(F.lit(1)).alias("c"),
-            F.min("Referer").alias("r"),
-        )
-        .filter(F.col("c") > 100)
-        .orderBy(F.desc("l"), "key")
-        .limit(25)
-    )
 
-
-@_hq(
+_hq(
     "hits_q31_engine_ip",
     """
     SELECT SearchEngineID, ClientIP, COUNT(*) AS c, CAST(SUM(Refresh) AS BIGINT) AS r,
@@ -808,24 +589,16 @@ def hits_q29(spark, sf_dir):
     ORDER BY c DESC, SearchEngineID, ClientIP LIMIT 10
     """,
     "benchmark Q31: filtered two-key GROUP BY, three aggregates (queries.sql:31)",
+    """
+    SELECT SearchEngineID, ClientIP, count() AS c, sum(Refresh) AS r,
+           avg(ResolutionWidth) AS a
+    FROM hits WHERE SearchPhrase != ''
+    GROUP BY SearchEngineID, ClientIP
+    ORDER BY c DESC, SearchEngineID, ClientIP LIMIT 10
+    """,
 )
-@_plan_cache
-def hits_q31(spark, sf_dir):
-    return (
-        hits_view(spark, sf_dir)
-        .filter(F.col("SearchPhrase") != "")
-        .groupBy("SearchEngineID", "ClientIP")
-        .agg(
-            F.count(F.lit(1)).alias("c"),
-            F.sum("Refresh").alias("r"),
-            F.avg("ResolutionWidth").alias("a"),
-        )
-        .orderBy(F.desc("c"), "SearchEngineID", "ClientIP")
-        .limit(10)
-    )
 
-
-@_hq(
+_hq(
     "hits_q32_watch_ip_filtered",
     """
     SELECT WatchID, ClientIP, COUNT(*) AS c, CAST(SUM(Refresh) AS BIGINT) AS r,
@@ -835,24 +608,15 @@ def hits_q31(spark, sf_dir):
     """,
     "benchmark Q32: near-unique-key GROUP BY, filtered (queries.sql:32 — "
     "high-cardinality hash-agg stress)",
+    """
+    SELECT WatchID, ClientIP, count() AS c, sum(Refresh) AS r,
+           avg(ResolutionWidth) AS a
+    FROM hits WHERE SearchPhrase != ''
+    GROUP BY WatchID, ClientIP ORDER BY c DESC, WatchID, ClientIP LIMIT 10
+    """,
 )
-@_plan_cache
-def hits_q32(spark, sf_dir):
-    return (
-        hits_view(spark, sf_dir)
-        .filter(F.col("SearchPhrase") != "")
-        .groupBy("WatchID", "ClientIP")
-        .agg(
-            F.count(F.lit(1)).alias("c"),
-            F.sum("Refresh").alias("r"),
-            F.avg("ResolutionWidth").alias("a"),
-        )
-        .orderBy(F.desc("c"), "WatchID", "ClientIP")
-        .limit(10)
-    )
 
-
-@_hq(
+_hq(
     "hits_q33_watch_ip_all",
     """
     SELECT WatchID, ClientIP, COUNT(*) AS c, CAST(SUM(Refresh) AS BIGINT) AS r,
@@ -862,42 +626,28 @@ def hits_q32(spark, sf_dir):
     """,
     "benchmark Q33: unfiltered near-unique-key GROUP BY (queries.sql:33 — "
     "the heaviest hash-agg in the suite)",
+    """
+    SELECT WatchID, ClientIP, count() AS c, sum(Refresh) AS r,
+           avg(ResolutionWidth) AS a
+    FROM hits GROUP BY WatchID, ClientIP
+    ORDER BY c DESC, WatchID, ClientIP LIMIT 10
+    """,
 )
-@_plan_cache
-def hits_q33(spark, sf_dir):
-    return (
-        hits_view(spark, sf_dir)
-        .groupBy("WatchID", "ClientIP")
-        .agg(
-            F.count(F.lit(1)).alias("c"),
-            F.sum("Refresh").alias("r"),
-            F.avg("ResolutionWidth").alias("a"),
-        )
-        .orderBy(F.desc("c"), "WatchID", "ClientIP")
-        .limit(10)
-    )
 
-
-@_hq(
+_hq(
     "hits_q34_url_top",
     """
     SELECT URL, COUNT(*) AS c FROM hits
     GROUP BY URL ORDER BY c DESC, URL LIMIT 10
     """,
     "benchmark Q34: heavy string-key GROUP BY (queries.sql:34)",
+    """
+    SELECT URL, count() AS c FROM hits
+    GROUP BY URL ORDER BY c DESC, URL LIMIT 10
+    """,
 )
-@_plan_cache
-def hits_q34(spark, sf_dir):
-    return (
-        hits_view(spark, sf_dir)
-        .groupBy("URL")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .orderBy(F.desc("c"), "URL")
-        .limit(10)
-    )
 
-
-@_hq(
+_hq(
     "hits_q35_const_url",
     """
     SELECT 1 AS one, URL, COUNT(*) AS c FROM hits
@@ -905,19 +655,25 @@ def hits_q34(spark, sf_dir):
     """,
     "benchmark Q35: constant + string GROUP BY (queries.sql:35 — the constant "
     "key the reference's optimizeGroupBy would drop)",
+    """
+    SELECT 1 AS one, URL, count() AS c FROM hits
+    GROUP BY one, URL ORDER BY c DESC, URL LIMIT 10
+    """,
 )
-@_plan_cache
-def hits_q35_const(spark, sf_dir):
-    return (
-        hits_view(spark, sf_dir)
-        .groupBy(F.lit(1).alias("one"), F.col("URL"))
-        .agg(F.count(F.lit(1)).alias("c"))
-        .orderBy(F.desc("c"), "URL")
-        .limit(10)
-    )
 
 
-@_hq(
+# the Q37-Q41 drill-down filter: CounterID + a date window inside the
+# synthetic January 2024 (_DRILL in DuckDB's spelling, _DRILL_CH in CH's)
+_DRILL = (
+    "CounterID = 34 AND EventDate >= DATE '2024-01-05' "
+    "AND EventDate <= DATE '2024-01-12'"
+)
+_DRILL_CH = (
+    "CounterID = 34 AND EventDate >= toDate('2024-01-05') "
+    "AND EventDate <= toDate('2024-01-12')"
+)
+
+_hq(
     "hits_q37_url_pageviews",
     f"""
     SELECT URL, COUNT(*) AS PageViews FROM hits
@@ -926,24 +682,14 @@ def hits_q35_const(spark, sf_dir):
     """,
     "benchmark Q37: counter drill-down, URL pageviews (queries.sql:37; date "
     "window scaled to the synthetic range)",
+    f"""
+    SELECT URL, count() AS PageViews FROM hits
+    WHERE {_DRILL_CH} AND DontCountHits = 0 AND Refresh = 0 AND URL != ''
+    GROUP BY URL ORDER BY PageViews DESC, URL LIMIT 10
+    """,
 )
-@_plan_cache
-def hits_q37(spark, sf_dir):
-    return (
-        _drill(hits_view(spark, sf_dir))
-        .filter(
-            (F.col("DontCountHits") == 0)
-            & (F.col("Refresh") == 0)
-            & (F.col("URL") != "")
-        )
-        .groupBy("URL")
-        .agg(F.count(F.lit(1)).alias("PageViews"))
-        .orderBy(F.desc("PageViews"), "URL")
-        .limit(10)
-    )
 
-
-@_hq(
+_hq(
     "hits_q38_title_pageviews",
     f"""
     SELECT Title, COUNT(*) AS PageViews FROM hits
@@ -951,24 +697,14 @@ def hits_q37(spark, sf_dir):
     GROUP BY Title ORDER BY PageViews DESC, Title LIMIT 10
     """,
     "benchmark Q38: counter drill-down, Title pageviews (queries.sql:38)",
+    f"""
+    SELECT Title, count() AS PageViews FROM hits
+    WHERE {_DRILL_CH} AND DontCountHits = 0 AND Refresh = 0 AND Title != ''
+    GROUP BY Title ORDER BY PageViews DESC, Title LIMIT 10
+    """,
 )
-@_plan_cache
-def hits_q38(spark, sf_dir):
-    return (
-        _drill(hits_view(spark, sf_dir))
-        .filter(
-            (F.col("DontCountHits") == 0)
-            & (F.col("Refresh") == 0)
-            & (F.col("Title") != "")
-        )
-        .groupBy("Title")
-        .agg(F.count(F.lit(1)).alias("PageViews"))
-        .orderBy(F.desc("PageViews"), "Title")
-        .limit(10)
-    )
 
-
-@_hq(
+_hq(
     "hits_q39_link_pageviews",
     f"""
     SELECT URL, COUNT(*) AS PageViews FROM hits
@@ -976,24 +712,14 @@ def hits_q38(spark, sf_dir):
     GROUP BY URL ORDER BY PageViews DESC, URL LIMIT 1000
     """,
     "benchmark Q39: outbound-link pageviews (queries.sql:39)",
+    f"""
+    SELECT URL, count() AS PageViews FROM hits
+    WHERE {_DRILL_CH} AND Refresh = 0 AND IsLink = 1 AND IsDownload = 0
+    GROUP BY URL ORDER BY PageViews DESC, URL LIMIT 1000
+    """,
 )
-@_plan_cache
-def hits_q39_links(spark, sf_dir):
-    return (
-        _drill(hits_view(spark, sf_dir))
-        .filter(
-            (F.col("Refresh") == 0)
-            & (F.col("IsLink") == 1)
-            & (F.col("IsDownload") == 0)
-        )
-        .groupBy("URL")
-        .agg(F.count(F.lit(1)).alias("PageViews"))
-        .orderBy(F.desc("PageViews"), "URL")
-        .limit(1000)
-    )
 
-
-@_hq(
+_hq(
     "hits_q41_urlhash_drill",
     f"""
     SELECT URLHash, EventDate, COUNT(*) AS PageViews FROM hits
@@ -1004,24 +730,16 @@ def hits_q39_links(spark, sf_dir):
     """,
     "benchmark Q41: PK-pruned drill-down on hash equality + IN (queries.sql:41; "
     "halfMD5(referer) stands in as the deterministic RefererHash derivation; constant chosen consistent with CounterID = 34)",
+    f"""
+    SELECT URLHash, EventDate, count() AS PageViews FROM hits
+    WHERE {_DRILL_CH} AND Refresh = 0 AND TraficSourceID IN (-1, 6)
+      AND RefererHash = 3507073702
+    GROUP BY URLHash, EventDate
+    ORDER BY PageViews DESC, URLHash, EventDate LIMIT 100
+    """,
 )
-@_plan_cache
-def hits_q41(spark, sf_dir):
-    return (
-        _drill(hits_view(spark, sf_dir))
-        .filter(
-            (F.col("Refresh") == 0)
-            & F.col("TraficSourceID").isin(-1, 6)
-            & (F.col("RefererHash") == 3507073702)
-        )
-        .groupBy("URLHash", "EventDate")
-        .agg(F.count(F.lit(1)).alias("PageViews"))
-        .orderBy(F.desc("PageViews"), "URLHash", "EventDate")
-        .limit(100)
-    )
 
-
-@_hq(
+_hq(
     "hits_q42_window_size",
     """
     SELECT WindowClientWidth, WindowClientHeight, COUNT(*) AS PageViews
@@ -1035,25 +753,16 @@ def hits_q41(spark, sf_dir):
     "benchmark Q42: viewport-size histogram under single-URL hash drill-down "
     "(queries.sql:42; CounterID filter dropped — it is independent of URLHash "
     "in the synthetic derivation and would starve the result)",
+    """
+    SELECT WindowClientWidth, WindowClientHeight, count() AS PageViews
+    FROM hits
+    WHERE EventDate >= toDate('2024-01-05') AND EventDate <= toDate('2024-01-12')
+      AND Refresh = 0 AND DontCountHits = 0
+      AND URLHash = 4112119562
+    GROUP BY WindowClientWidth, WindowClientHeight
+    ORDER BY PageViews DESC, WindowClientWidth, WindowClientHeight LIMIT 10000
+    """,
 )
-@_plan_cache
-def hits_q42(spark, sf_dir):
-    return (
-        hits_view(spark, sf_dir)
-        .filter(
-            (F.col("EventDate") >= F.lit("2024-01-05").cast("date"))
-            & (F.col("EventDate") <= F.lit("2024-01-12").cast("date"))
-        )
-        .filter(
-            (F.col("Refresh") == 0)
-            & (F.col("DontCountHits") == 0)
-            & (F.col("URLHash") == 4112119562)
-        )
-        .groupBy("WindowClientWidth", "WindowClientHeight")
-        .agg(F.count(F.lit(1)).alias("PageViews"))
-        .orderBy(F.desc("PageViews"), "WindowClientWidth", "WindowClientHeight")
-        .limit(10000)
-    )
 
 
 # ---- STORED hits table (the representation the baseline actually measures) --
@@ -1163,7 +872,7 @@ def _stored(spark: SparkSession, sf_dir: str):
 # why the *_stored entries rebuild with overwrite, never append.)
 
 
-@_hq(
+@_hits_query(
     "hits_q13_stored",
     """
     SELECT SearchPhrase, COUNT(*) AS c FROM hits WHERE SearchPhrase <> ''
@@ -1192,7 +901,7 @@ def hits_q13_stored(spark, sf_dir):
     )
 
 
-@_hq(
+@_hits_query(
     "hits_q17_stored",
     """
     SELECT UserID, SearchPhrase, COUNT(*) AS c FROM hits
@@ -1220,7 +929,7 @@ def hits_q17_stored(spark, sf_dir):
     )
 
 
-@_hq(
+@_hits_query(
     "hits_q19_stored",
     """
     SELECT UserID, minute(EventTime) AS m, SearchPhrase, COUNT(*) AS c FROM hits
@@ -1249,7 +958,7 @@ def hits_q19_stored(spark, sf_dir):
     )
 
 
-@_hq(
+@_hits_query(
     "hits_q21_stored",
     "SELECT COUNT(*) AS cnt FROM hits WHERE URL LIKE '%page/42%'",
     "benchmark Q21 against the STORED hits table: the LIKE runs over "
@@ -1276,7 +985,7 @@ def hits_q21_stored(spark, sf_dir):
     )
 
 
-@_hq(
+@_hits_query(
     "hits_q34_stored",
     """
     SELECT URL, COUNT(*) AS c FROM hits

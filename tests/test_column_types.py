@@ -104,6 +104,37 @@ def test_exact_hash_values(eng):
         assert int(r[0][0]) == 10577349846663553072
 
 
+# DataFrame helper vs the CH-SQL lowering of the same function, over
+# the Int64 column i and the String column s of the registered view
+_HELPER_CASES = [
+    (fn, c)
+    for fn in ("cityHash64", "farmHash64", "metroHash64", "sipHash64")
+    for c in ("i", "s")
+] + [("URLHash", "s"), ("intHash64", "i"), ("intHash32", "i")]
+
+
+@pytest.mark.parametrize("fn,c", _HELPER_CASES)
+def test_dataframe_hash_helpers_match_ch_sql(eng, spark, fn, c):
+    from clickhouse_is_a_free_analytics_dbms_for_big_data__spark.functions import (
+        hashing,
+    )
+
+    want = [int(r[0]) % (1 << 64) for r in eng.sql(
+        f"SELECT {fn}({c}) FROM cv_src ORDER BY i").collect()]
+    df = spark.table("cv_src").orderBy("i")
+    got = [r[0] % (1 << 64) for r in df.select(getattr(hashing, fn)(c)).collect()]
+    assert got == want
+
+
+def test_dataframe_hash_helpers_raise_without_exact_path(spark):
+    from clickhouse_is_a_free_analytics_dbms_for_big_data__spark.functions import (
+        hashing,
+    )
+
+    with pytest.raises(ValueError, match="cityHash64.*one argument"):
+        hashing.cityHash64("i", "s")
+
+
 def test_untyped_hash_argument_raises(eng, spark):
     # no exact lowering for a type: an error naming the function and
     # the type, never another hash's values
@@ -182,3 +213,25 @@ def test_outer_join_fill(join_eng, strict, kind, cond):
         for a, b in _JOIN_WANT[(strict, kind)]
     ]
     assert nulls == sorted(want, key=lambda r: (r[0] or "", r[1] or 0))
+
+
+@pytest.mark.parametrize("use_nulls", [0, 1])
+@pytest.mark.parametrize("cond", ["USING", "ON"])
+@pytest.mark.parametrize("kind", ["LEFT", "RIGHT", "FULL"])
+@pytest.mark.parametrize("strict", ["ALL", "ANY"])
+def test_outer_join_fill_qualified(join_eng, strict, kind, cond, use_nulls):
+    # `jl.a` / `jr.b` read like the bare names of test_outer_join_fill:
+    # type defaults under join_use_nulls = 0, NULL under 1, and the
+    # output columns keep the bare names
+    right, on = (
+        ("jr", "USING k") if cond == "USING" else ("jr_on", "ON k = rk")
+    )
+    tail = f"FROM jl {strict} {kind} JOIN {right} {on} SETTINGS join_use_nulls = {use_nulls}"
+    df = join_eng.sql(f"SELECT jl.a, {right}.b {tail}")
+    assert df.columns == ["a", "b"]
+    key = lambda r: (r[0] or "", r[1] or 0)  # noqa: E731
+    got = sorted((tuple(r) for r in df.collect()), key=key)
+    bare = join_eng.sql(f"SELECT a, b {tail}").collect()
+    assert got == sorted((tuple(r) for r in bare), key=key)
+    if not use_nulls:
+        assert got == sorted(_JOIN_WANT[(strict, kind)], key=key)

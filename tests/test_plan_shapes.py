@@ -439,3 +439,28 @@ def test_stored_hits_rebuild_fingerprint_tracks_source_mtime(spark, tmp_path):
     assert meta1[0] == meta2[0]            # projection version unchanged
     assert meta1[1][1] == meta2[1][1]      # source size unchanged
     assert meta1[1][0] != meta2[1][0], "mtime change must force a rebuild"
+
+
+def test_keyless_aggregate_is_global(spark):
+    # a keyless aggregate stays a global Aggregate (no grouping key);
+    # over an empty input it still returns no rows, as the reference
+    eng = ChEngine(spark)
+    eng.register_table("ka", spark.range(10).withColumnRenamed("id", "x"))
+    df = eng.sql("SELECT sum(x) FROM ka")
+    aggs = [
+        p for p in _optimized_nodes(df) if p.nodeName() == "Aggregate"
+    ]
+    assert aggs and all(a.groupingExpressions().isEmpty() for a in aggs)
+    assert [tuple(r) for r in df.collect()] == [(45,)]
+    assert eng.sql("SELECT sum(x) FROM ka WHERE 0").collect() == []
+    assert eng.sql("SELECT sum(x) AS s FROM ka HAVING s > 100").collect() == []
+
+
+def _optimized_nodes(df) -> list:
+    def walk(node) -> list:
+        kids = node.children()
+        return [node] + [
+            n for i in range(kids.size()) for n in walk(kids.apply(i))
+        ]
+
+    return walk(df._jdf.queryExecution().optimizedPlan())
