@@ -94,19 +94,21 @@ def sql_int_hash32(x: str) -> str:
 
 
 def sql_h128(lo: str, hi: str) -> str:
-    """Hash128to64(uint128(lo, hi)) (city.h:79) on BIGINT patterns."""
+    """Hash128to64(uint128(lo, hi)) (city.h:79) on BIGINT patterns.
+    Both halves are bound outside every lambda, so a half computed by a
+    Python UDF (a String element's hash) is never inside a higher-order
+    function, which Spark refuses (LAMBDA_FUNCTION_WITH_PYTHON_UDF)."""
     kmul = _s64(0x9DDFEA08EB382D69)
     body = _let(
-        f"(__lo ^ __hi) * {kmul}",
+        f"(__lh[0] ^ __lh[1]) * {kmul}",
         "__a0",
         _let(
-            f"(__hi ^ (__a0 ^ shiftrightunsigned(__a0, 47))) * {kmul}",
+            f"(__lh[1] ^ (__a0 ^ shiftrightunsigned(__a0, 47))) * {kmul}",
             "__b0",
             f"((__b0 ^ shiftrightunsigned(__b0, 47)) * {kmul})",
         ),
     )
-    # bind hi once (lo is referenced once inside)
-    return _let(hi, "__hi", _let(lo, "__lo", body))
+    return _let(f"array({lo}, {hi})", "__lh", body)
 
 
 # ---------------------------------------------------------------- UDFs

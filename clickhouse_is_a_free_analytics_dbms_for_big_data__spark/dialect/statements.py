@@ -391,7 +391,78 @@ _CH_FN_TYPES = {
     "isnan": "UInt8", "isfinite": "UInt8", "isinfinite": "UInt8",
     "ipv4numtostring": "String", "ipv4numtostringclassc": "String",
     "ipv4stringtonum": "UInt32", "ipv4toipv6": "FixedString(16)",
+    "arrayenumerate": "Array(UInt32)", "arrayenumerateuniq": "Array(UInt32)",
+    "hex": "String", "unhex": "String",
 }
+
+# functions returning their first non-lambda argument's type: the array
+# transforms keep the array type (FunctionsArray.h), addDays/subtractDays
+# the Date or DateTime they shift
+_CH_FN_ARG_TYPE = {
+    "arraydistinct", "arrayreverse", "arraysort", "arrayreversesort",
+    "arrayslice", "arrayconcat", "arraypushback", "arraypushfront",
+    "arrayresize", "arrayfilter", "adddays", "subtractdays",
+}
+
+_AGG_FNS = {
+    "count", "uniq", "uniqexact", "uniqhll12", "uniqcombined", "sum",
+    "sumwithoverflow", "avg", "min", "max", "any", "anylast",
+    "grouparray", "groupuniqarray", "topk",
+}
+
+
+def _agg_split(low: str) -> tuple[str, str]:
+    """(aggregate name, combinator) of a lower-cased aggregate call
+    name carrying at most one -If/-State/-Merge combinator."""
+    for c in ("if", "state", "merge"):
+        if low.endswith(c) and low[: -len(c)] in _AGG_FNS:
+            return low[: -len(c)], c
+    return low, ""
+
+
+def _agg_type(name: str, ats: list[str | None]) -> str | None:
+    """Return type of aggregate ``name`` over argument types ``ats``
+    (AggregateFunctionFactory.cpp): count/uniq* are UInt64, sum widens
+    to the 64-bit type of the argument's sign, avg is Float64,
+    min/max/any keep the argument type, groupArray/groupUniqArray/topK
+    collect it (skipping NULLs); Nullable arguments wrap the result.
+    Combinators (IAggregateFunctionCombinator): -If drops the
+    condition, -State is the ``AggregateFunction(f, T...)`` state type
+    and -Merge reads one back."""
+    fn, comb = _agg_split(name.lower())
+    inner = name[: len(name) - len(comb)]
+    if fn not in _AGG_FNS:
+        return None
+    if comb == "if":
+        return _agg_type(inner, ats[:-1])
+    if comb == "state":
+        if not ats or None in ats:
+            return None
+        return f"AggregateFunction({inner}, {', '.join(ats)})"
+    if comb == "merge":
+        st = _strip_nullable(ats[0]) if len(ats) == 1 else None
+        if not st or not st.startswith("AggregateFunction("):
+            return None
+        parts = _split_top(tokenize(st)[2:-1], ",")[1:]
+        return _agg_type(inner, [_render_type(p) for p in parts])
+    if fn in ("count", "uniq", "uniqexact", "uniqhll12", "uniqcombined"):
+        return "UInt64"
+    if not ats or ats[0] is None:
+        return None
+    at = ats[0]
+    base = _strip_nullable(at)
+    if fn in ("grouparray", "groupuniqarray", "topk"):
+        return f"Array({base})"
+    if fn == "avg":
+        res = "Float64"
+    elif fn in ("sum", "sumwithoverflow"):
+        if base not in _CH_NUM_BITS:
+            return None
+        _b, signed = _CH_NUM_BITS[base]
+        res = "Float64" if _ch_is_float(base) else _ch_num(64, signed)
+    else:
+        res = base
+    return _wrap_nullable(res) if at.startswith("Nullable(") else res
 
 
 def _binop_type(op: str, lt: str | None, rt: str | None) -> str | None:
@@ -408,6 +479,8 @@ def _binop_type(op: str, lt: str | None, rt: str | None) -> str | None:
         return "Int32"
     if lt in ("Date", "DateTime") and rt in _CH_NUM_BITS and op in ("+", "-"):
         return lt  # date arithmetic keeps the date type
+    if rt in ("Date", "DateTime") and lt in _CH_NUM_BITS and op == "+":
+        return rt
     if lt not in _CH_NUM_BITS or rt not in _CH_NUM_BITS:
         return None
     if op == "/":
@@ -565,10 +638,7 @@ def _infer_ch_type(
         # re-parses via strtod (golden 00031 -0xFFFFFFFFFFFFFFFF)
         return "Float64"
     if t0.text == "[":
-        # array literal: Array(least supertype of the elements)
-        elems = _split_top(toks[1:-1], ",") if len(toks) > 2 else []
-        sup = _ch_supertype([_infer_ch_type(e, cols) for e in elems])
-        return f"Array({sup})" if sup else None
+        return _array_type(toks[1:-1], cols)
     if len(toks) == 1:
         lit = _infer_literal(t0)
         if lit is not None:
@@ -635,33 +705,35 @@ def _infer_ch_type(
             if inner is not None and inner.startswith("Array(") and inner.endswith(")"):
                 return inner[len("Array(") : -1]
             return None
-        # aggregate return types (AggregateFunctionFactory.cpp):
-        # sum widens to the 64-bit type of the argument's sign,
-        # count/uniq* are UInt64, avg is Float64, min/max/any keep the
-        # argument type, groupArray collects it (skipping NULLs);
-        # Nullable arguments wrap the result
-        if fname in ("count", "uniq", "uniqexact", "uniqhll12",
-                     "uniqcombined"):
-            return "UInt64"
-        if fname in ("sum", "sumwithoverflow", "avg", "min", "max",
-                     "any", "anylast", "grouparray", "groupuniqarray"):
+        if fname == "array":
+            return _array_type(toks[2:-1], cols)
+        if fname in _CH_FN_ARG_TYPE:
+            for a in _split_top(toks[2:-1], ","):
+                if not any(t.text == "->" for t in a):
+                    return _infer_ch_type(a, cols)
+            return None
+        if fname == "bitmasktoarray":
+            at = _infer_ch_type(toks[2:-1], cols)
+            return f"Array({at})" if at else None
+        if fname == "arrayreduce":
+            # the named aggregate over the arrays' element types
             args = _split_top(toks[2:-1], ",")
-            at = _infer_ch_type(args[0], cols) if args else None
-            if at is None:
-                return None
-            base = _strip_nullable(at)
-            if fname.startswith("group"):
-                return f"Array({base})"
-            if fname == "avg":
-                res = "Float64"
-            elif fname in ("sum", "sumwithoverflow"):
-                if base not in _CH_NUM_BITS:
-                    return None
-                _b, signed = _CH_NUM_BITS[base]
-                res = "Float64" if _ch_is_float(base) else _ch_num(64, signed)
-            else:
-                res = base
-            return _wrap_nullable(res) if at.startswith("Nullable(") else res
+            ats = [_infer_ch_type(a, cols) for a in args[1:]]
+            if args[0][:1] and args[0][0].kind == "string" and all(
+                (t or "").startswith("Array(") for t in ats
+            ):
+                return _agg_type(
+                    args[0][0].text.strip("'"), [t[6:-1] for t in ats]
+                )
+            return None
+        close = _find_close(toks, 1)
+        arg_toks = toks[2:close]
+        if close + 1 < len(toks) and toks[close + 1].text == "(":
+            # parametric aggregate: topK(10)(x)
+            arg_toks, close = toks[close + 2 : -1], _find_close(toks, close + 1)
+        if close == len(toks) - 1 and _agg_split(fname)[0] in _AGG_FNS:
+            ats = [_infer_ch_type(a, cols) for a in _split_top(arg_toks, ",")]
+            return _agg_type(t0.text, ats)
         # Nullable family (FunctionsNull.cpp / DataTypeNullable):
         if fname in ("materialize", "identity"):
             return _infer_ch_type(_split_top(toks[2:-1], ",")[0], cols)
@@ -755,9 +827,10 @@ def _ch_supertype(types: list[str | None]) -> str | None:
     """Least common CH numeric supertype (DataTypes/getLeastCommonType
     semantics for the numeric subset): widest bits win, mixing signs
     needs the next wider signed type (UInt8+Int8 → Int16)."""
-    ts = [t for t in types]
-    if not ts or any(t is None for t in ts):
+    if not types or any(t is None for t in types):
         return None
+    # Nothing (an empty array's element) yields to any type
+    ts = [t for t in types if t != "Nothing"] or list(types)
     # Null / Nullable(T) lift (getLeastCommonType over DataTypeNull):
     # supertype(T, Null) = Nullable(T); all-Null = Null
     if any(t == "Null" or t.startswith("Nullable(") for t in ts):
@@ -785,6 +858,16 @@ def _ch_supertype(types: list[str | None]) -> str | None:
         b, s = _CH_NUM_BITS[t]
         bits = max(bits, b if s == signed else b * 2)
     return _ch_num(bits, signed)
+
+
+def _array_type(elems: list[Token], cols: dict[str, str]) -> str | None:
+    """Array literal ``[…]`` / ``array(…)`` over the element tokens:
+    Array of the elements' least supertype; ``[]`` is Array(Nothing)
+    (DataTypeNothing)."""
+    sup = "Nothing" if not elems else _ch_supertype(
+        [_infer_ch_type(e, cols) for e in _split_top(elems, ",")]
+    )
+    return f"Array({sup})" if sup else None
 
 
 def _find_close(toks: list[Token], i: int) -> int:

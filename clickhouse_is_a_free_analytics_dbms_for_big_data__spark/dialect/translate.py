@@ -1201,9 +1201,7 @@ def _translate_select_inner(tokens: list[Token], ctx: Ctx) -> str:
             # posexplode_outer yields NULL; reroute references through
             # an ifnull when the element type is statically known
             _ft, _fal = _strip_alias(first_toks)
-            _at = _infer_expr_ch_type(_ft, ctx) or ""
-            if _at.startswith("Nullable("):
-                _at = _at[9:-1]
+            _at = _base_type(_ft, ctx)
             if _at.startswith("Array("):
                 _d = _elem_default_sql(_at[6:-1], exprs[0][1])
                 if _d is not None:
@@ -3911,112 +3909,76 @@ def _rewrite(tokens: list[Token], ctx: Ctx) -> str:
     return text
 
 
-# Syntactic result-kind classification.  The reference's type system
-# resolves Date/DateTime arithmetic and array-vs-string overloads at
-# analysis time (DataTypes/); without column types we approximate by
-# classifying the outermost call.  Conservative: unknown -> None, and
-# the arithmetic fold below only fires when a kind IS known.
-_DATE_FNS = {
-    "toDate", "today", "yesterday", "toMonday", "toStartOfMonth",
-    "toStartOfQuarter", "toStartOfYear", "addDays", "subtractDays",
-}
-_DATETIME_FNS = {
-    "toDateTime", "now", "toStartOfMinute", "toStartOfFiveMinute",
-    "toStartOfHour", "toStartOfDay", "timeSlot", "toTime",
-}
-_ARRAY_FNS = {
-    "array", "range", "splitByChar", "splitByString", "alphaTokens",
-    "extractAll", "arrayMap", "arrayFilter", "arraySort",
-    "arrayReverseSort", "arrayConcat", "arraySlice", "arrayDistinct",
-    "arrayEnumerate", "arrayEnumerateUniq", "arrayPushBack",
-    "groupArrayIf", "groupArrayMerge", "groupUniqArrayIf",
-    "groupUniqArrayMerge",
-    "arrayPushFront", "arrayResize", "arrayReverse", "groupArray",
-    "groupUniqArray", "topK", "bitmaskToArray", "emptyArrayUInt8",
-    "emptyArrayUInt16", "emptyArrayUInt32", "emptyArrayUInt64",
-    "emptyArrayInt8", "emptyArrayInt16", "emptyArrayInt32",
-    "emptyArrayInt64", "emptyArrayFloat32", "emptyArrayFloat64",
-    "emptyArrayDate", "emptyArrayDateTime", "emptyArrayString",
-}
+def _base_type(toks: list[Token], ctx: Ctx) -> str:
+    """An expression's CH type with Nullable stripped; "" when it is not
+    statically inferable."""
+    t = _infer_expr_ch_type(toks, ctx) or "" if toks else ""
+    return t[9:-1] if t.startswith("Nullable(") else t
 
 
-def _syntactic_kind(toks: list[Token]) -> str | None:
-    """Kind of a whole expression item: 'date' | 'datetime' | 'array'
-    or None when not syntactically evident."""
-    if not toks:
-        return None
-    t0 = toks[0]
-    if t0.text == "[" and _match_paren(toks, 0) == len(toks) - 1:
-        return "array"
-    if t0.kind == "ident" and len(toks) > 1 and toks[1].text == "(":
-        if _match_paren(toks, 1) == len(toks) - 1:
-            if t0.text in _ARRAY_FNS:
-                return "array"
-            if (
-                t0.text == "arrayReduce"
-                and len(toks) > 2
-                and toks[2].kind == "string"
-                and toks[2].text.strip("'").startswith(
-                    ("groupArray", "groupUniqArray")
-                )
-            ):
-                return "array"
-            if t0.text in _DATE_FNS:
-                return "date"
-            if t0.text in _DATETIME_FNS:
-                return "datetime"
-            if t0.text in ("least", "greatest", "materialize"):
-                # type-transparent: result kind is the first argument's
-                # (FunctionsConditional.cpp least/greatest supertype)
-                inner = _split_top(toks[2:-1], ",")
-                if inner:
-                    return _syntactic_kind(inner[0])
-    return None
+def _splice(
+    pieces: list[str], tok_slices: list[list[Token]], s: int, e: int, rep: str
+) -> None:
+    """Fold pieces[s:e] into the one rendered piece ``rep``, keeping its
+    source tokens aligned so later folds can type it."""
+    pieces[s:e] = [rep]
+    tok_slices[s:e] = [[t for sl in tok_slices[s:e] for t in sl]]
 
 
 _ARITH_OPS = {"+", "-", "*", "/", "%", "DIV"}
 
 
-def _fold_date_arith(pieces: list[str], kinds: list[str | None]) -> None:
+def _fold_date_arith(
+    pieces: list[str], tok_slices: list[list[Token]], ctx: Ctx
+) -> None:
     """Rewrite Date/DateTime +/- N and Date-Date in place (the
     reference's DateTime arithmetic is in seconds, Date in days —
-    FunctionsDateTime / FunctionsArithmetic type dispatch).
+    FunctionsDateTime / FunctionsArithmetic type dispatch).  An
+    operand's type is its CH type (_infer_expr_ch_type), so a folded
+    ``d + 1`` still types as Date and a chain folds again.
 
     Conservative: both neighbours must be operands (not operators) and
     the fold is skipped when a tighter-binding * / % follows, so plain
     numeric expressions and precedence-sensitive forms pass through
     untouched (Spark then reports the same error it would today).
     """
+
+    def date_type(k: int) -> str | None:
+        t = _base_type(tok_slices[k], ctx)
+        return t if t in ("Date", "DateTime") else None
+
     j = 1
     while j < len(pieces) - 1:
         op = pieces[j]
         if op not in ("+", "-"):
             j += 1
             continue
-        lk, rk = kinds[j - 1], kinds[j + 1]
+        lk, rk = date_type(j - 1), date_type(j + 1)
         # a Date/DateTime operand binds the seconds/days side as one
         # unit — collapse tighter-binding multiplicative runs of plain
         # numbers around the +/- first (now() - 24*60*60, 24*60 + now())
-        if lk in ("date", "datetime") and rk is None:
+        if lk and rk is None:
             e = j + 1
             while (
                 e + 2 < len(pieces)
                 and pieces[e + 1] in ("*", "%", "DIV")
-                and kinds[e + 2] is None
+                and date_type(e + 2) is None
             ):
                 e += 2
             if e > j + 1:
-                pieces[j + 1 : e + 1] = ["(" + " ".join(pieces[j + 1 : e + 1]) + ")"]
-                kinds[j + 1 : e + 1] = [None]
-        elif op == "+" and rk in ("date", "datetime") and lk is None:
+                run = "(" + " ".join(pieces[j + 1 : e + 1]) + ")"
+                _splice(pieces, tok_slices, j + 1, e + 1, run)
+        elif op == "+" and rk and lk is None:
             s = j - 1
-            while s - 2 >= 0 and pieces[s - 1] in ("*", "%", "DIV") and kinds[s - 2] is None:
+            while (
+                s - 2 >= 0
+                and pieces[s - 1] in ("*", "%", "DIV")
+                and date_type(s - 2) is None
+            ):
                 s -= 2
             if s < j - 1:
-                pieces[s : j] = ["(" + " ".join(pieces[s:j]) + ")"]
-                kinds[s : j] = [None]
+                _splice(pieces, tok_slices, s, j, "(" + " ".join(pieces[s:j]) + ")")
                 j = s + 1
-        lk, rk = kinds[j - 1], kinds[j + 1]
         l, r = pieces[j - 1], pieces[j + 1]
         if (
             l in _ARITH_OPS
@@ -4027,29 +3989,32 @@ def _fold_date_arith(pieces: list[str], kinds: list[str | None]) -> None:
             j += 1
             continue
         rep: str | None = None
-        krep: str | None = None
-        if op == "-" and lk == "date" and rk == "date":
+        if op == "-" and lk == rk == "Date":
             rep = f"datediff({l}, {r})"
-        elif op == "-" and lk == "datetime" and rk == "datetime":
+        elif op == "-" and lk == rk == "DateTime":
             rep = f"(unix_timestamp({l}) - unix_timestamp({r}))"
-        elif lk == "date" and rk is None:
-            fn = "date_add" if op == "+" else "date_sub"
-            rep, krep = f"{fn}({l}, CAST({r} AS INT))", "date"
-        elif lk == "datetime" and rk is None:
-            n = r if op == "+" else f"-({r})"
-            rep, krep = f"timestampadd(SECOND, {n}, {l})", "datetime"
-        elif op == "+" and lk is None and rk == "date":
-            rep, krep = f"date_add({r}, CAST({l} AS INT))", "date"
-        elif op == "+" and lk is None and rk == "datetime":
-            rep, krep = f"timestampadd(SECOND, {l}, {r})", "datetime"
+        elif (lk and rk is None) or (op == "+" and rk and lk is None):
+            # Date is UInt16 days and DateTime UInt32 seconds since the
+            # epoch: the shifted value wraps into that range
+            # (toDate('1970-01-01') - 1 is 2149-06-06)
+            x, n = (l, r) if lk else (r, l)
+            if (lk or rk) == "Date":
+                rep = (
+                    f"date_add(DATE '1970-01-01', CAST(pmod(datediff({x}, "
+                    f"DATE '1970-01-01') {op} ({n}), 65536) AS INT))"
+                )
+            else:
+                rep = (
+                    f"timestamp_seconds(pmod(unix_timestamp({x}) {op} ({n}), "
+                    f"4294967296))"
+                )
         if rep is not None:
-            pieces[j - 1 : j + 2] = [rep]
-            kinds[j - 1 : j + 2] = [krep]
+            _splice(pieces, tok_slices, j - 1, j + 2, rep)
             continue
         j += 1
 
 
-def _fold_div(pieces: list[str], kinds: list[str | None]) -> None:
+def _fold_div(pieces: list[str], tok_slices: list[list[Token]]) -> None:
     """CH ``/`` is always Float64 division with IEEE semantics — x/0 is
     ±Infinity and 0/0 is NaN (FunctionsArithmetic.h DivideFloatingImpl
     + NumberTraits ResultOfFloatingPointDivision); Spark returns NULL.
@@ -4084,12 +4049,11 @@ def _fold_div(pieces: list[str], kinds: list[str | None]) -> None:
             else:
                 acc = f"(({acc}) {op} ({r}))"
             k += 2
-        pieces[s : e + 1] = [acc]
-        kinds[s : e + 1] = [None]
+        _splice(pieces, tok_slices, s, e + 1, acc)
         j = s + 1
 
 
-def _fold_case(pieces: list[str], kinds: list[str | None]) -> None:
+def _fold_case(pieces: list[str], tok_slices: list[list[Token]]) -> None:
     """Searched ``CASE WHEN <UInt8> THEN`` conditions get a BOOLEAN cast
     (the reference accepts numeric conditions —
     FunctionsConditional.cpp caseWithoutExpr; Spark demands BOOLEAN).
@@ -4118,16 +4082,12 @@ def _fold_case(pieces: list[str], kinds: list[str | None]) -> None:
                 k += 1
             if k < len(pieces) and k > i + 1:
                 cond = " ".join(pieces[i + 1 : k])
-                pieces[i + 1 : k] = [f"CAST(({cond}) AS BOOLEAN)"]
-                kinds[i + 1 : k] = [None]
+                _splice(pieces, tok_slices, i + 1, k, f"CAST(({cond}) AS BOOLEAN)")
         i += 1
 
 
 def _fold_case_f32_defect(
-    pieces: list[str],
-    kinds: list[str | None],
-    tok_slices: list[list[Token]],
-    ctx: Ctx,
+    pieces: list[str], tok_slices: list[list[Token]], ctx: Ctx
 ) -> None:
     """``CASE <expr> WHEN … ELSE … END`` whose result type is Float32
     replays the reference's transform defect (golden 00328).
@@ -4226,12 +4186,7 @@ def _fold_case_f32_defect(
             f"element_at(transform(array({low}), "
             f"__cfb -> {formula}), 1)"
         )
-        whole_toks: list[Token] = []
-        for sl in tok_slices[i : end_idx + 1]:
-            whole_toks.extend(sl)
-        pieces[i : end_idx + 1] = [out]
-        kinds[i : end_idx + 1] = [None]
-        tok_slices[i : end_idx + 1] = [whole_toks]
+        _splice(pieces, tok_slices, i, end_idx + 1, out)
         i += 1
 
 
@@ -4239,10 +4194,7 @@ _BIG_LIT_RE = re.compile(r"\b(\d{19,})\b")
 
 
 def _fold_u64_wrap_mod(
-    pieces: list[str],
-    kinds: list[str | None],
-    tok_slices: list[list[Token]],
-    ctx: Ctx,
+    pieces: list[str], tok_slices: list[list[Token]], ctx: Ctx
 ) -> None:
     """UInt64 modulo with mod-2^64 wraparound on the left side.
 
@@ -4298,24 +4250,16 @@ def _fold_u64_wrap_mod(
         if t != "UInt64":
             j += 1
             continue
-        run_toks = list(left_toks)
-        for sl in tok_slices[j : j + 2]:
-            run_toks.extend(sl)
         acc = to_bits(run[0])
         for p in run[2::2]:
             acc = f"({acc} * {to_bits(p)})"
         out = f"CAST(pmod({H.signed_to_u64(acc)}, {rhs}) AS BIGINT)"
-        pieces[s : j + 2] = [out]
-        kinds[s : j + 2] = [None]
-        tok_slices[s : j + 2] = [run_toks]
+        _splice(pieces, tok_slices, s, j + 2, out)
         j = s + 1
 
 
 def _fold_array_in(
-    pieces: list[str],
-    kinds: list[str | None],
-    tok_slices: list[list[Token]],
-    ctx: Ctx,
+    pieces: list[str], tok_slices: list[list[Token]], ctx: Ctx
 ) -> None:
     """Array IN set: membership of ANY element (Set::execute over an
     array column checks elements — `[1,2,3] IN (3,4,5)` is 1, golden
@@ -4336,13 +4280,10 @@ def _fold_array_in(
         if li < 0:
             j += 1
             continue
-        lhs_kind_array = kinds[li] == "array" or (
-            (_infer_expr_ch_type(tok_slices[li], ctx) or "").startswith(
-                "Array("
-            )
-        )
         rhs = pieces[j + 1]
-        if not lhs_kind_array or not rhs.lstrip().startswith("("):
+        if not rhs.lstrip().startswith("(") or not _base_type(
+            tok_slices[li], ctx
+        ).startswith("Array("):
             j += 1
             continue
         if re.match(r"\(\s*SELECT", rhs, re.I):
@@ -4353,12 +4294,7 @@ def _fold_array_in(
             if neg
             else f"exists({pieces[li]}, __aie -> __aie IN {rhs})"
         )
-        run_toks: list[Token] = []
-        for sl in tok_slices[li : j + 2]:
-            run_toks.extend(sl)
-        pieces[li : j + 2] = [out]
-        kinds[li : j + 2] = [None]
-        tok_slices[li : j + 2] = [run_toks]
+        _splice(pieces, tok_slices, li, j + 2, out)
         j = li + 1
 
 
@@ -4370,7 +4306,6 @@ def _rw_seq(
     Handles ternary ``? :`` at this level by collecting the three arms.
     """
     pieces: list[str] = []
-    kinds: list[str | None] = []
     tok_slices: list[list[Token]] = []
     q_pos: int | None = None
     c_pos: int | None = None
@@ -4404,7 +4339,6 @@ def _rw_seq(
                 piece = f"CAST({-float(int(tokens[i + 1].text))!r} AS DOUBLE)"
                 piece, j = _postfix(piece, tokens, i + 2, ctx)
                 pieces.append(piece)
-                kinds.append(None)
                 tok_slices.append(tokens[i:j])
                 i = j
                 continue
@@ -4421,7 +4355,6 @@ def _rw_seq(
             # BOOLEAN, so the operand gets a CAST (see below)
             not_pos.append(len(pieces))
             pieces.append("NOT")
-            kinds.append(None)
             tok_slices.append([t])
             i += 1
             continue
@@ -4435,14 +4368,12 @@ def _rw_seq(
         if t.text == "?":
             q_pos = len(pieces)
             pieces.append("?")
-            kinds.append(None)
             tok_slices.append([t])
             i += 1
             continue
         if t.text == ":" and q_pos is not None:
             c_pos = len(pieces)
             pieces.append(":")
-            kinds.append(None)
             tok_slices.append([t])
             i += 1
             continue
@@ -4492,17 +4423,14 @@ def _rw_seq(
                 lhs = pieces[lhs_idx]
                 whole = f"{lhs} {'NOT ' if neg else ''}IN {piece}"
                 del pieces[lhs_idx:]
-                del kinds[lhs_idx:]
                 del tok_slices[lhs_idx:]
                 pieces.append(
                     f"(CASE WHEN ({lhs}) IS NULL THEN NULL "
                     f"ELSE ({whole}) END)"
                 )
-                kinds.append(None)
                 tok_slices.append([])
                 continue
         pieces.append(piece)
-        kinds.append(_syntactic_kind(tokens[start:i]))
         tok_slices.append(tokens[start:i])
     # Enum vs numeric comparison: the reference compares by the enum
     # VALUE (DataTypeEnum); Spark would coerce the number to STRING
@@ -4585,12 +4513,12 @@ def _rw_seq(
             f"if(CAST(({cond}) AS BOOLEAN), {then}, {other}))",
             i,
         )
-    _fold_date_arith(pieces, kinds)
-    _fold_u64_wrap_mod(pieces, kinds, tok_slices, ctx)
-    _fold_array_in(pieces, kinds, tok_slices, ctx)
-    _fold_div(pieces, kinds)
-    _fold_case(pieces, kinds)
-    _fold_case_f32_defect(pieces, kinds, tok_slices, ctx)
+    _fold_date_arith(pieces, tok_slices, ctx)
+    _fold_u64_wrap_mod(pieces, tok_slices, ctx)
+    _fold_array_in(pieces, tok_slices, ctx)
+    _fold_div(pieces, tok_slices)
+    _fold_case(pieces, tok_slices)
+    _fold_case_f32_defect(pieces, tok_slices, ctx)
     # NOT binds looser than comparisons but tighter than AND/OR: wrap
     # the operand run (everything up to AND/OR or end) with a boolean
     # cast so `NOT 0` / `NOT x = y` both work; innermost (rightmost)
@@ -5265,8 +5193,13 @@ def _hash_fn(
                 f"AS DECIMAL(20, 0))"
             )
         raise unsupported(f"{len(args)} arguments")
+    if name in ("sipHash64", "URLHash") and arg_items:
+        # String-only in the reference (FunctionStringHash64:879,
+        # URLHash's getReturnType)
+        t = _base_type(arg_items[0], ctx)
+        if t and t != "String":
+            raise ValueError(f"{name}: takes a String argument, not {t}")
     if name == "sipHash64":
-        # String-only in the reference (FunctionStringHash64:879)
         if len(args) == 1:
             return H.signed_to_u64(f"ch_sip64({args[0]})")
         raise unsupported(f"{len(args)} arguments")
@@ -5384,17 +5317,11 @@ def _uniq_key_sql(arg_items: list[list[Token]], ctx: Ctx) -> tuple[str, bool] | 
     for item in arg_items:
         elems.extend(_hash_flatten(item, ctx))
 
-    def base_type(toks: list[Token]) -> str | None:
-        t = _infer_expr_ch_type(toks, ctx)
-        if t is None:
-            return None
-        return t[9:-1] if t.startswith("Nullable(") else t
-
     if len(elems) == 1:
         toks = elems[0]
         sql = _rewrite(toks, ctx)
-        t = base_type(toks)
-        if t is None:
+        t = _base_type(toks, ctx)
+        if not t:
             return None
         as_int = H.element_to_int_sql(sql, t)
         if as_int is not None:
@@ -5414,8 +5341,8 @@ def _uniq_key_sql(arg_items: list[list[Token]], ctx: Ctx) -> tuple[str, bool] | 
     width_parts: list[str] = []
     for toks in elems:
         sql = _rewrite(toks, ctx)
-        t = base_type(toks)
-        if t is None:
+        t = _base_type(toks, ctx)
+        if not t:
             return None
         if t == "String" or t.startswith("FixedString"):
             val_parts.append(f"CAST({sql} AS STRING)")
@@ -5538,15 +5465,11 @@ def _apply_fn(
             return out
     # length/empty/notEmpty are array+string polymorphic in the
     # reference (FunctionsArray.cpp / FunctionsString.cpp); Spark splits
-    # them into size() and length().  Dispatch on the syntactic kind of
-    # the argument — string-typed columns keep the string form.
+    # them into size() and length().  Dispatch on the argument's type.
     if (
         name in ("length", "empty", "notEmpty")
         and arg_items
-        and (
-            _syntactic_kind(arg_items[0]) == "array"
-            or (_infer_expr_ch_type(arg_items[0], ctx) or "").startswith("Array")
-        )
+        and _base_type(arg_items[0], ctx).startswith("Array(")
     ):
         if name == "length":
             return f"size({args[0]})"
@@ -5566,9 +5489,7 @@ def _apply_fn(
     # argument type with overflow; golden 00282 sums cityHash64 values)
     # — Java BIGINT addition wraps identically on the bit patterns
     if name == "sum" and arg_items and len(args) == 1:
-        at0 = _infer_expr_ch_type(arg_items[0], ctx) or ""
-        if at0.startswith("Nullable("):
-            at0 = at0[9:-1]
+        at0 = _base_type(arg_items[0], ctx)
         if at0 == "UInt64":
             from . import hash_sql as H
 
@@ -5579,9 +5500,7 @@ def _apply_fn(
     # NaN) wrap to 0, negatives truncate then wrap mod 2^64 — Spark's
     # DOUBLE→BIGINT cast saturates at Int64 max instead (golden 00232)
     if name == "toUInt64" and arg_items and len(args) == 1:
-        at0 = _infer_expr_ch_type(arg_items[0], ctx) or ""
-        if at0.startswith("Nullable("):
-            at0 = at0[9:-1]
+        at0 = _base_type(arg_items[0], ctx)
         if at0.startswith("Float"):
             from . import hash_sql as H
 
@@ -5606,9 +5525,7 @@ def _apply_fn(
         and arg_items
         and len(args) == 1
     ):
-        at0 = _infer_expr_ch_type(arg_items[0], ctx) or ""
-        if at0.startswith("Nullable("):
-            at0 = at0[9:-1]
+        at0 = _base_type(arg_items[0], ctx)
         if at0 == "UInt64":
             from . import hash_sql as H
 
@@ -5627,9 +5544,7 @@ def _apply_fn(
         and arg_items
         and len(args) >= 1
     ):
-        at = _infer_expr_ch_type(arg_items[0], ctx) or ""
-        if at.startswith("Nullable("):
-            at = at[9:-1]
+        at = _base_type(arg_items[0], ctx)
         if (
             at.startswith(("UInt", "Int", "Float"))
             or at.startswith("Enum")
@@ -5783,9 +5698,7 @@ def _apply_fn(
         and len(args) == 1
         and re.fullmatch(r"to(U?Int|Float)(8|16|32|64)", name)
     ):
-        at = _infer_expr_ch_type(arg_items[0], ctx) or ""
-        if at.startswith("Nullable("):
-            at = at[9:-1]
+        at = _base_type(arg_items[0], ctx)
         if at.startswith("Enum"):
             ev = _enum_value_sql(args[0], at)
             if ev is not None:
@@ -5793,9 +5706,7 @@ def _apply_fn(
     # emptyArrayToSingle: [] → [default] with the INFERRED element
     # default (typed tuples/Nullables included) when available
     if name == "emptyArrayToSingle" and arg_items and len(args) == 1:
-        at = _infer_expr_ch_type(arg_items[0], ctx) or ""
-        if at.startswith("Nullable("):
-            at = at[9:-1]
+        at = _base_type(arg_items[0], ctx)
         if at.startswith("Array("):
             d = _elem_default_sql(at[6:-1], args[0])
             if d is not None:
@@ -5805,9 +5716,7 @@ def _apply_fn(
     # arrayFirst with no match yields the element TYPE DEFAULT
     # (FunctionsHigherOrder.h ArrayFirstImpl pushes default), not NULL
     if name == "arrayFirst" and arg_items and len(args) == 2:
-        at = _infer_expr_ch_type(arg_items[1], ctx) or ""
-        if at.startswith("Nullable("):
-            at = at[9:-1]
+        at = _base_type(arg_items[1], ctx)
         if at.startswith("Array("):
             arr_sql = args[1]
             d = _elem_default_sql(at[6:-1], arr_sql)
@@ -5862,9 +5771,7 @@ def _apply_fn(
     # the [] subscript in _postfix (FunctionsArray.cpp arrayElement)
     if name == "arrayElement" and arg_items and len(args) == 2:
         arr, idx = args
-        at = _infer_expr_ch_type(arg_items[0], ctx) or ""
-        if at.startswith("Nullable("):
-            at = at[9:-1]
+        at = _base_type(arg_items[0], ctx)
         default = (
             _elem_default_sql(at[6:-1], arr) if at.startswith("Array(") else None
         )
@@ -6272,9 +6179,7 @@ def _postfix(
             # else NULL (documented fallback divergence)
             default = None
             if base_toks is not None:
-                at = _infer_expr_ch_type(base_toks, ctx) or ""
-                if at.startswith("Nullable("):
-                    at = at[9:-1]
+                at = _base_type(base_toks, ctx)
                 if at.startswith("Array("):
                     default = _elem_default_sql(at[6:-1], base)
             got = (

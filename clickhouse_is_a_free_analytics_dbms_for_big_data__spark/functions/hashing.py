@@ -55,14 +55,16 @@ def SHA256(s) -> Column:
 _INT_TYPES = ("tinyint", "smallint", "int", "bigint", "decimal(20,0)")
 
 
-def _exact_hash64(name: str, scalar_fn_name: str, ints_as_text: bool):
+def _exact_hash64(name: str, scalar_fn_name: str, string_only: bool):
     """One-argument hash: an Arrow-batched pandas UDF over the scalar
     port in exact_hash.py, dispatched on the argument's Spark type as
     the CH-SQL path (dialect/hash_sql.py) dispatches on its CH type.
     A String hashes its UTF-8 bytes; an integer hashes as intHash64 of
-    its value (FunctionNeighbourhoodHash64), or as its decimal text for
-    the String-only functions.  The value travels as text, so a 64-bit
-    integer keeps every bit even with NULLs in the column."""
+    its value (FunctionNeighbourhoodHash64) unless the function takes
+    String only, as sipHash64 and URLHash do.  Any other type raises a
+    ValueError naming the function and the type when the query runs.
+    The value travels as text, so a 64-bit integer keeps every bit even
+    with NULLs in the column."""
     from pyspark.sql.functions import pandas_udf
     from pyspark.sql.types import LongType
 
@@ -74,15 +76,12 @@ def _exact_hash64(name: str, scalar_fn_name: str, ints_as_text: bool):
         fn = getattr(xh, scalar_fn_name)
 
         def one(v: str, t: str) -> int:
-            if t == "string" or (ints_as_text and t in _INT_TYPES):
+            if t == "string":
                 h = fn(v.encode())
-            elif t in _INT_TYPES:
+            elif t in _INT_TYPES and not string_only:
                 h = xh.int_hash_64(int(v))
             else:
-                raise TypeError(
-                    f"{name}: no bit-exact DataFrame path for type {t}; "
-                    "run it through ChEngine"
-                )
+                raise ValueError(f"{name}: no bit-exact path for type {t}")
             return h - (1 << 64) if h >= (1 << 63) else h
 
         @pandas_udf(LongType())
@@ -108,11 +107,11 @@ def _exact_hash64(name: str, scalar_fn_name: str, ints_as_text: bool):
     return wrapper
 
 
-sipHash64 = _exact_hash64("sipHash64", "sip_hash_64", ints_as_text=True)
-cityHash64 = _exact_hash64("cityHash64", "city_hash_64", ints_as_text=False)
-farmHash64 = _exact_hash64("farmHash64", "farm_hash_64", ints_as_text=False)
-metroHash64 = _exact_hash64("metroHash64", "metro_hash_64_1", ints_as_text=False)
-URLHash = _exact_hash64("URLHash", "url_hash", ints_as_text=True)
+sipHash64 = _exact_hash64("sipHash64", "sip_hash_64", string_only=True)
+cityHash64 = _exact_hash64("cityHash64", "city_hash_64", string_only=False)
+farmHash64 = _exact_hash64("farmHash64", "farm_hash_64", string_only=False)
+metroHash64 = _exact_hash64("metroHash64", "metro_hash_64_1", string_only=False)
+URLHash = _exact_hash64("URLHash", "url_hash", string_only=True)
 
 
 def _chain(x: Column, *steps) -> Column:

@@ -83,9 +83,6 @@ def get_session(
         # Shuffle width ~= cores locally; AQE coalesces down at runtime,
         # so on a real cluster this is a ceiling, not a fixed cost.
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
         # Arrow for every pandas_udf / toPandas boundary.
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # Oracle comparisons (DuckDB) are UTC-naive; pin the session TZ.

@@ -39,6 +39,7 @@ _EXPRS = [
     for c in ("i", "s", "a", "u", "d", "t")
 ] + [
     "cityHash64(i, a, u, d, t)",
+    "cityHash64(s, a)", "farmHash64(s, a)", "metroHash64(s, a)",
     "sipHash64(s)", "halfMD5(s)", "URLHash(s)",
 ] + [
     f"{fn}({c})" for fn in ("intHash32", "intHash64") for c in ("i", "u", "d", "t")
@@ -102,15 +103,32 @@ def test_exact_hash_values(eng):
     for from_ in _SOURCES.values():
         r = eng.sql(f"SELECT cityHash64(i) FROM {from_} WHERE i = 1").collect()
         assert int(r[0][0]) == 10577349846663553072
+    # a String before an array: Hash128to64 over the string's Hash64,
+    # IntHash64(len) and each element's IntHash64, from the scalar ports
+    from clickhouse_is_a_free_analytics_dbms_for_big_data__spark.functions import (
+        exact_hash as xh,
+    )
+
+    ports = {"cityHash64": xh.city_hash_64, "farmHash64": xh.farm_hash_64,
+             "metroHash64": xh.metro_hash_64_1}
+    for fn, hash64 in ports.items():
+        want = []
+        for _i, s, a, *_ in sorted(_ROWS):
+            h = xh.hash128to64(hash64(s.encode()), xh.int_hash_64(len(a)))
+            for e in a:
+                h = xh.hash128to64(h, xh.int_hash_64(e))
+            want.append(h)
+        got = eng.sql(f"SELECT {fn}(s, a) FROM ct_src ORDER BY i").collect()
+        assert [int(r[0]) for r in got] == want, fn
 
 
 # DataFrame helper vs the CH-SQL lowering of the same function, over
 # the Int64 column i and the String column s of the registered view
 _HELPER_CASES = [
     (fn, c)
-    for fn in ("cityHash64", "farmHash64", "metroHash64", "sipHash64")
+    for fn in ("cityHash64", "farmHash64", "metroHash64")
     for c in ("i", "s")
-] + [("URLHash", "s"), ("intHash64", "i"), ("intHash32", "i")]
+] + [("sipHash64", "s"), ("URLHash", "s"), ("intHash64", "i"), ("intHash32", "i")]
 
 
 @pytest.mark.parametrize("fn,c", _HELPER_CASES)
@@ -126,13 +144,19 @@ def test_dataframe_hash_helpers_match_ch_sql(eng, spark, fn, c):
     assert got == want
 
 
-def test_dataframe_hash_helpers_raise_without_exact_path(spark):
+def test_dataframe_hash_helpers_raise_without_exact_path(eng, spark):
     from clickhouse_is_a_free_analytics_dbms_for_big_data__spark.functions import (
         hashing,
     )
 
     with pytest.raises(ValueError, match="cityHash64.*one argument"):
         hashing.cityHash64("i", "s")
+    # sipHash64 and URLHash take String only: the UDF raises a
+    # ValueError naming the function and the type when the query runs
+    df = spark.table("cv_src")
+    for fn in ("sipHash64", "URLHash"):
+        with pytest.raises(Exception, match=f"ValueError: {fn}: .*bigint"):
+            df.select(getattr(hashing, fn)("i")).collect()
 
 
 def test_untyped_hash_argument_raises(eng, spark):
@@ -144,6 +168,10 @@ def test_untyped_hash_argument_raises(eng, spark):
         eng.translate("SELECT cityHash64(m) FROM cv_dec")
     with pytest.raises(ValueError, match="intHash64.*String"):
         eng.translate("SELECT intHash64(s) FROM cv_src")
+    # String-only in the reference (FunctionStringHash64, URLHash)
+    for fn in ("sipHash64", "URLHash"):
+        with pytest.raises(ValueError, match=f"{fn}.*Int64"):
+            eng.translate(f"SELECT {fn}(i) FROM cv_src")
 
 
 def test_type_names_agree(eng, spark):
@@ -165,6 +193,108 @@ def test_type_names_agree(eng, spark):
         "SELECT " + ", ".join(f"toTypeName({c})" for c in cols) + " FROM cv_names"
     ).collect()[0])
     assert described == header == named == want
+
+
+# Date/DateTime arithmetic and the array overloads, typed from the one
+# lookup: (toTypeName, value per row in ORDER BY i).  The i = -5 row
+# holds the epoch: Date is UInt16 days and DateTime UInt32 seconds, so
+# a shift below it wraps.
+_D, _T = dt.date, dt.datetime
+_TYPED_CASES = {
+    "t + 60": ("DateTime", [_T(1970, 1, 1, 0, 1), _T(2024, 1, 2, 3, 5, 5),
+                            _T(2038, 1, 19, 3, 15, 8)]),
+    "t - 60": ("DateTime", [_T(2106, 2, 7, 6, 27, 16), _T(2024, 1, 2, 3, 3, 5),
+                            _T(2038, 1, 19, 3, 13, 8)]),
+    "60 + t": ("DateTime", [_T(1970, 1, 1, 0, 1), _T(2024, 1, 2, 3, 5, 5),
+                            _T(2038, 1, 19, 3, 15, 8)]),
+    "d + 1": ("Date", [_D(1970, 1, 2), _D(2024, 1, 3), _D(2106, 1, 1)]),
+    "1 + d": ("Date", [_D(1970, 1, 2), _D(2024, 1, 3), _D(2106, 1, 1)]),
+    "d - 1": ("Date", [_D(2149, 6, 6), _D(2024, 1, 1), _D(2105, 12, 30)]),
+    "d - toDate('2024-01-01')": ("Int32", [-19723, 1, 29949]),
+    "toDate('2024-01-05') - d": ("Int32", [19727, 3, -29945]),
+    "t - toDateTime('2024-01-01 00:00:00')": ("Int32", [-1704067200, 97445, 443416448]),
+    "toDateTime('2024-01-02 03:04:05') - t": ("Int32", [1704164645, 0, -443319003]),
+    "nullIf(d, toDate('1970-01-01')) + 1": (
+        "Nullable(Date)", [None, _D(2024, 1, 3), _D(2106, 1, 1)]),
+    "length(a)": ("UInt64", [0, 2, 3]),
+    "empty(a)": ("UInt8", [1, 0, 0]),
+    "a IN (2, 7)": ("UInt8", [0, 1, 1]),
+}
+_PY_TYPES = {"Date": dt.date, "DateTime": dt.datetime, "Int32": int, "UInt64": int,
+             "UInt8": bool}
+
+
+@pytest.mark.parametrize("src", list(_SOURCES))
+@pytest.mark.parametrize("expr", list(_TYPED_CASES))
+def test_date_and_array_operands_typed(eng, expr, src):
+    ch_type, want = _TYPED_CASES[expr]
+    rows = eng.sql(
+        f"SELECT {expr} AS x, toTypeName({expr}) AS tn FROM {_SOURCES[src]} ORDER BY i"
+    ).collect()
+    assert [r.x for r in rows] == want
+    assert {r.tn for r in rows} == {ch_type}
+    py = _PY_TYPES[ch_type.removeprefix("Nullable(").rstrip(")")]
+    assert all(type(r.x) is py for r in rows if r.x is not None)
+
+
+# every function the translator once classified by name (the retired
+# date/datetime/array name sets), with typed arguments: the type lookup
+# gives each the same kind
+_KINDS = {
+    "Date": [
+        "toDate(s)", "today()", "yesterday()", "toMonday(d)", "toStartOfMonth(d)",
+        "toStartOfQuarter(d)", "toStartOfYear(d)", "addDays(d, 1)",
+        "subtractDays(d, 1)", "least(d, d)", "materialize(d)",
+    ],
+    "DateTime": [
+        "toDateTime(s)", "now()", "toStartOfMinute(t)", "toStartOfFiveMinute(t)",
+        "toStartOfHour(t)", "toStartOfDay(t)", "timeSlot(t)", "toTime(t)",
+        "greatest(t, t)",
+    ],
+    "Array": [
+        "[1, 2]", "array(1, 2)", "range(3)", "splitByChar(',', s)",
+        "splitByString(',', s)", "alphaTokens(s)", "extractAll(s, 'a')",
+        "arrayMap(x -> x + 1, a)", "arrayFilter(x -> x > 1, a)", "arraySort(a)",
+        "arrayReverseSort(a)", "arrayConcat(a, a)", "arraySlice(a, 1, 2)",
+        "arrayDistinct(a)", "arrayEnumerate(a)", "arrayEnumerateUniq(a)",
+        "arrayPushBack(a, 1)", "arrayPushFront(a, 1)", "arrayResize(a, 3)",
+        "arrayReverse(a)", "groupArray(i)", "groupUniqArray(i)",
+        "groupArrayIf(i, i > 0)", "groupUniqArrayIf(i, i > 0)",
+        "groupArrayMerge(gs)", "groupUniqArrayMerge(us)", "topK(i)",
+        "bitmaskToArray(i)", "arrayReduce('groupArray', a)",
+        "arrayReduce('groupUniqArray', a)", "materialize(a)",
+    ] + [
+        f"emptyArray{t}()"
+        for t in ("UInt8", "UInt16", "UInt32", "UInt64", "Int8", "Int16", "Int32",
+                  "Int64", "Float32", "Float64", "Date", "DateTime", "String")
+    ],
+}
+
+
+def test_retired_name_sets_type_to_the_same_kind():
+    from clickhouse_is_a_free_analytics_dbms_for_big_data__spark.dialect.lexer import (
+        tokenize,
+    )
+    from clickhouse_is_a_free_analytics_dbms_for_big_data__spark.dialect.translate import (
+        Ctx,
+        _infer_expr_ch_type,
+    )
+
+    ctx = Ctx()
+    ctx.from_types = {
+        "i": "Int64", "s": "String", "a": "Array(Int64)", "d": "Date",
+        "t": "DateTime", "gs": "AggregateFunction(groupArray, Int64)",
+        "us": "AggregateFunction(groupUniqArray, String)",
+    }
+    got = {
+        e: (_infer_expr_ch_type(tokenize(e), ctx) or "")
+        for exprs in _KINDS.values() for e in exprs
+    }
+    wrong = {
+        e: t for kind, exprs in _KINDS.items() for e in exprs
+        if not (got[e] == kind or kind == "Array" and got[e].startswith("Array("))
+    }
+    assert not wrong
 
 
 # ANY keeps one right row per key — the smallest over its columns here,

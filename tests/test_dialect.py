@@ -459,12 +459,17 @@ def test_exec_summap_repeated_keys(eng, spark):
 
 
 def test_date_arith_translation():
-    # Date ± N days, DateTime ± N seconds, Date - Date → days
-    # (FunctionsDateTime type dispatch; approximated syntactically)
+    # Date ± N days, DateTime ± N seconds (wrapping in the UInt16 /
+    # UInt32 range), Date - Date → days (FunctionsArithmetic dispatch
+    # on the operands' CH types)
     out = translate_sql("SELECT toDate('2024-02-28') + 2")
-    assert "date_add(CAST('2024-02-28' AS DATE), CAST(2 AS INT))" in out
+    assert (
+        "pmod(datediff(CAST('2024-02-28' AS DATE), DATE '1970-01-01') + (2), 65536)"
+        in out
+    )
     out = translate_sql("SELECT toDateTime('1970-01-02 00:00:00') - 1")
-    assert "timestampadd(SECOND, -(1)" in out
+    assert "timestamp_seconds(pmod(unix_timestamp(" in out
+    assert " - (1), 4294967296)" in out
     out = translate_sql("SELECT toDate('2024-03-01') - toDate('2024-02-01')")
     assert "datediff(" in out
     # plain numeric arithmetic untouched
@@ -473,7 +478,7 @@ def test_date_arith_translation():
     # a tighter-binding multiplicative run on the seconds side folds
     # as one unit (now() - 24*60*60, golden 00069)
     out = translate_sql("SELECT toDateTime(x) + 3600 * 24 FROM t")
-    assert "timestampadd" in out and "(3600 * 24)" in out
+    assert "timestamp_seconds" in out and "(3600 * 24)" in out
 
 
 def test_exec_date_arith(eng):
