@@ -2035,9 +2035,10 @@ PARAMETRIC: dict[str, Callable[[Args, Args], str]] = {
     "groupArray": lambda p, a: f"slice(collect_list({a[0]}), 1, {p[0]})",
     "topK": lambda p, a: (
         f"slice(transform(array_sort(transform(map_entries("
-        f"aggregate(collect_list({a[0]}), map(), (m, x) -> map_concat(map_filter(m, (k, v) -> k != x), "
+        f"aggregate(collect_list({a[0]}), map_from_arrays(slice(collect_list({a[0]}), 1, 0), "
+        f"slice(array(0), 1, 0)), (m, x) -> map_concat(map_filter(m, (k, v) -> k != x), "
         f"map(x, coalesce(element_at(m, x), 0) + 1)))), e -> struct(- e.value AS n, e.key AS k))), "
-        f"s -> s.k), 1, {p[0]})"
+        f"s -> s.k), 1, {p[0] if p else 10})"  # topK(x) keeps 10
     ),
 }
 

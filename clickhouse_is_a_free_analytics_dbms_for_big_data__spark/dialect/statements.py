@@ -34,7 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..sources.formats import ch_type_of_spark
 from .lexer import Token, tokenize
-from .translate import TableMeta, _match_paren, _split_top
+from .translate import TableMeta, _elem_of, _match_paren, _split_top
 
 __all__ = ["execute_statement", "TableDef"]
 
@@ -395,13 +395,11 @@ _CH_FN_TYPES = {
     "hex": "String", "unhex": "String",
 }
 
-# functions returning their first non-lambda argument's type: the array
-# transforms keep the array type (FunctionsArray.h), addDays/subtractDays
-# the Date or DateTime they shift
-_CH_FN_ARG_TYPE = {
+# array transforms returning their first non-lambda argument's array
+# type (FunctionsArray.h)
+_CH_ARRAY_KEEP = {
     "arraydistinct", "arrayreverse", "arraysort", "arrayreversesort",
-    "arrayslice", "arrayconcat", "arraypushback", "arraypushfront",
-    "arrayresize", "arrayfilter", "adddays", "subtractdays",
+    "arrayslice", "arrayfilter",
 }
 
 _AGG_FNS = {
@@ -432,27 +430,28 @@ def _agg_type(name: str, ats: list[str | None]) -> str | None:
     fn, comb = _agg_split(name.lower())
     inner = name[: len(name) - len(comb)]
     if fn not in _AGG_FNS:
-        return None
+        # groupArrayInsertAt, groupArrayMovingSum, groupArraySample ...
+        return "Array(?)" if fn.startswith(("grouparray", "groupuniqarray")) else None
     if comb == "if":
         return _agg_type(inner, ats[:-1])
     if comb == "state":
-        if not ats or None in ats:
+        if not ats or any(t is None or "?" in t for t in ats):
             return None
         return f"AggregateFunction({inner}, {', '.join(ats)})"
     if comb == "merge":
         st = _strip_nullable(ats[0]) if len(ats) == 1 else None
         if not st or not st.startswith("AggregateFunction("):
-            return None
+            return _agg_type(inner, [None])
         parts = _split_top(tokenize(st)[2:-1], ",")[1:]
         return _agg_type(inner, [_render_type(p) for p in parts])
     if fn in ("count", "uniq", "uniqexact", "uniqhll12", "uniqcombined"):
         return "UInt64"
-    if not ats or ats[0] is None:
-        return None
-    at = ats[0]
-    base = _strip_nullable(at)
+    at = ats[0] if ats else None
     if fn in ("grouparray", "groupuniqarray", "topk"):
-        return f"Array({base})"
+        return f"Array({_strip_nullable(at) if at else '?'})"
+    if at is None:
+        return None
+    base = _strip_nullable(at)
     if fn == "avg":
         res = "Float64"
     elif fn in ("sum", "sumwithoverflow"):
@@ -499,12 +498,19 @@ def _binop_type(op: str, lt: str | None, rt: str | None) -> str | None:
     return None
 
 
-def _infer_ch_type(
-    toks: list[Token], cols: dict[str, str]
-) -> str | None:
+def _infer_ch_type(toks: list[Token], cols: dict[str, str]) -> str | None:
     """CH type of a default-clause expression; ``cols`` maps previously
     declared column names to their CH types.  None = not inferable
     (the caller then reports the honest unsupported-type error)."""
+    t = _infer_type(toks, cols)
+    return None if t is None or "?" in t else t
+
+
+def _infer_type(toks: list[Token], cols: dict[str, str]) -> str | None:
+    """_infer_ch_type's recursion, which also keeps a partial type:
+    ``?`` stands for an element type that is not inferable, so
+    ``groupArray(f(x))`` over an untyped ``f`` is ``Array(?)`` — known
+    to be an array, of unknown elements."""
     toks = list(toks)
     # trailing `AS alias` is type-transparent
     if len(toks) >= 2 and toks[-2].is_kw("AS") and toks[-1].kind in ("ident", "qident"):
@@ -517,7 +523,7 @@ def _infer_ch_type(
         inner_parts = _split_top(toks[1:-1], ",")
         if len(inner_parts) > 1:
             # tuple literal (a, b, ...) — DataTypeTuple
-            ts = [_infer_ch_type(p, cols) for p in inner_parts]
+            ts = [_infer_type(p, cols) for p in inner_parts]
             if all(t is not None for t in ts):
                 return f"Tuple({', '.join(ts)})"
             return None
@@ -542,10 +548,7 @@ def _infer_ch_type(
                         toks[j - 1].kind in ("ident", "qident")
                         or toks[j - 1].text in (")", "]")
                     ):
-                        base_t = _infer_ch_type(toks[:j], cols)
-                        if base_t and base_t.startswith("Array(") and base_t.endswith(")"):
-                            return base_t[len("Array(") : -1]
-                        return None
+                        return _elem_of(_infer_type(toks[:j], cols))
                     break
     # ternary `c ? a : b` binds loosest: result is the arms' supertype
     # (FunctionsConditional.cpp getReturnType), Null arm → Nullable
@@ -561,8 +564,8 @@ def _infer_ch_type(
         elif depth == 0 and t.text == ":" and q_pos is not None:
             c_pos = j
     if q_pos is not None and c_pos is not None:
-        at = _infer_ch_type(toks[q_pos + 1 : c_pos], cols)
-        bt = _infer_ch_type(toks[c_pos + 1 :], cols)
+        at = _infer_type(toks[q_pos + 1 : c_pos], cols)
+        bt = _infer_type(toks[c_pos + 1 :], cols)
         return _ch_supertype([at, bt])
     # comparisons/logicals/memberships are UInt8 regardless of the
     # operand types (FunctionsComparison/Logical return UInt8; a Null
@@ -583,8 +586,8 @@ def _infer_ch_type(
         ):
             if t.text.upper() == "IS":
                 return "UInt8"
-            lt = _infer_ch_type(toks[:j], cols)
-            rt = _infer_ch_type(toks[j + 1 :], cols)
+            lt = _infer_type(toks[:j], cols)
+            rt = _infer_type(toks[j + 1 :], cols)
             if "Null" in (lt, rt):
                 return "Null"
             if (lt or "").startswith("Nullable(") or (rt or "").startswith(
@@ -605,8 +608,8 @@ def _infer_ch_type(
             elif depth == 0 and (
                 t.text in ops or (t.kind == "ident" and t.text.upper() in ops)
             ):
-                lt = _infer_ch_type(toks[:j], cols)
-                rt = _infer_ch_type(toks[j + 1 :], cols)
+                lt = _infer_type(toks[:j], cols)
+                rt = _infer_type(toks[j + 1 :], cols)
                 # Nullable propagation (FunctionsArithmetic.h wraps
                 # the result when any argument is Nullable; Null
                 # absorbs — DataTypeNull)
@@ -658,8 +661,8 @@ def _infer_ch_type(
             if len(args) == 2:
                 return _binop_type(
                     "INTDIV",
-                    _infer_ch_type(args[0], cols),
-                    _infer_ch_type(args[1], cols),
+                    _infer_type(args[0], cols),
+                    _infer_type(args[1], cols),
                 )
         if fname == "cast":
             args = _split_top(toks[2:-1], ",")
@@ -682,48 +685,52 @@ def _infer_ch_type(
                     ]
                     bound = dict(cols)
                     for p, arr in zip(params, args[1:]):
-                        at = _infer_ch_type(arr, cols)
-                        if at and at.startswith("Array(") and at.endswith(")"):
-                            bound[p] = at[len("Array(") : -1]
-                    inner = _infer_ch_type(body[j + 1 :], bound)
-                    return f"Array({inner})" if inner else None
+                        bound[p] = _elem_of(_infer_type(arr, cols)) or "?"
+                    inner = _infer_type(body[j + 1 :], bound)
+                    return f"Array({inner or '?'})"
         if fname == "range":
             # Array of the ARGUMENT's type (FunctionRange::
             # getReturnTypeImpl clones the arg type, so range(100) is
             # Array(UInt8) — the literal types as UInt8)
-            at = _infer_ch_type(_split_top(toks[2:-1], ",")[0], cols)
+            at = _infer_type(_split_top(toks[2:-1], ",")[0], cols)
             return f"Array({at})" if at else "Array(UInt64)"
         if fname in ("negate",):
-            inner = _infer_ch_type(
+            inner = _infer_type(
                 _split_top(toks[2:-1], ",")[0], cols
             )
             if inner in _CH_NUM_BITS:
                 b, _ = _CH_NUM_BITS[inner]
                 return _ch_num(b * 2, True)
         if fname == "arrayjoin":
-            inner = _infer_ch_type(_split_top(toks[2:-1], ",")[0], cols)
-            if inner is not None and inner.startswith("Array(") and inner.endswith(")"):
-                return inner[len("Array(") : -1]
-            return None
+            return _elem_of(_infer_type(_split_top(toks[2:-1], ",")[0], cols))
         if fname == "array":
             return _array_type(toks[2:-1], cols)
-        if fname in _CH_FN_ARG_TYPE:
-            for a in _split_top(toks[2:-1], ","):
-                if not any(t.text == "->" for t in a):
-                    return _infer_ch_type(a, cols)
-            return None
+        if fname in _CH_ARRAY_KEEP:
+            args = _split_top(toks[2:-1], ",")
+            if args and any(t.text == "->" for t in args[0]):
+                args = args[1:]
+            at = _infer_type(args[0], cols) if args else None
+            return at if _elem_of(at) else "Array(?)"
+        if fname in ("arrayconcat", "arraypushback", "arraypushfront", "arrayresize"):
+            # Array of the least supertype of the arrays' elements and the
+            # pushed value or resize fill (FunctionArrayConcat/Push/Resize)
+            ats = [_infer_type(a, cols) for a in _split_top(toks[2:-1], ",")]
+            elems = [_elem_of(t) for t in ats]
+            if fname != "arrayconcat":  # the array, then the value or fill
+                elems = elems[:1] + ats[2 if fname == "arrayresize" else 1 :][:1]
+            return f"Array({_ch_supertype(elems) or '?'})"
+        if fname in ("adddays", "subtractdays"):  # the Date/DateTime shifted
+            return _infer_type(_split_top(toks[2:-1], ",")[0], cols)
         if fname == "bitmasktoarray":
-            at = _infer_ch_type(toks[2:-1], cols)
-            return f"Array({at})" if at else None
+            at = _infer_type(toks[2:-1], cols)
+            return f"Array({at or '?'})"
         if fname == "arrayreduce":
             # the named aggregate over the arrays' element types
             args = _split_top(toks[2:-1], ",")
-            ats = [_infer_ch_type(a, cols) for a in args[1:]]
-            if args[0][:1] and args[0][0].kind == "string" and all(
-                (t or "").startswith("Array(") for t in ats
-            ):
+            if args[0][:1] and args[0][0].kind == "string":
                 return _agg_type(
-                    args[0][0].text.strip("'"), [t[6:-1] for t in ats]
+                    args[0][0].text.strip("'"),
+                    [_elem_of(_infer_type(a, cols)) for a in args[1:]],
                 )
             return None
         close = _find_close(toks, 1)
@@ -732,22 +739,22 @@ def _infer_ch_type(
             # parametric aggregate: topK(10)(x)
             arg_toks, close = toks[close + 2 : -1], _find_close(toks, close + 1)
         if close == len(toks) - 1 and _agg_split(fname)[0] in _AGG_FNS:
-            ats = [_infer_ch_type(a, cols) for a in _split_top(arg_toks, ",")]
+            ats = [_infer_type(a, cols) for a in _split_top(arg_toks, ",")]
             return _agg_type(t0.text, ats)
         # Nullable family (FunctionsNull.cpp / DataTypeNullable):
         if fname in ("materialize", "identity"):
-            return _infer_ch_type(_split_top(toks[2:-1], ",")[0], cols)
+            return _infer_type(_split_top(toks[2:-1], ",")[0], cols)
         if fname == "tonullable":
             return _wrap_nullable(
-                _infer_ch_type(_split_top(toks[2:-1], ",")[0], cols)
+                _infer_type(_split_top(toks[2:-1], ",")[0], cols)
             )
         if fname == "assumenotnull":
             return _strip_nullable(
-                _infer_ch_type(_split_top(toks[2:-1], ",")[0], cols)
+                _infer_type(_split_top(toks[2:-1], ",")[0], cols)
             )
         if fname == "nullif":
             return _wrap_nullable(
-                _infer_ch_type(_split_top(toks[2:-1], ",")[0], cols)
+                _infer_type(_split_top(toks[2:-1], ",")[0], cols)
             )
         if fname in ("isnull", "isnotnull", "ignore"):
             # always plain UInt8, never Nullable (FunctionIgnore)
@@ -759,7 +766,7 @@ def _infer_ch_type(
             args = _split_top(toks[2:-1], ",")
             out: str | None = None
             for a in reversed(args):
-                at = _infer_ch_type(a, cols)
+                at = _infer_type(a, cols)
                 if at is None:
                     return None
                 if at == "Null":
@@ -788,7 +795,7 @@ def _infer_ch_type(
             args = _split_top(toks[2:-1], ",")
             if len(args) == 2 and len(args[1]) == 1:
                 fs = f"FixedString({args[1][0].text})"
-                at = _infer_ch_type(args[0], cols)
+                at = _infer_type(args[0], cols)
                 if at is not None and (
                     at == "Null" or at.startswith("Nullable(")
                 ):
@@ -798,14 +805,14 @@ def _infer_ch_type(
                      "roundtoexp2", "abs"):
             # rounding keeps the argument's type (FunctionsRound.cpp)
             args = _split_top(toks[2:-1], ",")
-            return _infer_ch_type(args[0], cols) if args else None
+            return _infer_type(args[0], cols) if args else None
         if fname in ("least", "greatest"):
             # NumberTraits::ResultOfLeast/Greatest — the common
             # supertype, EXCEPT same-depth 64-bit ints of different
             # signs (CLICKHOUSE-29 special case, NumberTraits.h:355):
             # least → Int64, greatest → UInt64
             args = _split_top(toks[2:-1], ",")
-            ats = [_infer_ch_type(a, cols) for a in args]
+            ats = [_infer_type(a, cols) for a in args]
             if len(ats) == 2 and set(ats) == {"Int64", "UInt64"}:
                 return "Int64" if fname == "least" else "UInt64"
             return _ch_supertype(ats)
@@ -814,7 +821,7 @@ def _infer_ch_type(
             # ordinary functions wrap Nullable when any argument is
             # Nullable (IFunction default null behavior)
             for a in _split_top(toks[2:-1], ","):
-                at = _infer_ch_type(a, cols)
+                at = _infer_type(a, cols)
                 if at is not None and (
                     at == "Null" or at.startswith("Nullable(")
                 ):
@@ -831,6 +838,8 @@ def _ch_supertype(types: list[str | None]) -> str | None:
         return None
     # Nothing (an empty array's element) yields to any type
     ts = [t for t in types if t != "Nothing"] or list(types)
+    if "?" in ts:
+        return "?"  # an unknown element keeps the result unknown
     # Null / Nullable(T) lift (getLeastCommonType over DataTypeNull):
     # supertype(T, Null) = Nullable(T); all-Null = Null
     if any(t == "Null" or t.startswith("Nullable(") for t in ts):
@@ -865,9 +874,9 @@ def _array_type(elems: list[Token], cols: dict[str, str]) -> str | None:
     Array of the elements' least supertype; ``[]`` is Array(Nothing)
     (DataTypeNothing)."""
     sup = "Nothing" if not elems else _ch_supertype(
-        [_infer_ch_type(e, cols) for e in _split_top(elems, ",")]
+        [_infer_type(e, cols) for e in _split_top(elems, ",")]
     )
-    return f"Array({sup})" if sup else None
+    return f"Array({sup or '?'})"
 
 
 def _find_close(toks: list[Token], i: int) -> int:

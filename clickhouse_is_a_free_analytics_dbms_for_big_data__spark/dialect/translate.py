@@ -1201,13 +1201,11 @@ def _translate_select_inner(tokens: list[Token], ctx: Ctx) -> str:
             # posexplode_outer yields NULL; reroute references through
             # an ifnull when the element type is statically known
             _ft, _fal = _strip_alias(first_toks)
-            _at = _base_type(_ft, ctx)
-            if _at.startswith("Array("):
-                _d = _elem_default_sql(_at[6:-1], exprs[0][1])
-                if _d is not None:
-                    hidden = ctx.gensym("ajval")
-                    aj_subs[exprs[0][0]] = f"ifnull({hidden}, {_d})"
-                    val_alias = hidden
+            _d = _elem_default_sql(_elem_of(_base_type(_ft, ctx)), exprs[0][1])
+            if _d is not None:
+                hidden = ctx.gensym("ajval")
+                aj_subs[exprs[0][0]] = f"ifnull({hidden}, {_d})"
+                val_alias = hidden
         lateral = f" LATERAL VIEW {fn}({exprs[0][1]}) {ctx.gensym('ajv')} AS {pos_alias}, {val_alias}"
         for alias, expr_sql, _explicit in exprs[1:]:
             aj_subs[alias] = f"element_at({expr_sql}, {pos_alias} + 1)"
@@ -3822,7 +3820,18 @@ def _infer_expr_ch_type(toks: list[Token], ctx: Ctx) -> str | None:
     back to their original CH tokens and column refs through the
     SELECT's type lookup (_from_types).  None = not statically
     inferable (callers fall back to runtime behavior)."""
-    from .statements import _infer_ch_type
+    t = _expr_type(toks, ctx)
+    return None if t is None or "?" in t else t
+
+
+def _is_array(toks: list[Token], ctx: Ctx) -> bool:
+    """Whether an expression is an Array, of known elements or not."""
+    return (_expr_type(toks, ctx) or "").startswith("Array(")
+
+
+def _expr_type(toks: list[Token], ctx: Ctx) -> str | None:
+    """_infer_expr_ch_type with partial types kept (statements._infer_type)."""
+    from .statements import _infer_type
 
     cols = _from_types(ctx)
     if ctx.lambda_types:
@@ -3837,7 +3846,7 @@ def _infer_expr_ch_type(toks: list[Token], ctx: Ctx) -> str | None:
     ):
         return cols[toks[0].ch_name]
     toks = _expand_alias_toks(toks, ctx, skip=cols)
-    return _infer_ch_type(toks, cols)
+    return _infer_type(toks, cols)
 
 
 def _expand_alias_toks(
@@ -3914,6 +3923,13 @@ def _base_type(toks: list[Token], ctx: Ctx) -> str:
     statically inferable."""
     t = _infer_expr_ch_type(toks, ctx) or "" if toks else ""
     return t[9:-1] if t.startswith("Nullable(") else t
+
+
+def _elem_of(t: str | None) -> str | None:
+    """Element type of an Array type; None for any other type."""
+    if t and t.startswith("Array(") and t.endswith(")"):
+        return t[len("Array(") : -1]
+    return None
 
 
 def _splice(
@@ -4281,9 +4297,9 @@ def _fold_array_in(
             j += 1
             continue
         rhs = pieces[j + 1]
-        if not rhs.lstrip().startswith("(") or not _base_type(
+        if not rhs.lstrip().startswith("(") or not _is_array(
             tok_slices[li], ctx
-        ).startswith("Array("):
+        ):
             j += 1
             continue
         if re.match(r"\(\s*SELECT", rhs, re.I):
@@ -5054,9 +5070,8 @@ def _rw_item(
                     if p.kind in ("ident", "qident")
                 ]
                 for p, arr in zip(params, arg_items[1:]):
-                    at = _infer_expr_ch_type(arr, ctx) or ""
-                    if at.startswith("Array(") and at.endswith(")"):
-                        ctx.lambda_types[p] = at[len("Array(") : -1]
+                    if et := _elem_of(_infer_expr_ch_type(arr, ctx)):
+                        ctx.lambda_types[p] = et
         try:
             args = [_rewrite(p, ctx) for p in arg_items]
         finally:
@@ -5469,7 +5484,7 @@ def _apply_fn(
     if (
         name in ("length", "empty", "notEmpty")
         and arg_items
-        and _base_type(arg_items[0], ctx).startswith("Array(")
+        and _is_array(arg_items[0], ctx)
     ):
         if name == "length":
             return f"size({args[0]})"
@@ -5706,24 +5721,17 @@ def _apply_fn(
     # emptyArrayToSingle: [] → [default] with the INFERRED element
     # default (typed tuples/Nullables included) when available
     if name == "emptyArrayToSingle" and arg_items and len(args) == 1:
-        at = _base_type(arg_items[0], ctx)
-        if at.startswith("Array("):
-            d = _elem_default_sql(at[6:-1], args[0])
-            if d is not None:
-                return (
-                    f"if(size({args[0]}) = 0, array({d}), {args[0]})"
-                )
+        d = _elem_default_sql(_elem_of(_base_type(arg_items[0], ctx)), args[0])
+        if d is not None:
+            return f"if(size({args[0]}) = 0, array({d}), {args[0]})"
     # arrayFirst with no match yields the element TYPE DEFAULT
     # (FunctionsHigherOrder.h ArrayFirstImpl pushes default), not NULL
     if name == "arrayFirst" and arg_items and len(args) == 2:
-        at = _base_type(arg_items[1], ctx)
-        if at.startswith("Array("):
-            arr_sql = args[1]
-            d = _elem_default_sql(at[6:-1], arr_sql)
-            if d is not None:
-                from .functions_map import TEMPLATES as _T
+        d = _elem_default_sql(_elem_of(_base_type(arg_items[1], ctx)), args[1])
+        if d is not None:
+            from .functions_map import TEMPLATES as _T
 
-                return f"coalesce({_T['arrayFirst'](args)}, {d})"
+            return f"coalesce({_T['arrayFirst'](args)}, {d})"
     if name == "has" and arg_items and len(args) == 2:
         at = _infer_expr_ch_type(arg_items[0], ctx) or ""
         _hcol = (
@@ -5772,9 +5780,7 @@ def _apply_fn(
     if name == "arrayElement" and arg_items and len(args) == 2:
         arr, idx = args
         at = _base_type(arg_items[0], ctx)
-        default = (
-            _elem_default_sql(at[6:-1], arr) if at.startswith("Array(") else None
-        )
+        default = _elem_default_sql(_elem_of(at), arr)
         got = (
             f"get({arr}, (CASE WHEN ({idx}) > 0 THEN ({idx}) - 1 "
             f"ELSE size({arr}) + ({idx}) END))"
@@ -5953,8 +5959,7 @@ def _apply_fn(
     if name in PARAMETRIC:  # parametric used without params, e.g. quantile(x)
         return PARAMETRIC[name]([], args)
     if name.endswith("Array") and arg_items:
-        _at = _infer_expr_ch_type(arg_items[0], ctx) or ""
-        elem = _at[len("Array(") : -1] if _at.startswith("Array(") else None
+        elem = _elem_of(_infer_expr_ch_type(arg_items[0], ctx))
         combo = array_combinator(name, args, elem)
         if combo is not None:
             return combo
@@ -5962,8 +5967,7 @@ def _apply_fn(
         # <agg>ArrayIf(arr, cond): rows failing cond contribute no
         # elements — collect_list skips the NULL stand-in
         # (combinator composition, AggregateFunctionFactory.cpp)
-        _at = _infer_expr_ch_type(arg_items[0], ctx) or ""
-        elem = _at[len("Array(") : -1] if _at.startswith("Array(") else None
+        elem = _elem_of(_infer_expr_ch_type(arg_items[0], ctx))
         gated = f"IF(CAST({args[-1]} AS BOOLEAN), {args[0]}, NULL)"
         combo = array_combinator(name[: -len("If")], [gated], elem)
         if combo is not None:
@@ -6091,12 +6095,12 @@ def _ch_text_sql(expr: str, ch_type: str) -> str | None:
     return None
 
 
-def _elem_default_sql(elem_type: str, base_sql: str) -> str | None:
+def _elem_default_sql(elem_type: str | None, base_sql: str) -> str | None:
     """Out-of-bounds arrayElement default for the element CH type
-    (FunctionsArray.cpp arrayElement fills the type default).  Nested
-    arrays build their empty value from the base via flatten (no
-    literal of unknown inner type needed)."""
-    t = elem_type.strip()
+    (FunctionsArray.cpp arrayElement fills the type default); None when
+    the type is unknown.  Nested arrays build their empty value from the
+    base via flatten (no literal of unknown inner type needed)."""
+    t = (elem_type or "").strip()
     if t.startswith("Nullable("):
         # default of Nullable is NULL (ColumnNullable default)
         return "NULL"
@@ -6179,9 +6183,7 @@ def _postfix(
             # else NULL (documented fallback divergence)
             default = None
             if base_toks is not None:
-                at = _base_type(base_toks, ctx)
-                if at.startswith("Array("):
-                    default = _elem_default_sql(at[6:-1], base)
+                default = _elem_default_sql(_elem_of(_base_type(base_toks, ctx)), base)
             got = (
                 f"get({base}, (CASE WHEN ({idx}) > 0 THEN ({idx}) - 1 "
                 f"ELSE size({base}) + ({idx}) END))"

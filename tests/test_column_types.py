@@ -278,6 +278,7 @@ def test_retired_name_sets_type_to_the_same_kind():
     from clickhouse_is_a_free_analytics_dbms_for_big_data__spark.dialect.translate import (
         Ctx,
         _infer_expr_ch_type,
+        _is_array,
     )
 
     ctx = Ctx()
@@ -295,6 +296,77 @@ def test_retired_name_sets_type_to_the_same_kind():
         if not (got[e] == kind or kind == "Array" and got[e].startswith("Array("))
     }
     assert not wrong
+    # the array names are arrays whatever their arguments: with an
+    # element the lookup cannot type (a function missing from it, or a
+    # column it does not hold) the type is Array(?), still an array
+    untyped = [
+        e for e in _UNTYPED_ARRAYS if not _is_array(tokenize(e), ctx)
+    ]
+    assert not untyped
+
+
+_G = "groupArray(domain(s))"
+_UNTYPED_ARRAYS = [
+    "[domain(s)]", "[domain(s), 1]", "array(domain(s))",
+    "arrayMap(x -> reverseUTF8(x), a)", f"arrayMap(x -> x, {_G})",
+    "arrayFilter(x -> 1, groupArray(extract(s, 'a')))", f"arraySort({_G})",
+    f"arrayReverseSort({_G})", f"arrayConcat({_G}, {_G})", f"arraySlice({_G}, 1, 2)",
+    f"arrayDistinct({_G})", f"arrayEnumerate({_G})", f"arrayEnumerateUniq({_G})",
+    f"arrayPushBack({_G}, domain(s))", f"arrayPushFront({_G}, domain(s))",
+    f"arrayResize({_G}, 3, domain(s))", f"arrayReverse({_G})", _G,
+    "groupUniqArray(domain(s))", "groupArrayIf(domain(s), i > 0)",
+    "groupUniqArrayIf(domain(s), i > 0)", "groupArrayMerge(nx)",
+    "groupUniqArrayMerge(nx)", "topK(extract(s, 'a'))", "topK(3)(extract(s, 'a'))",
+    "bitmaskToArray(nx)", f"arrayReduce('groupArray', {_G})",
+    f"arrayReduce('groupUniqArray', {_G})", f"arrayReduce('groupArrayInsertAt', {_G}, a)",
+    f"materialize({_G})", "arraySort(nx)", "arrayFilter(x -> 1, nx)",
+]
+
+
+# Array(least supertype) of the arrays' elements and the pushed or fill
+# value, as the reference's arrayConcat/arrayPush*/arrayResize type them
+_ARRAY_SUPERTYPES = {
+    "arrayConcat([1], [1000])": "Array(UInt16)",
+    "arrayConcat([], ['a'])": "Array(String)",
+    "arrayPushBack([1], 300)": "Array(UInt16)",
+    "arrayPushFront([1], -1)": "Array(Int16)",
+    "arrayPushBack([1], NULL)": "Array(Nullable(UInt8))",
+    "arrayResize([1], 3, 1000)": "Array(UInt16)",
+    "arrayResize([1], 3)": "Array(UInt8)",
+    "arraySlice([1, 1000], 1, 1)": "Array(UInt16)",
+}
+
+
+def test_array_function_supertypes():
+    from clickhouse_is_a_free_analytics_dbms_for_big_data__spark.dialect.lexer import (
+        tokenize,
+    )
+    from clickhouse_is_a_free_analytics_dbms_for_big_data__spark.dialect.translate import (
+        Ctx,
+        _infer_expr_ch_type,
+    )
+
+    got = {e: _infer_expr_ch_type(tokenize(e), Ctx()) for e in _ARRAY_SUPERTYPES}
+    assert got == _ARRAY_SUPERTYPES
+
+
+# the array overloads (length/empty/notEmpty, array IN) over arrays
+# whose element type the lookup cannot name: one aggregate per source
+_UNTYPED_ELEM_CASES = {
+    "length(groupArray(domain(s)))": 3,
+    "notEmpty(arrayMap(x -> reverseUTF8(x), groupArray(s)))": 1,
+    "empty(groupUniqArrayIf(domain(s), i > 100))": 1,
+    "arrayFilter(x -> 1, groupArray(extract(s, 'a'))) IN ('a')": 1,
+    "arrayFilter(x -> 1, groupArray(extract(s, 'a'))) IN ('b')": 0,
+    "length(topK(extract(s, 'a')))": 2,
+}
+
+
+@pytest.mark.parametrize("src", list(_SOURCES))
+@pytest.mark.parametrize("expr", list(_UNTYPED_ELEM_CASES))
+def test_untyped_element_arrays(eng, expr, src):
+    (got,) = eng.sql(f"SELECT {expr} FROM {_SOURCES[src]}").collect()[0]
+    assert got == _UNTYPED_ELEM_CASES[expr]
 
 
 # ANY keeps one right row per key — the smallest over its columns here,
